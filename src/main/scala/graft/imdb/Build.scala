@@ -23,7 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    principals to recover `characters`) are flattened by carrying
   *    the column through the first join — provably equivalent because
   *    participation rows are built 1:1 from principals rows
-  *    (database.py:765-811), and one fewer big shuffle each.
+  *    (database.py:765-811), and one fewer big shuffle each;
+  *  - the steps that run Spark jobs eagerly (surrogate ids, the
+  *    bad-JSON probe, [[validate]]'s checks) run concurrently where no
+  *    data dependency orders them, so the driver submits their jobs
+  *    together rather than one after another; Spark's task slots still
+  *    cap the concurrent tasks.
   */
 object Build {
 
@@ -49,32 +54,33 @@ object Build {
     *  - has-data: the key tables (database.py:635), `title_alias`
     *    (database.py:1063) and `participation_to_character`
     *    (database.py:811).
-    * Counts run over the persisted hub tables, so this costs a few
-    * cached scans, not a rebuild. Returns the warning lines (empty =
-    * healthy build); callers log them.
+    * Counts run over the persisted hub tables (or the written
+    * parquet), so this costs a few scans, not a rebuild. The eight
+    * checks run concurrently ([[Concurrent.all]]). Returns the warning
+    * lines in the fixed order above (empty = healthy build); callers
+    * log them.
     */
   def validate(datasets: Map[ImdbDataset, DataFrame],
       normalized: Normalized): Seq[String] = {
-    val warnings = Seq.newBuilder[String]
-
     def checkTableCount(source: DataFrame, sourceName: String,
-        targetName: String): Unit = {
+        targetName: String): () => Option[String] = () => {
       val target = normalized(targetName).count()
       val expected = source.count()
-      if (target != expected) warnings +=
+      Option.when(target != expected)(
         s"""target table "$targetName" has $target rows but should have """ +
-          s"""$expected same as source table "$sourceName""""
+          s"""$expected same as source table "$sourceName"""")
     }
-    def checkTableHasData(targetName: String): Unit =
-      if (normalized(targetName).isEmpty) warnings +=
-        s"""target table "$targetName" should contain rows but is empty"""
+    def checkTableHasData(targetName: String): () => Option[String] = () =>
+      Option.when(normalized(targetName).isEmpty)(
+        s"""target table "$targetName" should contain rows but is empty""")
 
-    checkTableCount(datasets(TitleBasics), "TitleBasics", "title")
-    checkTableCount(datasets(TitlePrincipals), "TitlePrincipals", "participation")
-    Seq("title_alias_type", "title_type", "genre", "profession",
-      "title_alias", "participation_to_character")
-      .foreach(checkTableHasData)
-    warnings.result()
+    // the checks run concurrently; the warnings keep this fixed order
+    Concurrent.all(Seq(
+      checkTableCount(datasets(TitleBasics), "TitleBasics", "title"),
+      checkTableCount(datasets(TitlePrincipals), "TitlePrincipals", "participation")) ++
+      Seq("title_alias_type", "title_type", "genre", "profession",
+        "title_alias", "participation_to_character").map(checkTableHasData)
+    ).flatten
   }
 
   /** @param cache persist the hub tables (name/title/alias/
@@ -83,18 +89,29 @@ object Build {
     *              and re-assigns surrogate ids from scratch. Left on
     *              for real builds; callers managing their own
     *              persistence (e.g. warehouse writes) may disable.
+    *
+    * The eager steps (every [[SurrogateIds.assign]] and the bad-JSON
+    * probe run Spark jobs) run concurrently ([[Concurrent.all]]); the
+    * returned tables are lazy. A derive that throws releases the hub
+    * cache and pins it made before rethrowing.
     */
   def apply(datasets: Map[ImdbDataset, DataFrame],
       cache: Boolean = true): Normalized = {
     val spark = datasets.head._2.sparkSession
     import spark.implicits._
 
-    val hubs = Seq.newBuilder[DataFrame]
+    val hubs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def hub(df: DataFrame): DataFrame =
       if (cache) {
-        hubs += df
+        hubs.add(df)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       } else df
+    def release(): Unit = {
+      hubs.forEach(df => { df.unpersist(); () })
+      // the stamped-frame pins behind every SurrogateIds.assign in
+      // this build, made on the step threads
+      SurrogateIds.releasePins(spark)
+    }
 
     val titleBasics = datasets(TitleBasics)
     val nameBasics = datasets(NameBasics)
@@ -106,16 +123,24 @@ object Build {
     def keyTable(values: DataFrame): DataFrame =
       SurrogateIds.assign(values.toDF("name"), "id", Seq(col("name")))
 
+    // The eager steps are lazy vals, forced together below. A step
+    // that reads another step's table waits for it (a local lazy val
+    // initializes under its own lock), so the key tables, name and
+    // the characters step start at once, title_type -> title runs as
+    // one chain, and title_alias and participation start once title,
+    // name and profession are ready. A step whose input threw runs
+    // that input again and throws the same way.
+
     // -- key tables (reference: database.py:593-667) ----------------
-    val titleAliasType = keyTable(AliasTypes.Vocabulary.toDF())
-    val titleType = keyTable(titleBasics.select($"titleType").distinct())
-    val genre = keyTable(
+    lazy val titleAliasType = keyTable(AliasTypes.Vocabulary.toDF())
+    lazy val titleType = keyTable(titleBasics.select($"titleType").distinct())
+    lazy val genre = keyTable(
       titleBasics.filter($"genres".isNotNull)
         .select(explode(split($"genres", ",")).as("name")).distinct())
-    val profession = keyTable(titlePrincipals.select($"category").distinct())
+    lazy val profession = keyTable(titlePrincipals.select($"category").distinct())
 
     // -- name (reference: database.py:817-842) ----------------------
-    val name = hub(SurrogateIds.assign(
+    lazy val name = hub(SurrogateIds.assign(
       nameBasics.select(
         $"nconst", $"primaryName".as("primary_name"),
         $"birthYear".as("birth_year"), $"deathYear".as("death_year"),
@@ -124,7 +149,7 @@ object Build {
 
     // -- title: J3 inner ⋈ broadcast(title_type), LEFT OUTER ratings
     //    with coalesce-to-0 (reference: database.py:876-923) ---------
-    val title = hub(SurrogateIds.assign(
+    lazy val title = hub(SurrogateIds.assign(
       titleBasics
         .join(broadcast(titleType.select($"id".as("title_type_id"), $"name")),
           $"name" === $"titleType")
@@ -144,7 +169,7 @@ object Build {
 
     // -- title_alias (J5, reference: database.py:1031-1063); `types`
     //    carried internally for the alias-type explode below ---------
-    val aliasWithTypes = hub(SurrogateIds.assign(
+    lazy val aliasWithTypes = hub(SurrogateIds.assign(
       title.select($"id".as("title_id"), $"tconst")
         .join(titleAkas, $"titleId" === $"tconst")
         .select(
@@ -154,6 +179,47 @@ object Build {
           $"isOriginalTitle".as("is_original_title"),
           $"types"),
       "id", Seq(col("title_id"), col("ordering"))))
+
+    // -- participation (J1, reference: database.py:669-703);
+    //    `characters` carried internally for the character bridge ----
+    lazy val participationWithChars = hub(SurrogateIds.assign(
+      titlePrincipals
+        .join(name.select($"id".as("name_id"), $"nconst".as("n_nconst")),
+          $"n_nconst" === $"nconst")
+        .join(title.select($"id".as("title_id"), $"tconst".as("t_tconst")),
+          $"t_tconst" === $"tconst")
+        .join(broadcast(profession
+          .select($"id".as("profession_id"), $"name".as("prof_name"))),
+          $"prof_name" === $"category")
+        .select($"title_id", $"ordering", $"name_id", $"profession_id",
+          $"job", $"characters"),
+      "id", Seq(col("title_id"), col("ordering"))))
+
+    // -- character (reference: database.py:705-763): parse each
+    //    DISTINCT characters-JSON once; ids over sorted distinct
+    //    character names --------------------------------------------
+    val charsParsed = hub(titlePrincipals
+      .filter($"characters".isNotNull).select($"characters").distinct()
+      .withColumn("names", from_json($"characters", ArrayType(StringType))))
+    lazy val character = {
+      // reference raises on unparsable/non-list JSON (database.py:715-729);
+      // checked eagerly here — an in-row raise_error can fire spuriously
+      // when hoisted into pushed-down predicates by codegen CSE.
+      val badJson = charsParsed.filter($"names".isNull).select($"characters")
+        .limit(1).collect()
+      if (badJson.nonEmpty) throw new IllegalArgumentException(
+        s"cannot JSON parse TitlePrincipals.characters: ${badJson(0).getString(0)}")
+      SurrogateIds.assign(
+        charsParsed.select(explode($"names").as("name")).distinct(),
+        "id", Seq(col("name")))
+    }
+
+    try Concurrent.all(Seq(() => titleAliasType, () => genre,
+      () => profession, () => name, () => title, () => aliasWithTypes,
+      () => participationWithChars, () => character))
+    catch { case e: Throwable => release(); throw e }
+
+    // -- the remaining tables: lazy frames over the steps above ------
     val titleAlias = aliasWithTypes.select(
       $"id", $"title_id", $"ordering", $"title",
       $"region_code", $"language_code", $"is_original_title")
@@ -187,40 +253,12 @@ object Build {
       .select($"title_id", $"parent_title_id",
         $"seasonNumber".as("season"), $"episodeNumber".as("episode"))
 
-    // -- participation (J1, reference: database.py:669-703);
-    //    `characters` carried internally for the character bridge ----
-    val participationWithChars = hub(SurrogateIds.assign(
-      titlePrincipals
-        .join(name.select($"id".as("name_id"), $"nconst".as("n_nconst")),
-          $"n_nconst" === $"nconst")
-        .join(title.select($"id".as("title_id"), $"tconst".as("t_tconst")),
-          $"t_tconst" === $"tconst")
-        .join(broadcast(profession
-          .select($"id".as("profession_id"), $"name".as("prof_name"))),
-          $"prof_name" === $"category")
-        .select($"title_id", $"ordering", $"name_id", $"profession_id",
-          $"job", $"characters"),
-      "id", Seq(col("title_id"), col("ordering"))))
     val participation = participationWithChars
       .select($"id", $"title_id", $"ordering", $"name_id",
         $"profession_id", $"job")
 
-    // -- character + temp bridge (reference: database.py:705-763):
-    //    parse each DISTINCT characters-JSON once; ids over sorted
-    //    distinct character names -----------------------------------
-    val charsParsed = hub(titlePrincipals
-      .filter($"characters".isNotNull).select($"characters").distinct()
-      .withColumn("names", from_json($"characters", ArrayType(StringType))))
-    // reference raises on unparsable/non-list JSON (database.py:715-729);
-    // checked eagerly here — an in-row raise_error can fire spuriously
-    // when hoisted into pushed-down predicates by codegen CSE.
-    val badJson = charsParsed.filter($"names".isNull).select($"characters")
-      .limit(1).collect()
-    if (badJson.nonEmpty) throw new IllegalArgumentException(
-      s"cannot JSON parse TitlePrincipals.characters: ${badJson(0).getString(0)}")
-    val character = SurrogateIds.assign(
-      charsParsed.select(explode($"names").as("name")).distinct(),
-      "id", Seq(col("name")))
+    // -- temp bridge characters-JSON -> character (reference:
+    //    database.py:705-763) ----------------------------------------
     val tempCharsToChar = charsParsed
       .select($"characters", posexplode($"names").as(Seq("pos", "char_name")))
       .join(character.select($"id".as("character_id"), $"name"),
@@ -279,11 +317,6 @@ object Build {
       "participation_to_character" -> participationToCharacter,
       "name_to_known_for_title" -> nameToKnownForTitle,
       "title_to_genre" -> titleToGenre),
-      release = () => {
-        hubs.result().foreach(_.unpersist())
-        // the stamped-frame pins behind every SurrogateIds.assign in
-        // this build — consumed once the tables above are written
-        SurrogateIds.releasePins(spark)
-      })
+      release = () => release())
   }
 }

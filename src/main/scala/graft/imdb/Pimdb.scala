@@ -69,7 +69,9 @@ final class Pimdb(val spark: SparkSession,
       warehouse.foreach { w =>
         val out = s"$w/datasets/${d.tableName}"
         df.write.mode("overwrite").parquet(out) // served from the read cache
-        df = spark.read.parquet(out) // re-read: downstream builds scan parquet, not re-parse TSV
+        // re-read: downstream builds scan parquet, not re-parse TSV; with
+        // the known schema, which saves the footer-merging inference job
+        df = spark.read.schema(df.schema).parquet(out)
         counted.release() // parquet is now the source; drop the cache
       }
       df.createOrReplaceTempView(d.tableName)
@@ -83,7 +85,12 @@ final class Pimdb(val spark: SparkSession,
     * command.py:198-220). Requires the build-relevant datasets to be
     * transferred first. Row-count/has-data validation warnings
     * (reference: database.py:925-942) are logged and kept on
-    * [[buildWarnings]]. */
+    * [[buildWarnings]].
+    *
+    * Three phases, in order, each running its independent steps
+    * concurrently: derive ([[Build.apply]]), then with a `warehouse`
+    * the 15 table writes, then the eight checks of [[Build.validate]].
+    */
   def build(warehouse: Option[String] = None): Build.Normalized = {
     val missing = ImdbDataset.forNormalized.filterNot(datasetFrames.contains)
     require(missing.isEmpty,
@@ -95,14 +102,16 @@ final class Pimdb(val spark: SparkSession,
     var result = Build(datasetFrames)
     warehouse.foreach { w =>
       val derived = result
-      result = Build.Normalized(result.tables.map { case (n, df) =>
-        val out = s"$w/normalized/$n"
-        df.write.mode("overwrite").parquet(out)
-        n -> spark.read.parquet(out)
-      })
+      try result = Build.Normalized(Concurrent.all(derived.tables.toSeq.map {
+        case (n, df) => () => {
+          val out = s"$w/normalized/$n"
+          df.write.mode("overwrite").parquet(out)
+          n -> spark.read.schema(df.schema).parquet(out)
+        }
+      }).toMap)
       // parquet now backs every table: the hub cache only served the
-      // writes above
-      derived.release()
+      // writes above (and a failed write leaves nothing to serve)
+      finally derived.release()
     }
     result.registerViews(spark)
     normalized = Some(result)

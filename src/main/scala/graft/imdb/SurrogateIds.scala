@@ -96,6 +96,10 @@ object SurrogateIds {
     * assign() calls made on THIS thread inside `body` are scoped — an
     * assign() dispatched to another thread registers in the global
     * ledger alone and stays pinned until an explicit [[releasePins]].
+    * [[Build.apply]] is such a caller: it runs its assign() calls on
+    * the threads of a [[Concurrent.all]] pool, so its pins are freed by
+    * `Build.release` -> [[releasePins]] (on success or a failed
+    * derive), never by a scope around the build.
     * No session parameter, deliberately: release is scope-keyed, not
     * session-keyed, and a session argument here would suggest
     * otherwise. */

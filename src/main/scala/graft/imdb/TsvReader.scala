@@ -1,6 +1,6 @@
 package graft.imdb
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -40,7 +40,10 @@ object TsvReader {
     val kept = rawWithSeq(spark, path, dataset)
       .withColumn("_rn", row_number().over(dedupWindow(dataset)))
       .filter(col("_rn") === 1)
-    finishTyped(kept, dataset, filter, strict)
+    val checks = if (strict) malformedCounts(dataset, filter) else Seq.empty
+    if (checks.nonEmpty)
+      raiseMalformed(dataset, kept.agg(checks.head, checks.tail: _*).collect()(0), 0)
+    finishTyped(kept, dataset, filter)
   }
 
   /** A [[readCounted]] result: the deduped frame, the reference's
@@ -61,7 +64,10 @@ object TsvReader {
     * and the count aggregate is what materializes the cache; the
     * returned frame serves every downstream action (warehouse write,
     * view registration) from that cache instead of re-parsing the
-    * TSV. Call `release()` after the frame is persisted elsewhere.
+    * TSV. The strict checks' malformed-value counts ride the same
+    * aggregate, each gated on the value filter, so the whole read is
+    * one aggregate job. Call `release()` after the frame is persisted
+    * elsewhere.
     */
   def readCounted(
       spark: SparkSession,
@@ -77,13 +83,17 @@ object TsvReader {
       .drop("_rn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // rows-beyond-first per key, summed over the PRE-filter kept
-    // representatives (common.py:255 increments before the filter):
-    // this action performs the single file scan and fills the cache
-    val dups = kept
-      .agg(coalesce(sum(col("_kn") - 1), lit(0L)).as("dups"))
-      .collect()(0).getLong(0)
-    CountedRead(finishTyped(kept.drop("_kn"), dataset, filter, strict),
-      dups, () => { kept.unpersist(); () })
+    // representatives (common.py:255 increments before the filter),
+    // plus the strict checks: this action performs the single file
+    // scan and fills the cache
+    val checks = if (strict) malformedCounts(dataset, filter) else Seq.empty
+    val row = kept
+      .agg(coalesce(sum(col("_kn") - 1), lit(0L)).as("dups"), checks: _*)
+      .collect()(0)
+    try raiseMalformed(dataset, row, 1)
+    catch { case e: IllegalArgumentException => kept.unpersist(); throw e }
+    CountedRead(finishTyped(kept.drop("_kn"), dataset, filter),
+      row.getLong(0), () => { kept.unpersist(); () })
   }
 
   private def dedupWindow(dataset: ImdbDataset) =
@@ -116,57 +126,62 @@ object TsvReader {
 
   /** Post-dedup half of the reference's row loop: the value-set
     * filter gates which kept rows are yielded (common.py:241-252),
-    * then only those are strictly validated and decoded — a malformed
-    * value on a row the filter drops never raises, exactly like the
-    * reference which decodes at insert time. */
+    * then those are decoded. */
   private def finishTyped(
       kept: DataFrame,
       dataset: ImdbDataset,
-      filter: Map[String, Set[String]],
-      strict: Boolean): DataFrame = {
-    val filtered = filter.foldLeft(kept) { case (df, (name, values)) =>
-      df.filter(col(name).isin(values.toSeq: _*))
-    }
-    if (strict) validate(filtered, dataset)
-    filtered.select(dataset.schema.fields.map(decode).toSeq: _*)
-  }
+      filter: Map[String, Set[String]]): DataFrame =
+    kept.filter(passes(filter))
+      .select(dataset.schema.fields.map(decode).toSeq: _*)
 
-  /** Strict typing as one aggregate pass over the raw strings:
-    * booleans must be literally "1"/"0", numerics must parse —
-    * anything else raises like the reference's PimdbError
-    * (database.py:345-351). Kept OUT of the row-level decode: an
-    * in-row `raise_error` can be hoisted by codegen subexpression
-    * elimination into pushed-down predicates and fire spuriously.
+  /** The value-set filter as one predicate: the row matches every entry. */
+  private def passes(filter: Map[String, Set[String]]): Column =
+    filter.foldLeft(lit(true)) { case (p, (name, values)) =>
+      p && col(name).isin(values.toSeq: _*)
+    }
+
+  /** Strict typing as aggregate columns over the raw strings, one per
+    * typed column: the count of values that are malformed (booleans
+    * must be literally "1"/"0", numerics must parse) on rows the value
+    * filter keeps. A malformed value on a row the filter drops never
+    * raises, exactly like the reference, which decodes at insert time
+    * (common.py:241-252, database.py:345-351). Kept OUT of the
+    * row-level decode: an in-row `raise_error` can be hoisted by
+    * codegen subexpression elimination into pushed-down predicates and
+    * fire spuriously.
     */
-  private def validate(raw: DataFrame, dataset: ImdbDataset): Unit = {
-    val checks = dataset.schema.fields.flatMap { f =>
+  private def malformedCounts(dataset: ImdbDataset,
+      filter: Map[String, Set[String]]): Seq[Column] = {
+    val keep = passes(filter)
+    dataset.schema.fields.toSeq.flatMap { f =>
       val c = col(f.name)
-      f.dataType match {
-        case BooleanType =>
-          Some(sum(when(c.isNotNull && !c.isin("0", "1"), 1).otherwise(0))
-            .as(f.name))
+      val malformed = f.dataType match {
+        case BooleanType => Some(!c.isin("0", "1"))
+        // try_cast, NOT cast: Spark 4's default ANSI mode makes a
+        // plain cast THROW on the malformed value, which would kill
+        // this very aggregate before the counting when() ever ran —
+        // the documented per-column counted error would be dead code
         case t @ (IntegerType | FloatType | DoubleType | LongType) =>
-          // try_cast, NOT cast: Spark 4's default ANSI mode makes a
-          // plain cast THROW on the malformed value, which would kill
-          // this very aggregate before the counting when() ever ran —
-          // the documented per-column counted error would be dead code
-          Some(sum(when(c.isNotNull && c.try_cast(t).isNull, 1)
-            .otherwise(0)).as(f.name))
+          Some(c.try_cast(t).isNull)
         case _ => None
       }
-    }
-    if (checks.nonEmpty) {
-      val row = raw.agg(checks.head, checks.tail.toSeq: _*).collect()(0)
-      checks.map(_.toString).indices.foreach { i =>
-        // sum() over zero rows is null: empty input (e.g. a filter
-        // matching nothing, or a header-only TSV) is trivially valid
-        val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
-        if (bad > 0) throw new IllegalArgumentException(
-          s"${dataset.datasetName}: ${row.schema.fieldNames(i)} has $bad " +
-            "malformed value(s) (booleans must be 1/0, numerics must parse)")
-      }
+      malformed.map(m =>
+        sum(when(keep && c.isNotNull && m, 1).otherwise(0)).as(f.name))
     }
   }
+
+  /** Raise like the reference's PimdbError on the first column whose
+    * [[malformedCounts]] value, at `row` index `from` onwards, is
+    * non-zero. */
+  private def raiseMalformed(dataset: ImdbDataset, row: Row, from: Int): Unit =
+    (from until row.length).foreach { i =>
+      // sum() over zero rows is null: empty input (e.g. a header-only
+      // TSV) is trivially valid
+      val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
+      if (bad > 0) throw new IllegalArgumentException(
+        s"${dataset.datasetName}: ${row.schema.fieldNames(i)} has $bad " +
+          "malformed value(s) (booleans must be 1/0, numerics must parse)")
+    }
 
   /** One declared column: `\N`→null already applied by the reader;
     * booleans decode from "1"/"0"; non-nullable nulls are defaulted to
@@ -184,8 +199,8 @@ object TsvReader {
         // plain cast throws on a malformed numeric, breaking the
         // strict=false contract ("they become null, then defaulted")
         // and killing StreamingTransfer's continuous ingest on one
-        // bad row; strict=true still raises — via validate()'s
-        // counted per-column error, as documented
+        // bad row; strict=true still raises — via the counted
+        // per-column error of malformedCounts, as documented
         raw.try_cast(t)
       case _ => raw
     }

@@ -11,14 +11,36 @@ import org.apache.spark.sql.functions._
 class BuildSpec extends SparkSpec {
 
   private lazy val dataDir = getClass.getResource("/imdb").getPath
+  /** The fixture is transferred and built into a parquet warehouse,
+    * the production path: every view reads the written parquet back. */
+  private lazy val warehouse =
+    java.nio.file.Files.createTempDirectory("graft_build_wh").toString
+  private def transferAndBuild(p: Pimdb): Unit = {
+    p.transfer(dataDir, warehouse = Some(warehouse))
+    p.build(Some(warehouse))
+  }
   private lazy val pimdb = {
     val p = Pimdb(spark)
-    p.transfer(dataDir)
-    p.build()
+    transferAndBuild(p)
     p
   }
   private lazy val tables = pimdb.query("SELECT 1") // force init
   private def t(name: String) = spark.table(name)
+
+  /** A copy of the fixture folder, for a test to plant rows in. */
+  private def fixtureCopy(): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_badfix")
+    java.nio.file.Files.list(java.nio.file.Paths.get(dataDir)).forEach { p =>
+      java.nio.file.Files.copy(p, dir.resolve(p.getFileName.toString))
+    }
+    dir
+  }
+
+  /** The table's view, read back with the schema its frame was written
+    * with, has exactly the schema parquet inference gives. */
+  private def assertReadsAsInferred(table: String, dir: String): Unit =
+    assert(t(table).schema ==
+      spark.read.parquet(s"$warehouse/$dir/$table").schema, table)
 
   test("transfer progress: ticks carry monotone row totals and a final " +
     "closing update (reference command.py:187-191)") {
@@ -54,6 +76,7 @@ class BuildSpec extends SparkSpec {
       "TitleCrew" -> 75L, "TitleEpisode" -> 43L, "TitlePrincipals" -> 572L,
       "TitleRatings" -> 12L)
     expected.foreach { case (n, c) => assert(t(n).count() == c, n) }
+    expected.keys.foreach(assertReadsAsInferred(_, "datasets"))
   }
 
   test("build: all 15 normalized tables with golden counts") {
@@ -67,6 +90,7 @@ class BuildSpec extends SparkSpec {
       "participation_to_character" -> 266L,
       "name_to_known_for_title" -> 122L, "title_to_genre" -> 91L)
     expected.foreach { case (n, c) => assert(t(n).count() == c, n) }
+    expected.keys.foreach(assertReadsAsInferred(_, "normalized"))
   }
 
   test("surrogate ids are dense 1..N in sorted natural-key order") {
@@ -241,20 +265,62 @@ class BuildSpec extends SparkSpec {
     val warnings = Build.validate(
       Map(ImdbDataset.TitleBasics -> tb, ImdbDataset.TitlePrincipals -> tp),
       normalized)
-    assert(warnings.exists(w => w.contains("\"participation\" has 0 rows") &&
-      w.contains("should have 2")), warnings.mkString("; "))
-    assert(warnings.exists(_.contains(
-      "\"genre\" should contain rows but is empty")), warnings.mkString("; "))
-    assert(warnings.length == 2, warnings.mkString("; "))
+    // the checks run concurrently, the warnings keep the fixed order
+    // of the checks
+    assert(warnings == Seq(
+      "target table \"participation\" has 0 rows but should have 2 same " +
+        "as source table \"TitlePrincipals\"",
+      "target table \"genre\" should contain rows but is empty"),
+      warnings.mkString("; "))
+    val titleShort = Build.validate(
+      Map(ImdbDataset.TitleBasics -> tp, ImdbDataset.TitlePrincipals -> tp),
+      normalized.copy(tables = normalized.tables ++ Map(
+        "title_alias_type" -> tb.limit(0),
+        "participation_to_character" -> tb.limit(0))))
+    assert(titleShort == Seq(
+      "target table \"title\" has 1 rows but should have 2 same as " +
+        "source table \"TitleBasics\"",
+      "target table \"participation\" has 0 rows but should have 2 same " +
+        "as source table \"TitlePrincipals\"",
+      "target table \"title_alias_type\" should contain rows but is empty",
+      "target table \"genre\" should contain rows but is empty",
+      "target table \"participation_to_character\" should contain rows " +
+        "but is empty"),
+      titleShort.mkString("; "))
+  }
+
+  test("a build that throws mid-derive releases the hub cache and pins it " +
+    "made and leaves no step thread (reference database.py:715-729)") {
+    val dir = fixtureCopy()
+    // unparsable characters JSON: the reference raises on it
+    java.nio.file.Files.writeString(dir.resolve("title.principals.tsv"),
+      "tt10070612\t99\tnm0000647\tactor\t\\N\t[\"Bond\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    val datasets = ImdbDataset.forNormalized.map(d => d ->
+      TsvReader.read(spark, s"$dir/${d.datasetName}.tsv", d)).toMap
+    // cluster-safe pins are persisted, so a leaked pin shows as a
+    // cache entry just like a leaked hub table
+    spark.conf.set(graft.operators.Materialize.ClusterSafeKey, "true")
+    try {
+      spark.catalog.clearCache()
+      val e = intercept[IllegalArgumentException](Build(datasets))
+      assert(e.getMessage ==
+        "cannot JSON parse TitlePrincipals.characters: [\"Bond")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a failed build left hub tables or pins cached")
+      def stepThreads = Thread.getAllStackTraces.keySet.toArray
+        .map(_.asInstanceOf[Thread])
+        .filter(t => t.isAlive && t.getName.startsWith(Concurrent.ThreadPrefix))
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (stepThreads.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(stepThreads.isEmpty, stepThreads.map(_.getName).mkString(", "))
+    } finally spark.conf.unset(graft.operators.Materialize.ClusterSafeKey)
   }
 
   test("a principal referencing an unknown name surfaces a row-count warning " +
     "end-to-end (silent inner-join row loss, database.py:703)") {
-    val src = java.nio.file.Paths.get(dataDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_badfix")
-    java.nio.file.Files.list(src).forEach { p =>
-      java.nio.file.Files.copy(p, dir.resolve(p.getFileName.toString))
-    }
+    val dir = fixtureCopy()
     // append a principals row whose nconst exists nowhere in NameBasics:
     // the participation build inner-joins to name and silently drops it
     java.nio.file.Files.writeString(dir.resolve("title.principals.tsv"),
@@ -269,7 +335,7 @@ class BuildSpec extends SparkSpec {
         p.buildWarnings.mkString("; "))
     } finally {
       // restore the pristine fixture views for other lazily-ordered tests
-      pimdb.transfer(dataDir); pimdb.build()
+      transferAndBuild(pimdb)
     }
   }
 

@@ -129,6 +129,29 @@ class TsvReaderSpec extends SparkSpec {
       assert(counted.duplicateCount == 1L) // counted though nothing is yielded
       assert(counted.frame.count() == 0L)
     } finally counted.release()
+
+    // the strict checks ride the same aggregate, gated on the filter: a
+    // malformed value on a row the filter rejects never raises, one on
+    // a row the filter keeps raises the per-column error
+    val malformed = tempTsv(
+      "nconst\tprimaryName\tbirthYear\tdeathYear\tprimaryProfession\tknownForTitles",
+      "nm1\tFirst Row\t19x0\t\\N\tactor\t\\N",
+      "nm1\tSecond Row\t1980\t\\N\tactor\t\\N",
+      "nm2\tOther\t\\N\t\\N\twriter\t\\N")
+    val rejected = TsvReader.readCounted(spark, malformed,
+      ImdbDataset.NameBasics, filter = Map("primaryProfession" -> Set("writer")))
+    try {
+      assert(rejected.duplicateCount == 1L)
+      assert(rejected.frame.collect().map(_.getAs[String]("nconst")).toSeq ==
+        Seq("nm2"))
+    } finally rejected.release()
+    val ex = intercept[IllegalArgumentException] {
+      TsvReader.readCounted(spark, malformed, ImdbDataset.NameBasics,
+        filter = Map("primaryProfession" -> Set("actor")))
+    }
+    assert(ex.getMessage ==
+      "name.basics: birthYear has 1 malformed value(s) " +
+        "(booleans must be 1/0, numerics must parse)", ex.getMessage)
   }
 
   test("property: typed decode matches a reference model over random rows " +
