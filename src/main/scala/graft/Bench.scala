@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
@@ -14,9 +16,8 @@ import org.apache.spark.sql.SparkSession
   * so the LAST line must stay O(1) regardless of registry size and
   * the unbounded record prints above it.
   *
-  * Each query is forced through the `noop` sink — unlike `count()`,
-  * which lets Spark prune the whole projection away, noop materializes
-  * every output row and column, so the timing covers the real work.
+  * Each query runs through the noop sink ([[Harness.noop]]), so the
+  * timing covers every output row and column.
   *
   * Timing is the MINIMUM of SPARK_GRAFT_BENCH_ITERS runs (default 3),
   * with extra SPARK_GRAFT_BENCH_HEAVY_ITERS runs (default 2 more,
@@ -255,88 +256,24 @@ object Bench {
       case _ => prevMin
     }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def main(args: Array[String]): Unit =
+    Harness.withSession(run(_, Harness.sfDir, args.toSeq))
+
+  def run(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
+    // optional args = subset of query names to time (local iteration);
+    // the driver passes none and gets the full registry. A typoed
+    // name must fail loudly — an all-typo subset would otherwise
+    // print a well-formed near-zero total that reads like a result.
+    Harness.requireKnown(args, SparkEntry.queries.keySet)
+    val cpus = spark.sparkContext.defaultParallelism
     val iters = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
     val heavyExtra = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_ITERS", "2").toInt)
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the audited bounded windows would otherwise print a warning
-    // wall in the bench tail — see BoundedWindow.quietBoundedWarnings
-    graft.operators.BoundedWindow.quietBoundedWarnings()
-    // quiesce() unpersists pinned locally-checkpointed RDDs ON
-    // PURPOSE (run isolation; nothing rereads them), but RDD.unpersist
-    // WARNs "lineage has been truncated and it cannot be recomputed"
-    // once per block drop — hundreds of lines per sweep burying real
-    // anomalies (the r15 tail). The logger is the concrete RDD class
-    // under org.apache.spark.rdd; quiet the package to ERROR in THIS
-    // measurement harness only — genuine failures surface as
-    // exceptions, not rdd-package warnings.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // the ~27 stream gates each print 3 lines of start-up boilerplate
-    // per run ("Temporary checkpoint location created", "AQE is not
-    // supported…", "Disabling AQE since AQE is not supported in
-    // stateful workloads") — ~250+ identical WARNs per sweep, the
-    // same bury-real-anomalies wall the r14 WindowExec and r15 RDD
-    // walls were. Quiet exactly the three emitting classes, in THIS
-    // measurement harness only: genuine stream failures surface as
-    // exceptions (→ query marked failed), never as WARNs from these
-    // loggers. Temp-checkpoint cleanup is unaffected — AvailableNow
-    // gates stop() cleanly, and Spark deletes temp checkpoints of
-    // queries that didn't fail.
-    Seq("ResolveWriteToStream", "MicroBatchExecution", "StreamExecution")
-      .foreach(c => org.apache.logging.log4j.core.config.Configurator.setLevel(
-        s"org.apache.spark.sql.execution.streaming.runtime.$c",
-        org.apache.logging.log4j.Level.ERROR))
-    // the r17 tail grew the next wall: q_stream_restart's recovery
-    // phase re-reads checkpoint state written by the first run, and
-    // Spark 4.1 WARNs once per state file it verifies without a
-    // sidecar checksum ("No checksum file found … hence no checksum
-    // verification", ChecksumCheckpointFileManager) plus one
-    // "normal for the first batch" snapshot-load WARN per state
-    // partition (HDFSBackedStateStoreProvider) — ~20 identical lines
-    // per restart-gate run, same bury-real-anomalies class as the
-    // walls above. Quiet exactly the two emitting classes, harness
-    // only; genuine checkpoint corruption surfaces as a
-    // verification EXCEPTION (failed query), never a WARN from
-    // these loggers, and the gate's hash-policed output is the
-    // actual recovery proof.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.checkpointing.ChecksumCheckpointFileManager",
-      org.apache.logging.log4j.Level.ERROR)
-    // the state package, not the provider class: state-store classes
-    // override logName to append their StateStoreProviderId, so the
-    // effective logger name is dynamic ("…HDFSBackedStateStoreProvider
-    // StateStoreProviderId[…]") and an exact-name setLevel misses it;
-    // the package level catches every suffix through log4j's
-    // dot-hierarchy walk
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.state",
-      org.apache.logging.log4j.Level.ERROR)
     // warm up JVM/JIT, codegen and parquet footers once, untimed
     Tables.names.foreach(n =>
-      try Tables(spark, sfDir, n).limit(1).write.format("noop")
-        .mode("overwrite").save()
-      catch { case _: Throwable => () })
-
-    // isolate queries/iterations from each other: drop checkpointed/
-    // cached RDD blocks, stop any straggling streams, and settle the
-    // heap so one run's garbage isn't billed to the next. stop() can
-    // throw/time out on a wedged stream and must not lose timings.
-    def quiesce(): Unit = {
-      // blocking unpersist: the non-blocking form only ENQUEUES block
-      // removal, so the gc() below would run while multi-GB pinned
-      // blocks are still referenced and the next timed run inherits
-      // the memory pressure this quiesce exists to prevent
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      try spark.streams.active.foreach(_.stop())
-      catch { case _: Throwable => () }
-      System.gc()
-    }
+      try Harness.noop(Tables(spark, sfDir, n).limit(1))
+      catch { case NonFatal(_) => () })
 
     // previous round's per-query minima (the file this run will
     // overwrite) — the reference for the regression re-run rule. A
@@ -364,7 +301,7 @@ object Bench {
       case None => Map.empty
       case Some(txt) =>
         try parsePrevMinima(txt)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] previous record $prevPath exists " +
             s"but failed to parse (${e.getClass.getSimpleName}: " +
             s"${e.getMessage}) — regression re-run rule DISABLED this sweep")
@@ -373,14 +310,7 @@ object Bench {
     }
     val prevBaseline: Option[Double] = prevTxt.flatMap(parsePrevBaseline)
 
-    // optional args = subset of query names to time (local iteration);
-    // the driver passes none and gets the full registry. A typoed
-    // name must fail loudly — an all-typo subset would otherwise
-    // print a well-formed near-zero total that reads like a result.
     val wanted = args.toSet
-    val unknown = wanted -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val selected =
       if (wanted.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => wanted(k) }
@@ -392,7 +322,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: summing 2e9 hashes overflows BIGINT under
       // Spark 4's default ANSI mode; xor folds for free
-      spark.range(0L, ProbeRowsPerCore * cpus.toInt, 1L, cpus.toInt)
+      spark.range(0L, ProbeRowsPerCore * cpus, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS h").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -427,15 +357,13 @@ object Bench {
       // of exactly this line)
       def run(n: Int): Seq[Double] = (1 to n).flatMap { _ =>
         System.err.println(s"[bench] begin $name")
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+        val sec =
+          try Some(Harness.timeNoop(fn(spark, sfDir)))
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
           }
-        val sec = (System.nanoTime() - t0) / 1e9
-        quiesce()
-        if (ok) Some(sec) else None
+        Harness.quiesce(spark)
+        sec
       }
       val base = run(iters)
       if (base.length < iters) Seq.empty // a failed base run fails the query
@@ -539,14 +467,10 @@ object Bench {
     }
 
     val results = timings.toSeq.map { case (name, all) =>
-      val sorted = all.sorted
-      val med =
-        if (sorted.isEmpty) -1.0
-        else if (sorted.length % 2 == 1) sorted(sorted.length / 2)
-        else (sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2
+      val med = if (all.isEmpty) -1.0 else Harness.median(all)
       val mn =
-        if (sorted.isEmpty) -1.0
-        else minOverride.getOrElse(name, sorted.head)
+        if (all.isEmpty) -1.0
+        else minOverride.getOrElse(name, all.min)
       (name, mn, med)
     }
     def fmt(v: Double): String =
@@ -611,6 +535,5 @@ object Bench {
     println(fileJson)
     // compact summary LAST so the bounded tail always captures it whole
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.length},"n_failed":$nFailed,"n_contended":${stillContended.size},"stream_sec":${fmt(streamSec)},"non_stream_sec":${fmt(nonStreamSec)},"queries_file":${QueryDef.jsonString(outPath)},"sf":$sfLabel}""")
-    spark.stop()
   }
 }

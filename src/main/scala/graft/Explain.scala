@@ -1,27 +1,23 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Plan inspection for registered gates: prints `explain("formatted")`
-  * for each named query. The session config MIRRORS Bench's (AQE on,
-  * SPARK_GRAFT_CPUS shuffle partitions, nanos decode, UTC) — a drifted
-  * config here would print plans that are NOT the plans the bench
-  * executed (different join strategies, no AdaptiveSparkPlan wrapper)
-  * and mislead exactly the regression investigations this main serves.
+  * for each named query over SPARK_GRAFT_SF_DIR. The session is
+  * Bench's ([[Harness.session]]) — a drifted config here would print
+  * plans that are NOT the plans the bench executed (different join
+  * strategies, no AdaptiveSparkPlan wrapper) and mislead exactly the
+  * regression investigations this main serves.
   */
 object Explain {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // a typoed name dies with the registry's naming, not a bare
-    // key-not-found (the Bench/Verify rule)
-    val unknown = args.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    args.foreach { name =>
+  def main(args: Array[String]): Unit =
+    Harness.withSession(run(_, Harness.sfDir, args.toSeq))
+
+  def run(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    Harness.requireKnown(names, SparkEntry.queries.keySet)
+    names.foreach { name =>
       println(s"===== $name")
-      SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
-        .explain("formatted")
+      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     }
-    spark.stop()
   }
 }

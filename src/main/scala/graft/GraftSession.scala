@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place graft entry points get their shared engine tuning.
-  * Six sessions used to carry literal copies of the same configs
-  * (Bench, Verify, Explain, ScaleProbe, ABProbe, the test harness);
-  * a retune applied to five of them would silently leave the sixth
-  * on defaults — e.g. the sort-based object-agg fallback coming back
-  * in exactly one harness. Funnel every builder through here.
+  * Three sessions are built through here: the harness mains'
+  * ([[Harness.session]], via [[localBuilder]]: Bench, Verify,
+  * Explain, ABProbe, StageProbe, BuildBench), the `pimdb` CLI's
+  * (`graft.imdb.Main`, via [[shared]] on its SPARK_MASTER) and the
+  * test harness's. A retune applied to some of them would silently
+  * leave the others on defaults — e.g. the sort-based object-agg
+  * fallback coming back in exactly one harness.
   */
 object GraftSession {
 
@@ -92,8 +94,7 @@ object GraftSession {
     * before getOrCreate.
     *
     * SPARK_GRAFT_CONF="k=v,k=v" chains overrides AFTER the shared
-    * defaults (the BuildBench SPARK_GRAFT_BUILD_CONF knob, hoisted to
-    * every harness main): the A/B attribution tool for session-default
+    * defaults: the A/B attribution tool for session-default
     * experiments. A blank env value is treated as unset (a wrapper
     * script's `SPARK_GRAFT_CONF=` must not crash the harness); a
     * malformed non-empty entry still fails loudly — a silently-dropped

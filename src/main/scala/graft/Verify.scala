@@ -1,18 +1,21 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  // args beyond (sfDir, outDir) = optional query-name subset for local
+  // iteration; the driver passes exactly two args
   def main(args: Array[String]): Unit = {
-    // args beyond (sfDir, outDir) = optional query-name subset for
-    // local iteration; the driver passes exactly two args
-    val Array(sfDir, outDirArg, rest @ _*) = args
-    val wanted = rest.toSet
-    // a typoed name must fail loudly, not silently benchmark nothing
-    val unknown = wanted -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    val Array(sfDir, outDir, rest @ _*) = args
+    Harness.withSession(run(_, sfDir, outDir, rest))
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDirArg: String,
+      names: Seq[String]): Unit = {
+    val wanted = names.toSet
+    Harness.requireKnown(wanted, SparkEntry.queries.keySet)
     // subset runs write to a SIBLING dir, not a subdir: a compare that
     // scans the directory must never mix a partial rerun with a stale
     // full dump — and a nested subset/ would itself read as a stale
@@ -22,40 +25,26 @@ object Verify {
       else s"${outDirArg.stripSuffix("/")}_subset"
     if (wanted.nonEmpty)
       System.err.println(s"[verify] subset mode -> $outDir")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the audited bounded windows would otherwise print a warning
-    // wall — see BoundedWindow.quietBoundedWarnings
-    graft.operators.BoundedWindow.quietBoundedWarnings()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => wanted.isEmpty || wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any PRIOR run's dump for this query: a failure
         // before the overwrite started would otherwise leave stale
         // parquet that check.py globs and silently reports as PASS
         // for a query that no longer runs
-        val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(dir)
-        }
+        Harness.rmTree(Paths.get(s"$outDir/$name"))
       }
-      finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(false))
+      finally Harness.quiesce(spark)
     }
     val q = QueryDef.jsonString _
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => wanted.isEmpty || wanted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -83,29 +83,25 @@ object Build {
     ).flatten
   }
 
-  /** @param cache persist the hub tables (name/title/alias/
-    *              participation/characters) that up to six downstream
-    *              builds consume — without it every consumer re-sorts
-    *              and re-assigns surrogate ids from scratch. Left on
-    *              for real builds; callers managing their own
-    *              persistence (e.g. warehouse writes) may disable.
+  /** Derives the 15 normalized tables. The hub tables (name/title/
+    * alias/participation/characters) that up to six downstream builds
+    * consume are persisted — otherwise every consumer re-sorts and
+    * re-assigns surrogate ids from scratch; `release` drops them.
     *
     * The eager steps (every [[SurrogateIds.assign]] and the bad-JSON
     * probe run Spark jobs) run concurrently ([[Concurrent.all]]); the
     * returned tables are lazy. A derive that throws releases the hub
     * cache and pins it made before rethrowing.
     */
-  def apply(datasets: Map[ImdbDataset, DataFrame],
-      cache: Boolean = true): Normalized = {
+  def apply(datasets: Map[ImdbDataset, DataFrame]): Normalized = {
     val spark = datasets.head._2.sparkSession
     import spark.implicits._
 
     val hubs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    def hub(df: DataFrame): DataFrame =
-      if (cache) {
-        hubs.add(df)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else df
+    def hub(df: DataFrame): DataFrame = {
+      hubs.add(df)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
     def release(): Unit = {
       hubs.forEach(df => { df.unpersist(); () })
       // the stamped-frame pins behind every SurrogateIds.assign in

@@ -1,7 +1,6 @@
 package graft.imdb
 
-import scala.jdk.CollectionConverters._
-
+import graft.Harness
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,24 +57,13 @@ object BuildBench {
     val out = java.nio.file.Files.newOutputStream(outFile)
     try {
       out.write((header.mkString("\t") + "\n").getBytes("UTF-8"))
-      listDir(tmp)
+      Harness.listDir(tmp)
         .filter(_.getFileName.toString.startsWith("part-"))
         .sortBy(_.getFileName.toString)
         .foreach(p => java.nio.file.Files.copy(p, out))
     } finally out.close()
     // remove the part directory; the single .tsv is the artifact
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) listDir(p).foreach(rm)
-      java.nio.file.Files.delete(p)
-    }
-    rm(tmp)
-  }
-
-  /** Eager directory listing that CLOSES the underlying stream
-    * (Files.list holds an OS directory handle until closed). */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = java.nio.file.Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
+    Harness.rmTree(tmp)
   }
 
   /** Generate the seven-dataset TSV folder for `titles` titles (and
@@ -216,41 +204,19 @@ object BuildBench {
       "title.ratings" -> titles / 2)
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def main(args: Array[String]): Unit = Harness.withSession(run)
+
+  /** The measured run on `spark` — a [[graft.Harness.session]] in
+    * main, so the pipeline runs under the engine's actual session
+    * defaults (bloom injection off, object-agg threshold, UTC, and
+    * SPARK_GRAFT_CONF overrides for attribution A/Bs). */
+  def run(spark: SparkSession): Unit = {
     val titles = sys.env.getOrElse("SPARK_GRAFT_BUILD_TITLES",
       "1400000").toLong
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BUILD_DIR", "/tmp/graft_build_bench"))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BUILD_OUT",
       "BUILD_BENCH.json")
-    // GraftSession like every other harness main — the measured
-    // pipeline must run under the engine's ACTUAL session defaults
-    // (bloom-injection off, object-agg threshold, UTC...), not a
-    // hand-rolled subset that silently diverges as the defaults move
-    // (this main was the seventh session builder, the exact drift the
-    // GraftSession funnel exists to prevent)
-    val spark = graft.GraftSession.localBuilder(cpus)
-      // A/B knob for session-default attribution (e.g. does bloom
-      // injection matter to the BUILD, whose warehouse tables carry
-      // real stats — unlike the gate surface's pinned intermediates?):
-      // SPARK_GRAFT_BUILD_CONF="k=v,k=v" chains overrides AFTER the
-      // shared defaults; unset = the engine's actual defaults.
-      // split("=", 2) so values containing '=' survive, and a
-      // malformed entry fails LOUDLY — a silently-dropped override
-      // would report "conf made no difference" on a run where the
-      // conf was never set, poisoning the very attribution this knob
-      // exists for
-      .config(sys.env.get("SPARK_GRAFT_BUILD_CONF").iterator
-        .flatMap(_.split(',')).map { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) if k.nonEmpty => (k, v)
-            case _ => throw new IllegalArgumentException(
-              s"SPARK_GRAFT_BUILD_CONF: malformed entry '$kv' (want k=v)")
-          }
-        }.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def secs(t0: Long) = math.round((System.nanoTime() - t0) / 1e7) / 100.0
 
@@ -271,7 +237,7 @@ object BuildBench {
         }.toMap
       } else {
         java.nio.file.Files.createDirectories(dir)
-        listDir(dir)
+        Harness.listDir(dir)
           .filter(_.getFileName.toString.startsWith("GENERATED_"))
           .foreach(java.nio.file.Files.delete)
         val t0 = System.nanoTime()
@@ -281,7 +247,7 @@ object BuildBench {
           r.map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes("UTF-8"))
         r
       }
-    val tsvMb = listDir(dir)
+    val tsvMb = Harness.listDir(dir)
       .filter(_.getFileName.toString.endsWith(".tsv"))
       .map(java.nio.file.Files.size).sum / 1e6
 
@@ -324,7 +290,7 @@ object BuildBench {
         // the require above already aborted on any warning, so a
         // written line is by construction validation-clean — the
         // field makes that legible to a reader of the artifact
-        s""""validation_clean":true,"cpus":$cpus}"""
+        s""""validation_clean":true,"cpus":${spark.sparkContext.defaultParallelism}}"""
     println(json)
     // ONE row per scale, accumulated: the artifact holds the 1 GB
     // working-scale row AND the full-IMDb-volume row side by side
@@ -345,12 +311,7 @@ object BuildBench {
     // full-IMDb volume) — without this, every run leaked its own copy
     // to the temp filesystem. The generated TSV corpus in `dir` stays:
     // it is the reusable, marker-validated INPUT.
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) listDir(p).foreach(rmTree)
-      java.nio.file.Files.delete(p)
-    }
-    rmTree(wh)
-    spark.stop()
+    Harness.rmTree(wh)
   }
 
 }

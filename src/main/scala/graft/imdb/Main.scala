@@ -88,14 +88,14 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     var spark: Option[SparkSession] = None
+    // the engine tuning every graft session shares, so transfer and
+    // build run under the settings BuildBench measures; SPARK_MASTER
+    // is the deployment's choice (local[*] by default)
     def session: SparkSession = {
-      val s = SparkSession.builder()
+      val s = graft.GraftSession.shared(SparkSession.builder()
         .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
         .appName("pimdbspark")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", graft.Harness.cpus.toString))
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       spark = Some(s)

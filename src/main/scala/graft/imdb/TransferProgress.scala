@@ -101,10 +101,8 @@ object TransferProgress {
     *
     * The listener bus is asynchronous: task-end events can still be
     * queued when `body` returns, so the closing total is read only
-    * after the count stabilizes (two consecutive equal non-zero
-    * reads, bounded wait) — without that the final callback could
-    * under-report or say 0. The bound keeps an empty input from
-    * stalling the transfer loop.
+    * after the bus has delivered them (`GraftBusDrain`) — without that
+    * the final callback could under-report or say 0.
     */
   def withProgress[T](
       sc: SparkContext,
@@ -114,14 +112,8 @@ object TransferProgress {
     sc.addSparkListener(listener)
     try body
     finally {
-      val deadline = System.nanoTime() + 500L * 1000 * 1000
-      var settled = false
-      while (!settled && System.nanoTime() < deadline) {
-        val before = listener.rowsRead
-        Thread.sleep(20)
-        settled = before > 0 && listener.rowsRead == before
-      }
-      sc.removeSparkListener(listener)
+      try org.apache.spark.GraftBusDrain(sc)
+      finally sc.removeSparkListener(listener)
       listener.fire(listener.rowsRead)
     }
   }

@@ -20,32 +20,6 @@ import org.apache.spark.sql.types._
   */
 object TsvReader {
 
-  /** Read + type + dedup one dataset file (plain .tsv or .tsv.gz).
-    *
-    * @param filter optional column → allowed-values map; rows must
-    *               match every entry (reference: common.py:241-252)
-    * @param strict raise on malformed booleans / unparsable numerics
-    *               like the reference's PimdbError; when false they
-    *               become null (then defaulted if non-nullable)
-    */
-  def read(
-      spark: SparkSession,
-      path: String,
-      dataset: ImdbDataset,
-      filter: Map[String, Set[String]] = Map.empty,
-      strict: Boolean = true): DataFrame = {
-    // first-occurrence wins BEFORE the value filter (common.py:238-255:
-    // a key's first row claims the key even when the filter rejects it,
-    // so a later filter-passing duplicate is still dropped)
-    val kept = rawWithSeq(spark, path, dataset)
-      .withColumn("_rn", row_number().over(dedupWindow(dataset)))
-      .filter(col("_rn") === 1)
-    val checks = if (strict) malformedCounts(dataset, filter) else Seq.empty
-    if (checks.nonEmpty)
-      raiseMalformed(dataset, kept.agg(checks.head, checks.tail: _*).collect()(0), 0)
-    finishTyped(kept, dataset, filter)
-  }
-
   /** A [[readCounted]] result: the deduped frame, the reference's
     * `duplicate_count` transfer metric (common.py:224,255), and a
     * `release` handle that drops the cached single-scan data once the
@@ -53,7 +27,8 @@ object TsvReader {
   final case class CountedRead(
       frame: DataFrame, duplicateCount: Long, release: () => Unit)
 
-  /** Read + type + dedup + duplicate metric in ONE file scan — the
+  /** Read + type + dedup one dataset file (plain .tsv or .tsv.gz),
+    * plus the duplicate metric, in ONE file scan — the
     * reference counts duplicates inside the same streaming pass that
     * dedups (common.py:224-255), so the engine must not pay a second
     * full parse for the metric. The per-key row count rides the same
@@ -68,6 +43,16 @@ object TsvReader {
     * aggregate, each gated on the value filter, so the whole read is
     * one aggregate job. Call `release()` after the frame is persisted
     * elsewhere.
+    *
+    * First occurrence wins BEFORE the value filter (common.py:238-255:
+    * a key's first row claims the key even when the filter rejects it,
+    * so a later filter-passing duplicate is still dropped).
+    *
+    * @param filter optional column → allowed-values map; rows must
+    *               match every entry (reference: common.py:241-252)
+    * @param strict raise on malformed booleans / unparsable numerics
+    *               like the reference's PimdbError; when false they
+    *               become null (then defaulted if non-nullable)
     */
   def readCounted(
       spark: SparkSession,
@@ -75,10 +60,10 @@ object TsvReader {
       dataset: ImdbDataset,
       filter: Map[String, Set[String]] = Map.empty,
       strict: Boolean = true): CountedRead = {
+    val byKey = Window.partitionBy(dataset.keyColumns.map(col): _*)
     val kept = rawWithSeq(spark, path, dataset)
-      .withColumn("_rn", row_number().over(dedupWindow(dataset)))
-      .withColumn("_kn", count(lit(1))
-        .over(Window.partitionBy(dataset.keyColumns.map(col): _*)))
+      .withColumn("_rn", row_number().over(byKey.orderBy(col("_seq"))))
+      .withColumn("_kn", count(lit(1)).over(byKey))
       .filter(col("_rn") === 1)
       .drop("_rn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -90,18 +75,18 @@ object TsvReader {
     val row = kept
       .agg(coalesce(sum(col("_kn") - 1), lit(0L)).as("dups"), checks: _*)
       .collect()(0)
-    try raiseMalformed(dataset, row, 1)
+    try raiseMalformed(dataset, row)
     catch { case e: IllegalArgumentException => kept.unpersist(); throw e }
-    CountedRead(finishTyped(kept.drop("_kn"), dataset, filter),
+    // the post-dedup half of the reference's row loop: the value-set
+    // filter gates which kept rows are yielded (common.py:241-252),
+    // then those are decoded
+    CountedRead(
+      kept.filter(passes(filter))
+        .select(dataset.schema.fields.map(decode).toSeq: _*),
       row.getLong(0), () => { kept.unpersist(); () })
   }
 
-  private def dedupWindow(dataset: ImdbDataset) =
-    Window
-      .partitionBy(dataset.keyColumns.map(col): _*)
-      .orderBy(col("_seq"))
-
-  /** Shared raw scan for [[read]] and [[readCounted]]: raw strings
+  /** The raw scan of [[readCounted]]: raw strings
     * with header-name mapping (like csv.DictReader — every declared
     * column must exist, extra file columns are ignored) plus the
     * `_seq` file-order tag the dedup window sorts on. */
@@ -123,16 +108,6 @@ object TsvReader {
 
     raw.withColumn("_seq", monotonically_increasing_id())
   }
-
-  /** Post-dedup half of the reference's row loop: the value-set
-    * filter gates which kept rows are yielded (common.py:241-252),
-    * then those are decoded. */
-  private def finishTyped(
-      kept: DataFrame,
-      dataset: ImdbDataset,
-      filter: Map[String, Set[String]]): DataFrame =
-    kept.filter(passes(filter))
-      .select(dataset.schema.fields.map(decode).toSeq: _*)
 
   /** The value-set filter as one predicate: the row matches every entry. */
   private def passes(filter: Map[String, Set[String]]): Column =
@@ -171,10 +146,10 @@ object TsvReader {
   }
 
   /** Raise like the reference's PimdbError on the first column whose
-    * [[malformedCounts]] value, at `row` index `from` onwards, is
-    * non-zero. */
-  private def raiseMalformed(dataset: ImdbDataset, row: Row, from: Int): Unit =
-    (from until row.length).foreach { i =>
+    * [[malformedCounts]] value is non-zero; `row` is [[readCounted]]'s
+    * aggregate, whose column 0 is the duplicate count. */
+  private def raiseMalformed(dataset: ImdbDataset, row: Row): Unit =
+    (1 until row.length).foreach { i =>
       // sum() over zero rows is null: empty input (e.g. a header-only
       // TSV) is trivially valid
       val bad = if (row.isNullAt(i)) 0L else row.getLong(i)

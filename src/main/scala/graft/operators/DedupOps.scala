@@ -105,24 +105,26 @@ object DedupOps {
     * heuristic (guide §5 — the driver does no data work). */
   private[operators] val FooterProbeMaxFiles = 64
 
-  /** Row-group count of one parquet file, memoized by (path, length)
-    * — the same footer the scan reads once for schema/stats, so a
-    * repeat spread() over the same immutable fixture costs nothing.
-    * None when the footer cannot be read (not parquet after all,
-    * permissions): the caller falls back to byte math for that file. */
+  /** Row-group count of one parquet file, memoized by (path, length,
+    * modification time) — the same footer the scan reads once for
+    * schema/stats, so a repeat spread() over the same fixture costs
+    * nothing, while a file overwritten in place (even at the same
+    * length) is re-read. None when the footer cannot be read (not
+    * parquet after all, permissions): the caller falls back to byte
+    * math for that file. */
   private val rowGroupCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-  private def parquetRowGroups(
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+  private[operators] def parquetRowGroups(
       spark: org.apache.spark.sql.SparkSession,
-      path: String, len: Long): Option[Long] =
-    try Some(rowGroupCounts.computeIfAbsent((path, len), { _ =>
+      path: String, len: Long, modified: Long): Option[Long] =
+    try Some(rowGroupCounts.computeIfAbsent((path, len, modified), { _ =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(path),
         spark.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRowGroups.size.toLong finally r.close()
     }))
-    catch { case _: Throwable => None }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private[operators] def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -153,25 +155,26 @@ object DedupOps {
       // partition, it does not flip the whole corpus to #files (which
       // overestimated and skipped the repartition this guard exists
       // to trigger)
-      val perFile: Seq[(String, Long)] = df.queryExecution.analyzed.collect {
+      val perFile: Seq[(String, Long, Long)] = df.queryExecution.analyzed.collect {
         case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           l.relation
       }.collect {
         case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
           h.location.listFiles(Nil, Nil).flatMap(pd =>
-            pd.files.map(f => (f.getPath.toString, f.getLen)))
+            pd.files.map(f =>
+              (f.getPath.toString, f.getLen, f.getModificationTime)))
       }.flatten
       val estSplits =
         if (perFile.nonEmpty) {
           // Spark sizes splits from the WHOLE listing's padded bytes
           // (FilePartition.maxSplitBytes), then bin-packs; compressed
           // files are one task each regardless of size
-          val totalPadded = perFile.map { case (_, len) =>
+          val totalPadded = perFile.map { case (_, len, _) =>
             BigInt(len) + openCost }.sum.min(BigInt(Long.MaxValue)).toLong
           val maxSplit = math.min(maxPartBytes,
             math.max(openCost, totalPadded / math.max(1, parallelism)))
           val (comp, spl) = perFile.partition(f => !splittable(f._1))
-          val splPadded = spl.map { case (_, len) => BigInt(len) + openCost }
+          val splPadded = spl.map { case (_, len, _) => BigInt(len) + openCost }
             .sum.min(BigInt(Long.MaxValue)).toLong
           // packed-bin floor, not ceil — packing fills bins to
           // maxSplit, so the fractional bin folds into the last one;
@@ -191,21 +194,22 @@ object DedupOps {
           // (byte estimate says "enough splits"), only for parquet
           // files, only up to FooterProbeMaxFiles (beyond that the
           // file count alone is real capacity), and each footer read
-          // is memoized by (path, length) — reading a footer is the
-          // same bounded metadata I/O the scan itself already did.
+          // is memoized by (path, length, modification time) — reading
+          // a footer is the same bounded metadata I/O the scan itself
+          // already did.
           if (byBytes < math.max(2, parallelism / 2)) byBytes
           else {
             val (parq, other) = spl.partition(
               _._1.toLowerCase.endsWith(".parquet"))
             if (parq.isEmpty || spl.length > FooterProbeMaxFiles) byBytes
             else {
-              val otherPadded = other.map { case (_, len) =>
+              val otherPadded = other.map { case (_, len, _) =>
                 BigInt(len) + openCost }.sum.min(BigInt(Long.MaxValue)).toLong
               val capacity = comp.length.toLong +
                 (if (other.isEmpty) 0L
                  else math.max(1L, otherPadded / math.max(1L, maxSplit))) +
-                parq.map { case (p, len) =>
-                  parquetRowGroups(spark, p, len).getOrElse(
+                parq.map { case (p, len, modified) =>
+                  parquetRowGroups(spark, p, len, modified).getOrElse(
                     // unreadable footer: fall back to this file's
                     // byte-math contribution rather than failing the
                     // estimate (the scan will surface a real error)
@@ -775,8 +779,7 @@ object DedupOps {
     * shape for keeping dedup clusters current as a corpus grows.
     * Result invariant: equals starComponents over the union of ALL
     * edges ever seen (spec-pinned, including cross-batch merges). */
-  def incrementalStars(prevStars: DataFrame, newEdges: DataFrame,
-      localEdges: Int = LocalIncrementalEdges): DataFrame = {
+  def incrementalStars(prevStars: DataFrame, newEdges: DataFrame): DataFrame = {
     // bootstrap fast path: a STATICALLY-empty prev (first trigger of a
     // fresh index — the gate passes `within.filter(lit(false))`, which
     // the optimizer folds to an empty LocalRelation) has no components
@@ -804,95 +807,26 @@ object DedupOps {
         greatest(col("a"), col("b")).as("b"))
       .filter(col("a") =!= col("b"))
       .pinned // feeds the endpoint set AND the contraction
-    // BOUNDED LOCAL PATH (r22 — the starComponents tryLocal
-    // discipline applied one level up): a maintenance trigger's edge
-    // set is tiny BY DESIGN (O(affected subgraph)), and the general
-    // path below spends its per-trigger wall on job floors — the
-    // endpoint distinct, the label outer-join, the touchedLabels pin
-    // and its two broadcast rebuilds in the semi/anti consumers. When
-    // one bounded probe of the pinned edges fits (the same
-    // limit(bound+1) trick tryLocal uses, so an oversized batch costs
-    // one cheap probe and falls through), the endpoint set derives on
-    // the driver, the touched labels come from ONE broadcast probe of
-    // the state table (output ≤ one row per matched endpoint), and
-    // touched/untouched become map-side InSet filters on the bucketed
-    // state scan — no joins, no pins, two fewer jobs per trigger and
-    // a flatter swap-write plan. The label SETS are identical to the
-    // general path's: matched endpoints contribute their stored
-    // label, unmatched ones themselves (the coalesce), so the
-    // touched/untouched partition — and everything downstream — is
-    // unchanged. Longs only (production doc ids; anything else keeps
-    // the general path authoritative, the localComponents rule).
-    val localOk = edges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val probe: Option[Array[org.apache.spark.sql.Row]] =
-      if (!localOk) None
-      else {
-        val p = edges.limit(math.max(0, localEdges) + 1).collect()
-        if (p.length <= localEdges) Some(p) else None
-      }
-    probe match {
-      case Some(rows) =>
-        val s = prevStars.sparkSession
-        import s.implicits._
-        val ends = rows.iterator.flatMap(r =>
-          Iterator(r.getLong(0), r.getLong(1))).toSet
-        val matched =
-          if (ends.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else prevStars
-            .join(broadcast(ends.toSeq.toDF("e")),
-              col("b") === col("e"))
-            .select(col("b"), col("a")).collect()
-        val matchedEnds = matched.map(_.getLong(0)).toSet
-        val lbls: Seq[Long] =
-          (matched.map(_.getLong(1)).toSet ++ (ends -- matchedEnds)).toSeq
-        // an empty label set (an empty trigger batch) cannot go
-        // through isin() — Catalyst rejects an empty IN list — and
-        // means "nothing touched" literally
-        val touched =
-          if (lbls.isEmpty) prevStars.filter(lit(false))
-          else prevStars.filter(col("a").isin(lbls: _*))
-        val untouched =
-          if (lbls.isEmpty) prevStars
-          else prevStars.filter(!col("a").isin(lbls: _*))
-        starComponents(touched.union(edges))
-          .filter(col("doc_id") =!= col("cluster_id"))
-          .select(col("cluster_id").as("a"), col("doc_id").as("b"))
-          .union(untouched)
-      case None =>
-        // general distributed path — authoritative for oversized
-        // batches and non-long ids
-        // (no distinct here: starComponents distincts its input, and
-        // the endpoint explode below is distinct-ed — one less
-        // shuffle per maintenance round)
-        val ends = edges
-          .select(explode(array(col("a"), col("b"))).as("e")).distinct()
-        val touchedLabels = ends
-          .join(prevStars.select(col("b").as("e"), col("a").as("lbl")),
-            Seq("e"), "left_outer")
-          .select(coalesce(col("lbl"), col("e")).as("a")).distinct()
-          .pinned // both the semi and anti side below
-        val touched = prevStars.join(touchedLabels, Seq("a"), "left_semi")
-        val untouched = prevStars.join(touchedLabels, Seq("a"), "left_anti")
-        // back to EDGE form: drop the centers' self-labels ((c, c)
-        // rows — starComponents emits them for labeling) so the state
-        // stays a clean self-loop-free edge set the next round can
-        // contract again
-        starComponents(touched.union(edges))
-          .filter(col("doc_id") =!= col("cluster_id"))
-          .select(col("cluster_id").as("a"), col("doc_id").as("b"))
-          .union(untouched)
-    }
+    // (no distinct here: starComponents distincts its input, and the
+    // endpoint explode below is distinct-ed — one less shuffle per
+    // maintenance round)
+    val ends = edges
+      .select(explode(array(col("a"), col("b"))).as("e")).distinct()
+    val touchedLabels = ends
+      .join(prevStars.select(col("b").as("e"), col("a").as("lbl")),
+        Seq("e"), "left_outer")
+      .select(coalesce(col("lbl"), col("e")).as("a")).distinct()
+      .pinned // both the semi and anti side below
+    val touched = prevStars.join(touchedLabels, Seq("a"), "left_semi")
+    val untouched = prevStars.join(touchedLabels, Seq("a"), "left_anti")
+    // back to EDGE form: drop the centers' self-labels ((c, c) rows —
+    // starComponents emits them for labeling) so the state stays a
+    // clean self-loop-free edge set the next round can contract again
+    starComponents(touched.union(edges))
+      .filter(col("doc_id") =!= col("cluster_id"))
+      .select(col("cluster_id").as("a"), col("doc_id").as("b"))
+      .union(untouched)
   }
-
-  /** Edge sets at or below this bound take [[incrementalStars]]'
-    * bounded local path: the endpoint set (≤ 2× this) must be cheap
-    * driver material AND small enough that the touched/untouched
-    * InSet filters stay compact plan literals. Far below
-    * [[LocalContractEdges]] deliberately — that bound sizes one
-    * union-find collect, this one sizes an expression embedded in
-    * every downstream plan of the trigger. */
-  val LocalIncrementalEdges: Int = 1 << 12
 
   /** APPEND one ingest batch's minhash bands into a stored
     * [[writeBandIndex]] table, keeping the (band, bucket) bucketed

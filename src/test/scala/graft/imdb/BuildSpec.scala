@@ -50,8 +50,9 @@ class BuildSpec extends SparkSpec {
     val df = TransferProgress.withProgress(
       spark.sparkContext, n => ticks.synchronized { ticks += n },
       secondsBetween = 0.0) {
-      TsvReader.read(spark, s"$dataDir/name.basics.tsv", ImdbDataset.NameBasics)
-        .count()
+      val r = TsvReader.readCounted(spark, s"$dataDir/name.basics.tsv",
+        ImdbDataset.NameBasics)
+      try r.frame.count() finally r.release()
     }
     assert(df == 219L)
     assert(ticks.nonEmpty)
@@ -296,8 +297,9 @@ class BuildSpec extends SparkSpec {
     java.nio.file.Files.writeString(dir.resolve("title.principals.tsv"),
       "tt10070612\t99\tnm0000647\tactor\t\\N\t[\"Bond\n",
       java.nio.file.StandardOpenOption.APPEND)
-    val datasets = ImdbDataset.forNormalized.map(d => d ->
-      TsvReader.read(spark, s"$dir/${d.datasetName}.tsv", d)).toMap
+    val reads = ImdbDataset.forNormalized.map(d =>
+      TsvReader.readCounted(spark, s"$dir/${d.datasetName}.tsv", d))
+    val datasets = ImdbDataset.forNormalized.zip(reads.map(_.frame)).toMap
     // cluster-safe pins are persisted, so a leaked pin shows as a
     // cache entry just like a leaked hub table
     spark.conf.set(graft.operators.Materialize.ClusterSafeKey, "true")
@@ -315,7 +317,10 @@ class BuildSpec extends SparkSpec {
       while (stepThreads.nonEmpty && System.nanoTime() < deadline)
         Thread.sleep(20)
       assert(stepThreads.isEmpty, stepThreads.map(_.getName).mkString(", "))
-    } finally spark.conf.unset(graft.operators.Materialize.ClusterSafeKey)
+    } finally {
+      spark.conf.unset(graft.operators.Materialize.ClusterSafeKey)
+      reads.foreach(_.release())
+    }
   }
 
   test("a principal referencing an unknown name surfaces a row-count warning " +

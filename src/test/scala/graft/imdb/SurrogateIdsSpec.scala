@@ -14,8 +14,15 @@ class SurrogateIdsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def pinnedCount(): Int =
-    spark.sparkContext.getPersistentRDDs.size
+  private def pinnedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Persisted RDDs created since the `before` snapshot. Counting only
+    * the test's own keeps a ContextCleaner sweep of an earlier suite's
+    * unreachable persisted RDD (timed by GC) from reading as a pin the
+    * test released or leaked. */
+  private def pinnedSince(before: Set[Int]): Int =
+    (pinnedIds() -- before).size
 
   private def inClusterSafe[A](body: => A): A = {
     spark.conf.set(Materialize.ClusterSafeKey, "true")
@@ -31,7 +38,7 @@ class SurrogateIdsSpec extends SparkSpec {
   test("withScopedPins releases the scope's pins when body THROWS " +
     "(a failed training must not leak the pins the ledger exists to free)") {
     inClusterSafe {
-      val before = pinnedCount()
+      val before = pinnedIds()
       val boom = intercept[RuntimeException] {
         SurrogateIds.withScopedPins {
           // consume the assignment fully, then fail mid-scope — the
@@ -42,7 +49,7 @@ class SurrogateIdsSpec extends SparkSpec {
         }
       }
       assert(boom.getMessage == "mid-training failure")
-      assert(pinnedCount() == before,
+      assert(pinnedSince(before) == 0,
         "scoped pin leaked past an exceptional scope exit")
     }
   }
@@ -50,7 +57,7 @@ class SurrogateIdsSpec extends SparkSpec {
   test("withScopedPins leaves a SIBLING thread's still-lazy pin alone " +
     "(scope releases its own creations, not a global diff)") {
     inClusterSafe {
-      val before = pinnedCount()
+      val before = pinnedIds()
       // sibling assign on ANOTHER thread of the same session, started
       // and pinned while this thread's scope is open; its output stays
       // lazy past the scope exit
@@ -74,25 +81,25 @@ class SurrogateIdsSpec extends SparkSpec {
       // the scope released exactly its own pin: the sibling's stamped
       // frame is still pinned AND still computable (its cache entry was
       // not deleted out from under the lazy plan)
-      assert(pinnedCount() == before + 1,
+      assert(pinnedSince(before) == 1,
         "scope teardown touched the sibling thread's pin")
       assert(sibling.count() == 60)
       SurrogateIds.releasePins(spark)
-      assert(pinnedCount() == before)
+      assert(pinnedSince(before) == 0)
     }
   }
 
   test("releasePins frees a session's pins exactly once, keyed by " +
     "session identity") {
     inClusterSafe {
-      val before = pinnedCount()
+      val before = pinnedIds()
       val out = SurrogateIds.assign(someRows, "id", Seq(col("name")))
       assert(out.count() == 50)
-      assert(pinnedCount() == before + 1)
+      assert(pinnedSince(before) == 1)
       SurrogateIds.releasePins(spark)
-      assert(pinnedCount() == before)
+      assert(pinnedSince(before) == 0)
       SurrogateIds.releasePins(spark) // idempotent on an empty ledger
-      assert(pinnedCount() == before)
+      assert(pinnedSince(before) == 0)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.imdb
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 
 /** S2/S4 scan semantics: \N nulls, no quoting, strict bool decode,
   * non-nullable defaulting, first-occurrence-wins dedup
@@ -11,6 +12,14 @@ class TsvReaderSpec extends SparkSpec {
   private def fixture(name: String): String =
     getClass.getResource(s"/imdb/$name").getPath
 
+  /** `f` over [[TsvReader.readCounted]]'s frame, released after. */
+  private def withRead[T](path: String, dataset: ImdbDataset,
+      filter: Map[String, Set[String]] = Map.empty,
+      strict: Boolean = true)(f: DataFrame => T): T = {
+    val r = TsvReader.readCounted(spark, path, dataset, filter, strict)
+    try f(r.frame) finally r.release()
+  }
+
   private def tempTsv(lines: String*): String = {
     val f = Files.createTempFile("graft", ".tsv")
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
@@ -18,13 +27,14 @@ class TsvReaderSpec extends SparkSpec {
   }
 
   test("reads and types name.basics fixture") {
-    val df = TsvReader.read(spark, fixture("name.basics.tsv"), ImdbDataset.NameBasics)
-    assert(df.count() == 219)
-    assert(df.schema("birthYear").dataType.typeName == "integer")
-    val smithee = df.filter(df("nconst") === "nm0000647").collect()
-    assert(smithee.length == 1)
-    assert(smithee(0).getAs[String]("primaryName") == "Alan Smithee")
-    assert(smithee(0).isNullAt(smithee(0).fieldIndex("birthYear")))
+    withRead(fixture("name.basics.tsv"), ImdbDataset.NameBasics) { df =>
+      assert(df.count() == 219)
+      assert(df.schema("birthYear").dataType.typeName == "integer")
+      val smithee = df.filter(df("nconst") === "nm0000647").collect()
+      assert(smithee.length == 1)
+      assert(smithee(0).getAs[String]("primaryName") == "Alan Smithee")
+      assert(smithee(0).isNullAt(smithee(0).fieldIndex("birthYear")))
+    }
   }
 
   test("duplicate keys: first occurrence wins") {
@@ -33,22 +43,21 @@ class TsvReaderSpec extends SparkSpec {
       "nm1\tFirst Row\t1970\t\\N\tactor\t\\N",
       "nm1\tSecond Row\t1980\t\\N\twriter\t\\N",
       "nm2\tOther\t\\N\t\\N\t\\N\t\\N")
-    val df = TsvReader.read(spark, path, ImdbDataset.NameBasics)
-    assert(df.count() == 2)
-    val kept = df.filter(df("nconst") === "nm1").collect()(0)
+    val (n, kept) = withRead(path, ImdbDataset.NameBasics)(df =>
+      (df.count(), df.filter(df("nconst") === "nm1").collect()(0)))
+    assert(n == 2)
     assert(kept.getAs[String]("primaryName") == "First Row")
     assert(kept.getAs[Int]("birthYear") == 1970)
   }
 
   test("reference duplicate fixture collapses to one row") {
-    val df = TsvReader.read(spark, fixture("name.basics.duplicate.tsv"),
-      ImdbDataset.NameBasics)
-    assert(df.count() == 1)
+    assert(withRead(fixture("name.basics.duplicate.tsv"),
+      ImdbDataset.NameBasics)(_.count()) == 1)
   }
 
   test("nullable boolean keeps \\N as null; 0/1 decode") {
-    val df = TsvReader.read(spark, fixture("title.akas.tsv"), ImdbDataset.TitleAkas)
-    val vals = df.select("isOriginalTitle").distinct().collect()
+    val vals = withRead(fixture("title.akas.tsv"), ImdbDataset.TitleAkas)(
+      _.select("isOriginalTitle").distinct().collect())
       .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSet
     assert(vals.contains("false") || vals.contains("true"))
   }
@@ -57,8 +66,7 @@ class TsvReaderSpec extends SparkSpec {
     val path = tempTsv(
       "tconst\taverageRating\tnumVotes",
       "tt1\t\\N\t\\N")
-    val df = TsvReader.read(spark, path, ImdbDataset.TitleRatings)
-    val r = df.collect()(0)
+    val r = withRead(path, ImdbDataset.TitleRatings)(_.collect()(0))
     assert(r.getAs[Float]("averageRating") == 0.0f)
     assert(r.getAs[Int]("numVotes") == 0)
   }
@@ -68,7 +76,7 @@ class TsvReaderSpec extends SparkSpec {
       "tconst\ttitleType\tprimaryTitle\toriginalTitle\tisAdult\tstartYear\tendYear\truntimeMinutes\tgenres",
       "tt1\tmovie\tA\tA\tmaybe\t2000\t\\N\t90\tDrama")
     val ex = intercept[Exception] {
-      TsvReader.read(spark, path, ImdbDataset.TitleBasics).collect()
+      withRead(path, ImdbDataset.TitleBasics)(_.collect())
     }
     assert(ex.getMessage != null)
   }
@@ -84,24 +92,25 @@ class TsvReaderSpec extends SparkSpec {
     // under ANSI mode a plain cast would throw SparkNumberFormatException
     // from inside the validation aggregate itself
     val ex = intercept[IllegalArgumentException] {
-      TsvReader.read(spark, path, ImdbDataset.TitleRatings).collect()
+      withRead(path, ImdbDataset.TitleRatings)(_.collect())
     }
     assert(ex.getMessage.contains("malformed value(s)"),
       s"expected the counted validation error, got: ${ex.getMessage}")
     // lenient: malformed values become null, then the non-nullable
     // default — the contract ANSI cast silently broke
-    val df = TsvReader.read(spark, path, ImdbDataset.TitleRatings,
-      strict = false).collect().map(r =>
+    val df = withRead(path, ImdbDataset.TitleRatings,
+      strict = false)(_.collect()).map(r =>
       r.getString(0) -> ((r.getAs[Float](1), r.getAs[Int](2)))).toMap
     assert(df("tt1") == ((0.0f, 7)))
     assert(df("tt2") == ((5.5f, 0)))
   }
 
   test("value-set filter keeps only matching rows") {
-    val df = TsvReader.read(spark, fixture("title.basics.tsv"),
-      ImdbDataset.TitleBasics, filter = Map("titleType" -> Set("movie")))
-    assert(df.count() > 0)
-    assert(df.select("titleType").distinct().collect().map(_.getString(0)).toSeq == Seq("movie"))
+    withRead(fixture("title.basics.tsv"), ImdbDataset.TitleBasics,
+        filter = Map("titleType" -> Set("movie"))) { df =>
+      assert(df.count() > 0)
+      assert(df.select("titleType").distinct().collect().map(_.getString(0)).toSeq == Seq("movie"))
+    }
   }
 
   test("dedup precedes the value filter: a key claimed by a filtered-out " +
@@ -111,9 +120,9 @@ class TsvReaderSpec extends SparkSpec {
       "nm1\tFirst Row\t1970\t\\N\tactor\t\\N",   // claims nm1, fails filter
       "nm1\tSecond Row\t1980\t\\N\twriter\t\\N", // would pass, but is a dup
       "nm2\tOther\t\\N\t\\N\twriter\t\\N")
-    val df = TsvReader.read(spark, path, ImdbDataset.NameBasics,
-      filter = Map("primaryProfession" -> Set("writer")))
-    assert(df.collect().map(_.getAs[String]("nconst")).toSeq == Seq("nm2"))
+    val kept = withRead(path, ImdbDataset.NameBasics,
+      filter = Map("primaryProfession" -> Set("writer")))(_.collect())
+    assert(kept.map(_.getAs[String]("nconst")).toSeq == Seq("nm2"))
   }
 
   test("readCounted's duplicate metric is pre-filter like the reference " +
@@ -171,8 +180,8 @@ class TsvReaderSpec extends SparkSpec {
       }).mkString("\n")
     val f = Files.createTempFile("graft_prop", ".tsv")
     Files.write(f, tsv.getBytes("UTF-8"))
-    val got = TsvReader.read(spark, f.toString, ImdbDataset.NameBasics)
-      .collect().map { r =>
+    val got = withRead(f.toString, ImdbDataset.NameBasics)(_.collect())
+      .map { r =>
         (r.getAs[String]("nconst"),
           if (r.isNullAt(r.fieldIndex("birthYear"))) None
           else Some(r.getAs[Int]("birthYear")),
@@ -184,16 +193,15 @@ class TsvReaderSpec extends SparkSpec {
 
   test("strict validation handles empty input: a filter matching no rows " +
     "passes instead of NPE-ing on the null aggregate") {
-    val df = TsvReader.read(spark, fixture("title.basics.tsv"),
-      ImdbDataset.TitleBasics, filter = Map("titleType" -> Set("no_such_type")))
-    assert(df.count() == 0)
+    assert(withRead(fixture("title.basics.tsv"), ImdbDataset.TitleBasics,
+      filter = Map("titleType" -> Set("no_such_type")))(_.count()) == 0)
   }
 
   test("quoting is disabled: stray quotes are data") {
     val path = tempTsv(
       "tconst\tdirectors\twriters",
       "tt1\tnm1,nm2\tsaid \"so\"")
-    val r = TsvReader.read(spark, path, ImdbDataset.TitleCrew).collect()(0)
+    val r = withRead(path, ImdbDataset.TitleCrew)(_.collect()(0))
     assert(r.getAs[String]("writers") == "said \"so\"")
   }
 }

@@ -83,6 +83,43 @@ class PipelineOpsSpec extends SparkSpec {
     assert(DedupOps.spread(pinnedMany) eq pinnedMany)
   }
 
+  test("the row-group memo re-reads a footer once the file's " +
+    "modification time moves, even at the same length") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_rg_memo")
+    val target = dir.resolve("data.parquet")
+    // overwrite `target` in place with a file of `blockSize` row
+    // groups, stamped with modification time `modified`
+    def place(blockSize: String, modified: Long): Long = {
+      val out = dir.resolve("w")
+      spark.range(20000).toDF("doc_id")
+        .withColumn("pad", org.apache.spark.sql.functions.lpad(
+          col("doc_id").cast("string"), 200, "x"))
+        .coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", blockSize)
+        .parquet(out.toString)
+      val part = graft.Harness.listDir(out)
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(modified))
+      Files.size(target)
+    }
+    try {
+      val len = place("4096", 1000000L)
+      val many = DedupOps.parquetRowGroups(spark, target.toString, len, 1000000L).get
+      assert(many > 1)
+      place((128L << 20).toString, 2000000L)
+      // the old key still hits the memo...
+      assert(DedupOps.parquetRowGroups(spark, target.toString, len, 1000000L)
+        .contains(many))
+      // ...while the same (path, length) at the new modification time
+      // reads the overwritten file's footer
+      assert(DedupOps.parquetRowGroups(spark, target.toString, len, 2000000L)
+        .contains(1L))
+    } finally graft.Harness.rmTree(dir)
+  }
+
   test("spreadPairs spreads a near-duplicate hub key instead of " +
     "funnelling it to one partition") {
     import spark.implicits._
@@ -776,29 +813,6 @@ class PipelineOpsSpec extends SparkSpec {
     // final shape: {1,2,3,10,11} centered at 1, {20,21} centered at 20
     val fin = stars.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fin == Set((1L, 2L), (1L, 3L), (1L, 10L), (1L, 11L), (20L, 21L)))
-  }
-
-  test("incremental stars: the bounded local path and the distributed " +
-    "general path land the identical state") {
-    // same planted rounds as above; localEdges = 0 forces the general
-    // path (the starComponents localFinishEdges = -1 convention), the
-    // default takes the r22 bounded path — both must agree after every
-    // round, including the cross-batch merge round
-    val rounds = Seq(
-      Seq((1L, 2L), (10L, 11L)),
-      Seq((20L, 21L), (3L, 2L)),
-      Seq((3L, 10L)))
-    var local = Seq.empty[(Long, Long)].toDF("a", "b")
-    var general = Seq.empty[(Long, Long)].toDF("a", "b")
-    rounds.foreach { es =>
-      local = DedupOps.incrementalStars(local, es.toDF("a", "b"))
-        .localCheckpoint()
-      general = DedupOps.incrementalStars(general, es.toDF("a", "b"),
-        localEdges = 0).localCheckpoint()
-      val l = local.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val g = general.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(l == g, s"paths diverged after $es")
-    }
   }
 
   test("verified clusters: a banded candidate failing the screened edit " +
