@@ -1,16 +1,12 @@
 package graft.functions
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{call_function, udaf}
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -108,8 +104,9 @@ object FrequentItems {
   /** `n` = exact total of items processed (order-independent);
     * `items` = the ≤k-entry counter summary (order-dependent — audit
     * its guarantees, don't hash it). Field layout matches the udaf
-    * Buf encoding this aggregate replaced, so every consumer
-    * (freqAudit, the stream memory sink) reads the same struct. */
+    * Buf encoding this aggregate replaced (the test tree's
+    * `FrequentItemsAggregator`), so every consumer (freqAudit, the
+    * stream memory sink) reads the same struct. */
   val OutputType: StructType = new StructType()
     .add("n", LongType, nullable = false)
     .add("items", MapType(StringType, LongType, valueContainsNull = false),
@@ -168,27 +165,13 @@ object FrequentItems {
     * replace path WARNs per call). */
   def register(spark: SparkSession): Unit =
     GraftFunctions.register(spark, FunctionName, builder)
-
-  // -----------------------------------------------------------------
-  // The superseded udaf form, kept private to the round-19 interleaved
-  // A/B (FrequentItemsSpec pins native ≡ udaf on planted data; the
-  // probe numbers live in SCALE.md). Delete with the A/B scaffolding
-  // once the adoption note ships.
-  // -----------------------------------------------------------------
-
-  /** `n` / `items` of the udaf encoding (field names are the struct
-    * contract [[OutputType]] preserves). */
-  final case class Buf(n: Long, items: Map[String, Long])
-
-  private[graft] def sketchUdaf(items: Column, k: Int): Column =
-    udaf(new FrequentItemsAggregator(k), ExpressionEncoder[Seq[String]]())(
-      items)
 }
 
 /** Native Misra–Gries aggregation: the [[FrequentItems.MGBuf]] summary
   * as a [[TypedImperativeAggregate]] reading InternalRows directly —
   * same update rule, same PODS'12 merge, same output struct as the
-  * udaf Aggregator it replaces, minus the per-row encoder round-trip.
+  * udaf Aggregator it replaced (kept in the test tree as the
+  * equivalence-spec reference), minus the per-row encoder round-trip.
   * Buffers shuffled between stages stay k-bounded per (task, key). */
 case class MisraGriesAgg(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -294,50 +277,4 @@ case class MisraGriesAgg(child: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = newChildren.head)
-}
-
-/** The udaf-wrapped Aggregator form [[MisraGriesAgg]] replaces — kept
-  * for the round-19 equivalence spec + interleaved A/B only (the
-  * ScalaAggregator bridge re-encodes every input row). */
-class FrequentItemsAggregator(k: Int)
-    extends Aggregator[Seq[String], FrequentItems.Buf, FrequentItems.Buf] {
-  require(k > 0)
-
-  override def zero: FrequentItems.Buf = FrequentItems.Buf(0L, Map.empty)
-
-  override def reduce(b: FrequentItems.Buf,
-      items: Seq[String]): FrequentItems.Buf = {
-    val m = mutable.HashMap.from(b.items)
-    var n = b.n
-    items.foreach { t =>
-      n += 1
-      m.get(t) match {
-        case Some(c)            => m.update(t, c + 1)
-        case None if m.size < k => m.update(t, 1L)
-        case None =>
-          m.mapValuesInPlace((_, c) => c - 1)
-          m.filterInPlace((_, c) => c > 0)
-      }
-    }
-    FrequentItems.Buf(n, m.toMap)
-  }
-
-  override def merge(b1: FrequentItems.Buf,
-      b2: FrequentItems.Buf): FrequentItems.Buf = {
-    val sum = mutable.HashMap.from(b1.items)
-    b2.items.foreach { case (t, c) => sum.update(t, sum.getOrElse(t, 0L) + c) }
-    if (sum.size > k) {
-      val thr = sum.values.toArray.sorted(Ordering[Long].reverse).apply(k)
-      sum.mapValuesInPlace((_, c) => c - thr)
-      sum.filterInPlace((_, c) => c > 0)
-    }
-    FrequentItems.Buf(b1.n + b2.n, sum.toMap)
-  }
-
-  override def finish(b: FrequentItems.Buf): FrequentItems.Buf = b
-
-  override def bufferEncoder: Encoder[FrequentItems.Buf] =
-    Encoders.product[FrequentItems.Buf]
-  override def outputEncoder: Encoder[FrequentItems.Buf] =
-    Encoders.product[FrequentItems.Buf]
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession, TypedColumn}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -95,7 +94,8 @@ object ReservoirSample {
     GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — the native aggregate (the udaf Aggregator
-    * below stays as the equivalence-spec reference). Registers on the
+    * it replaced, `ReservoirSampleUdaf`, stays in the test tree as the
+    * equivalence-spec reference). Registers on the
     * caller's session AND the default session (call_function resolves
     * at analysis time against the DataFrame's session — the
     * WordNgrams discipline). */
@@ -106,11 +106,6 @@ object ReservoirSample {
       org.apache.spark.sql.functions.lit(seed))
   }
 
-  final case class Buf(items: Vector[(Long, String)])
-
-  /** Typed-column form of the REFERENCE Aggregator (spec usage). */
-  def sample(col: String, k: Int, seed: Long = 42L): TypedColumn[String, Seq[String]] =
-    new ReservoirSampleUdaf(k, seed).toColumn
 }
 
 /** Native form: the bottom-k sample as a [[TypedImperativeAggregate]]
@@ -207,35 +202,4 @@ case class ReservoirSampleAgg(child: Expression, k: Int, seed: Long,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ReservoirSampleAgg =
     copy(child = newChildren.head)
-}
-
-/** The udaf-wrapped Aggregator form [[ReservoirSampleAgg]] replaces —
-  * kept as the equivalence-spec reference (the ScalaAggregator bridge
-  * re-encodes every input row). */
-class ReservoirSampleUdaf(k: Int, seed: Long)
-    extends Aggregator[String, ReservoirSample.Buf, Seq[String]] {
-
-  import ReservoirSample._
-  require(k > 0, "k must be positive")
-
-  override def zero: Buf = Buf(Vector.empty)
-
-  override def reduce(b: Buf, v: String): Buf =
-    if (v == null) b else insert(b, (priority(seed, v), v))
-
-  override def merge(b1: Buf, b2: Buf): Buf =
-    b2.items.foldLeft(b1)(insert)
-
-  private def insert(b: Buf, pv: (Long, String)): Buf =
-    if (b.items.contains(pv)) b
-    else if (b.items.length < k) Buf((b.items :+ pv).sorted)
-    else if (Ordering[(Long, String)].lt(pv, b.items.last))
-      Buf((b.items.init :+ pv).sorted)
-    else b
-
-  override def finish(b: Buf): Seq[String] = b.items.map(_._2).sorted
-
-  override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-  override def outputEncoder: Encoder[Seq[String]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
 }

@@ -39,11 +39,12 @@ object Build {
     def apply(name: String): DataFrame = tables(name)
     def registerViews(spark: SparkSession): Unit =
       tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    // release(): drop the hub-table cache backing these frames — call
-    // once the tables are persisted elsewhere (warehouse parquet) or
-    // superseded by a rebuild; the TsvReader.CountedRead.release
-    // discipline, without which repeated builds in one session stack
-    // MEMORY_AND_DISK copies until executor eviction
+    // release(): drop the hub-table cache and the surrogate-id pins
+    // backing these frames — call once the tables are persisted
+    // elsewhere (warehouse parquet) or superseded by a rebuild; the
+    // TsvReader.CountedRead.release discipline, without which repeated
+    // builds in one session stack MEMORY_AND_DISK copies until
+    // executor eviction
   }
 
   /** Post-build sanity checks, mirroring the reference's warnings —
@@ -86,7 +87,9 @@ object Build {
   /** Derives the 15 normalized tables. The hub tables (name/title/
     * alias/participation/characters) that up to six downstream builds
     * consume are persisted — otherwise every consumer re-sorts and
-    * re-assigns surrogate ids from scratch; `release` drops them.
+    * re-assigns surrogate ids from scratch. `release` drops them and
+    * the stamped-frame pin of each [[SurrogateIds.assign]] the build
+    * made, and no other pin in the session.
     *
     * The eager steps (every [[SurrogateIds.assign]] and the bad-JSON
     * probe run Spark jobs) run concurrently ([[Concurrent.all]]); the
@@ -97,17 +100,21 @@ object Build {
     val spark = datasets.head._2.sparkSession
     import spark.implicits._
 
-    val hubs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    // what this build made and must free: the hub caches and the
+    // stamped-frame pin of every SurrogateIds.assign, each pushed by
+    // the step thread that made it; release runs newest first, so a
+    // hub is unpersisted before the pin it was derived from
+    val owned = new java.util.concurrent.ConcurrentLinkedDeque[() => Unit]()
     def hub(df: DataFrame): DataFrame = {
-      hubs.add(df)
+      owned.push(() => { df.unpersist(); () })
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    def release(): Unit = {
-      hubs.forEach(df => { df.unpersist(); () })
-      // the stamped-frame pins behind every SurrogateIds.assign in
-      // this build, made on the step threads
-      SurrogateIds.releasePins(spark)
+    def ids(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+      val a = SurrogateIds.assign(df, "id", sortCols)
+      owned.push(a.release)
+      a.frame
     }
+    def release(): Unit = owned.forEach(_())
 
     val titleBasics = datasets(TitleBasics)
     val nameBasics = datasets(NameBasics)
@@ -117,7 +124,7 @@ object Build {
     val titleRatings = datasets(TitleRatings)
 
     def keyTable(values: DataFrame): DataFrame =
-      SurrogateIds.assign(values.toDF("name"), "id", Seq(col("name")))
+      ids(values.toDF("name"), Seq(col("name")))
 
     // The eager steps are lazy vals, forced together below. A step
     // that reads another step's table waits for it (a local lazy val
@@ -136,16 +143,16 @@ object Build {
     lazy val profession = keyTable(titlePrincipals.select($"category").distinct())
 
     // -- name (reference: database.py:817-842) ----------------------
-    lazy val name = hub(SurrogateIds.assign(
+    lazy val name = hub(ids(
       nameBasics.select(
         $"nconst", $"primaryName".as("primary_name"),
         $"birthYear".as("birth_year"), $"deathYear".as("death_year"),
         $"primaryProfession".as("primary_professions")),
-      "id", Seq(col("nconst"))))
+      Seq(col("nconst"))))
 
     // -- title: J3 inner ⋈ broadcast(title_type), LEFT OUTER ratings
     //    with coalesce-to-0 (reference: database.py:876-923) ---------
-    lazy val title = hub(SurrogateIds.assign(
+    lazy val title = hub(ids(
       titleBasics
         .join(broadcast(titleType.select($"id".as("title_type_id"), $"name")),
           $"name" === $"titleType")
@@ -161,11 +168,11 @@ object Build {
           $"runtimeMinutes".as("runtime_minutes"),
           coalesce($"averageRating", lit(0.0f)).as("average_rating"),
           coalesce($"numVotes", lit(0)).as("rating_count")),
-      "id", Seq(col("tconst"))))
+      Seq(col("tconst"))))
 
     // -- title_alias (J5, reference: database.py:1031-1063); `types`
     //    carried internally for the alias-type explode below ---------
-    lazy val aliasWithTypes = hub(SurrogateIds.assign(
+    lazy val aliasWithTypes = hub(ids(
       title.select($"id".as("title_id"), $"tconst")
         .join(titleAkas, $"titleId" === $"tconst")
         .select(
@@ -174,11 +181,11 @@ object Build {
           $"language".as("language_code"),
           $"isOriginalTitle".as("is_original_title"),
           $"types"),
-      "id", Seq(col("title_id"), col("ordering"))))
+      Seq(col("title_id"), col("ordering"))))
 
     // -- participation (J1, reference: database.py:669-703);
     //    `characters` carried internally for the character bridge ----
-    lazy val participationWithChars = hub(SurrogateIds.assign(
+    lazy val participationWithChars = hub(ids(
       titlePrincipals
         .join(name.select($"id".as("name_id"), $"nconst".as("n_nconst")),
           $"n_nconst" === $"nconst")
@@ -189,7 +196,7 @@ object Build {
           $"prof_name" === $"category")
         .select($"title_id", $"ordering", $"name_id", $"profession_id",
           $"job", $"characters"),
-      "id", Seq(col("title_id"), col("ordering"))))
+      Seq(col("title_id"), col("ordering"))))
 
     // -- character (reference: database.py:705-763): parse each
     //    DISTINCT characters-JSON once; ids over sorted distinct
@@ -205,9 +212,8 @@ object Build {
         .limit(1).collect()
       if (badJson.nonEmpty) throw new IllegalArgumentException(
         s"cannot JSON parse TitlePrincipals.characters: ${badJson(0).getString(0)}")
-      SurrogateIds.assign(
-        charsParsed.select(explode($"names").as("name")).distinct(),
-        "id", Seq(col("name")))
+      ids(charsParsed.select(explode($"names").as("name")).distinct(),
+        Seq(col("name")))
     }
 
     try Concurrent.all(Seq(() => titleAliasType, () => genre,

@@ -118,9 +118,4 @@ object ImdbDataset {
     * a name-vs-value comparison bug; we implement the intent, SURVEY
     * §2.6 E2). */
   lazy val forNormalized: Seq[ImdbDataset] = all.filterNot(_ == TitleCrew)
-
-  def byName(name: String): ImdbDataset =
-    all.find(d => d.datasetName == name || d.tableName == name)
-      .getOrElse(throw new IllegalArgumentException(
-        s"unknown IMDb dataset: $name (expected one of ${all.map(_.datasetName).mkString(", ")})"))
 }

@@ -143,12 +143,6 @@ final class Pimdb(val spark: SparkSession,
     sb.append(rewrite(sql.substring(last))).toString
   }
 
-  /** S10: drop views left by older schema versions (reference:
-    * database.py:582-586 `_drop_obsolete_normalized_tables`). */
-  def dropObsoleteViews(): Unit =
-    Seq("characters_to_character", "title_to_director", "title_to_writer")
-      .foreach(spark.catalog.dropTempView)
-
   /** The reference's core purpose — "maintain a local SQL copy of the
     * IMDb datasets" — against an actual SQL database: push every
     * transferred dataset table and (if built) every normalized table

@@ -547,12 +547,14 @@ object CurationOps {
         |            AS BIGINT) AS pos
         |FROM documents""".stripMargin) {
       (s, dir) =>
-        // 64-bit positions: the int variant would wrap past 2^31 docs
+        // 64-bit positions: the int variant would wrap past 2^31 docs.
+        // The returned frame reads the pin, so the gate keeps it: the
+        // ContextCleaner sweeps a localCheckpoint pin with the frame
         graft.imdb.SurrogateIds.assignLong(
           Tables(s, dir, "documents")
             .select(idHash(col("doc_id")).as("h"), col("doc_id")),
           "pos", Seq(col("h"), col("doc_id")))
-          .select(col("doc_id"), col("pos"))
+          .frame.select(col("doc_id"), col("pos"))
     },
 
     // DSIR importance weighting (Xie et al. NeurIPS'23): per-doc mean

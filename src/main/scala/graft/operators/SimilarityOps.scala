@@ -686,15 +686,18 @@ object SimilarityOps {
     * ranks exist by construction, so exactly k seeds come back;
     * `cid` is the seed ordinal (PQ keys its codebook on it, IVF
     * drops it). Factored so a seeding retune or sparse-rank guard
-    * cannot be applied to one training and not the other. */
-  private def stridedSeedIds(e: DataFrame, n: Long, k: Int): DataFrame = {
+    * cannot be applied to one training and not the other. The caller
+    * releases the rank pin once it has collected the seeds. */
+  private def stridedSeedIds(e: DataFrame, n: Long,
+      k: Int): graft.imdb.SurrogateIds.Assigned = {
     val stride = math.max(1L, n / k)
-    graft.imdb.SurrogateIds.assignLong(
-        e.select(col("vec_id")), "_rnk", Seq(col("vec_id")))
+    val ranks = graft.imdb.SurrogateIds.assignLong(
+      e.select(col("vec_id")), "_rnk", Seq(col("vec_id")))
+    ranks.copy(frame = ranks.frame
       .filter((col("_rnk") - 1) % stride === 0 &&
         col("_rnk") - 1 < stride * k)
       .select(col("vec_id"),
-        ((col("_rnk") - 1) / stride).cast("int").as("cid"))
+        ((col("_rnk") - 1) / stride).cast("int").as("cid")))
   }
 
   private def ivfLloyd(corpus: DataFrame, k: Int, iters: Int,
@@ -724,19 +727,16 @@ object SimilarityOps {
     // join-with-previous materialization) to keep k rows in a
     // DataFrame between iterations. Output is ivfAssign's exactly
     // (spec-pinned comparator).
-    // seed selection + collect inside a SCOPED pin release: once the
-    // seeds are driver constants, the stamped-frame pin behind the
-    // rank assignment is dead weight (one leaked cache entry per
-    // training call under clusterSafe); the scope cannot touch a
-    // sibling computation's still-lazy pins
+    // once the seeds are driver constants, the stamped-frame pin
+    // behind the rank assignment is dead weight (one leaked cache
+    // entry per training call under clusterSafe)
+    val seeds = stridedSeedIds(corpus, n, k)
     var cents: Seq[(Long, Array[Float])] =
-      graft.imdb.SurrogateIds.withScopedPins {
-        val seedIds = stridedSeedIds(corpus, n, k).select(col("vec_id"))
-        collectCentroids(
-          corpus.join(broadcast(seedIds), "vec_id")
-            .select(col("vec_id").as("centroid_id"),
-              col("embedding").as("cv")))
-      }
+      try collectCentroids(
+        corpus.join(broadcast(seeds.frame.select(col("vec_id"))), "vec_id")
+          .select(col("vec_id").as("centroid_id"),
+            col("embedding").as("cv")))
+      finally seeds.release()
     require(cents.size == k,
       s"ivfTrain: rank-strided seeding selected ${cents.size} of $k seeds")
     (0 until iters).foreach { _ =>
@@ -2763,11 +2763,12 @@ object SimilarityOps {
     * Quantization quality is the whole PQ game — the recall spec
     * measures seeded vs trained side by side.
     *
-    * Scale: each iteration is one broadcast-join assignment pass +
-    * one (sub, cid, dim)-bounded mean aggregate; the codebook stays
-    * m×k rows; rounds are pinned via [[Materialize.pinIter]] like
-    * every training loop here. Empty cells keep their previous
-    * centroid. Offline index-build utility, not a per-query path. */
+    * Scale: each iteration is one map-side assignment pass over the
+    * pinned sub-vectors + one (sub, cid)-bounded mean aggregate; the
+    * m×k codebook stays on the driver between iterations, and every
+    * pin is released before the call returns. Empty cells keep their
+    * previous centroid. Offline index-build utility, not a per-query
+    * path. */
   def pqTrain(e: DataFrame, k: Int = PqCentroids, iters: Int = 5): DataFrame =
     pqLloyd(e, k, iters, "pqTrain", c => avg(c))
 
@@ -2788,12 +2789,11 @@ object SimilarityOps {
     val s = e.sparkSession
     val n = e.count()
     require(n >= k, s"$caller: corpus has $n vectors, need at least k=$k")
-    val seedIds = stridedSeedIds(e, n, k)
     val ev = e.select(col("vec_id"),
       posexplode(subvecs(col("embedding"))).as(Seq("sub", "esub")))
       .select(col("vec_id"), col("sub"),
         col("esub").cast("array<double>").as("esub"))
-      .pinned // reused by every assignment round
+      .pinned // reused by every assignment round, unpinned after it
     // The m×k codebook is index GEOMETRY, not data — it lives
     // driver-side for the whole loop (r22: the ivfLloyd shape applied
     // to the PQ training; the former frame-per-iteration form paid ~5
@@ -2810,50 +2810,55 @@ object SimilarityOps {
     // unchanged: sqDist over the same double arrays, meanOf per dim,
     // empty cells keep their previous centroid — the oracle's
     // unrolled CTE rounds replay bit-identically.
-    var cb: Seq[((Int, Int), Seq[Double])] = ev
-      .join(broadcast(seedIds), "vec_id")
-      .select(col("sub"), col("cid"), col("esub"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toSeq
-      .sortBy(_._1)
-    (0 until iters).foreach { _ =>
-      val cbBySub: Column = array((0 until PqSubspaces).map { sub =>
-        array(cb.collect { case ((`sub`, cid), csub) =>
-          struct(lit(cid).as("cid"),
-            array(csub.map(lit(_)): _*).as("csub"))
+    try {
+      val seeds = stridedSeedIds(e, n, k)
+      var cb: Seq[((Int, Int), Seq[Double])] =
+        try ev
+          .join(broadcast(seeds.frame), "vec_id")
+          .select(col("sub"), col("cid"), col("esub"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toSeq
+          .sortBy(_._1)
+        finally seeds.release()
+      (0 until iters).foreach { _ =>
+        val cbBySub: Column = array((0 until PqSubspaces).map { sub =>
+          array(cb.collect { case ((`sub`, cid), csub) =>
+            struct(lit(cid).as("cid"),
+              array(csub.map(lit(_)): _*).as("csub"))
+          }: _*)
         }: _*)
-      }: _*)
-      val m = array_min(transform(element_at(cbBySub, col("sub") + 1),
-        c => struct(sqDist(col("esub"), c.getField("csub")).as("d"),
-          c.getField("cid").as("c"))))
-      val dimCols = (0 until PqSubDim).map(i =>
-        meanOf(element_at(col("esub"), i + 1)).as(s"d$i"))
-      val got = ev
-        .select(col("sub"), m.getField("c").as("cid"), col("esub"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(dimCols.head, dimCols.tail: _*)
-        .select(col("sub"), col("cid"),
-          array((0 until PqSubDim).map(i => col(s"d$i")): _*).as("new_csub"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) ->
-          r.getSeq[java.lang.Double](2)).toMap
-      // empty cells keep their previous centroid (the former
-      // left_outer coalesce). Collected as BOXED doubles with a
-      // null-element check — the ivfLloyd discipline: a silent unbox
-      // would fabricate 0.0 where the frame form carried null through
-      cb = cb.map { case (key, prev) =>
-        got.get(key) match {
-          case Some(nv) if !nv.contains(null) =>
-            key -> nv.map(_.doubleValue).toSeq
-          case _ => key -> prev
+        val m = array_min(transform(element_at(cbBySub, col("sub") + 1),
+          c => struct(sqDist(col("esub"), c.getField("csub")).as("d"),
+            c.getField("cid").as("c"))))
+        val dimCols = (0 until PqSubDim).map(i =>
+          meanOf(element_at(col("esub"), i + 1)).as(s"d$i"))
+        val got = ev
+          .select(col("sub"), m.getField("c").as("cid"), col("esub"))
+          .groupBy(col("sub"), col("cid"))
+          .agg(dimCols.head, dimCols.tail: _*)
+          .select(col("sub"), col("cid"),
+            array((0 until PqSubDim).map(i => col(s"d$i")): _*).as("new_csub"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) ->
+            r.getSeq[java.lang.Double](2)).toMap
+        // empty cells keep their previous centroid (the former
+        // left_outer coalesce). Collected as BOXED doubles with a
+        // null-element check — the ivfLloyd discipline: a silent unbox
+        // would fabricate 0.0 where the frame form carried null through
+        cb = cb.map { case (key, prev) =>
+          got.get(key) match {
+            case Some(nv) if !nv.contains(null) =>
+              key -> nv.map(_.doubleValue).toSeq
+            case _ => key -> prev
+          }
         }
       }
-    }
-    // rebuild the m×k-row frame callers expect, in a deterministic
-    // (sub, cid) order (bounded driver material, the ivfLloyd shape)
-    import s.implicits._
-    cb.map { case ((sub, cid), csub) => (sub, cid, csub) }
-      .toDF("sub", "cid", "csub")
+      // rebuild the m×k-row frame callers expect, in a deterministic
+      // (sub, cid) order (bounded driver material, the ivfLloyd shape)
+      import s.implicits._
+      cb.map { case ((sub, cid), csub) => (sub, cid, csub) }
+        .toDF("sub", "cid", "csub")
+    } finally Materialize.unpin(ev)
   }
 
   /** [[pqTrain]] with per-iteration centroid QUANTIZATION (means
@@ -3044,27 +3049,6 @@ object SimilarityOps {
       assignConst(batch, centroids, Seq(col("embedding"))),
       tableName, Seq("centroid_id"), numBuckets)
 
-  /** ANN serve over a STORED [[writeIvfIndex]] table, shaped so the
-    * query batch may be a STREAMING DataFrame — the serving twin of
-    * the streaming ingest screen:
-    *
-    *  - probe-cell selection is pure map-side array arithmetic over
-    *    the centroid CONSTANTS (ncells is index geometry, bounded —
-    *    the same O(constants) driver material as the bloom position
-    *    set): no window function, so it plans inside a micro-batch.
-    *    The comparator reproduces `ccos DESC, centroid_id ASC` —
-    *    [[CosineSimilarity]] keeps the arithmetic bit-identical to
-    *    the batch path and the oracle;
-    *  - the index join BROADCASTS the probe batch (at 100 TB the
-    *    index is the big side; per-trigger work is one map-side pass
-    *    over the stored cells, no state store, no index shuffle);
-    *  - the per-query top-k is the bounded [[graft.functions.TopK]]
-    *    aggregator — k rows of state per query, never whole cells.
-    *
-    * On a batch `queries` input this returns exactly [[ivfSearch]]
-    * (spec-pinned); the q_stream_ann gate runs it as a real stream
-    * against the shared [[ivfTrainedServeSql]] oracle.
-    */
   /** The `n` nearest centroid cells of the `qv` column by cosine,
     * as a sorted array of (ccos, centroid_id) structs — pure map-side
     * array arithmetic over the centroid CONSTANTS, the streamable
@@ -3104,13 +3088,6 @@ object SimilarityOps {
     slice(array_sort(scored, byCcosDesc), 1, n)
   }
 
-  /** Streaming IVF index ingest: assign each newly arriving vector
-    * (a streaming (vec_id, qv) batch) to its nearest centroid —
-    * STATELESS map-side arithmetic, the write half of the serving
-    * story whose read half is [[annSearchStored]]. In production the
-    * assigned rows append into the [[writeIvfIndex]] bucketed layout
-    * per trigger (foreachBatch); output matches [[ivfAssign]] on the
-    * same slice exactly (spec-pinned + shared-CTE oracle). */
   /** Map-side [[ivfAssign]] over COLLECTED centroid constants: each
     * corpus vector's nearest cell by the [[nearestCellsConst]]
     * comparator (`ccos DESC, centroid_id ASC`, bit-identical
@@ -3129,11 +3106,9 @@ object SimilarityOps {
         col("embedding"), centroids)
         .getField("centroid_id").as("centroid_id") +: extra: _*)
 
-  /** The collected (centroid_id, cv) constants of a k-row centroid
-    * frame — bounded driver material (index geometry, never data),
-    * the input every map-side assignment and probe ranking
-    * broadcasts. */
-  /** Collect a (centroid_id, vector) frame to driver constants.
+  /** Collect a k-row (centroid_id, vector) frame to driver constants
+    * — bounded driver material (index geometry, never data), the input
+    * every map-side assignment and probe ranking broadcasts.
     * Fails fast on a null vector or null element: a centroid is a
     * driver-side CONSTANT with no keep-previous fallback (unlike a
     * Lloyd-iteration mean), and the naive `getSeq[Float]` unbox would
@@ -3172,10 +3147,38 @@ object SimilarityOps {
       .select(col("vec_id"), col("centroid_id"),
         round(col("cos"), 6).as("sim"))
 
+  /** Streaming IVF index ingest: assign each newly arriving vector
+    * (a streaming (vec_id, qv) batch) to its nearest centroid —
+    * STATELESS map-side arithmetic, the write half of the serving
+    * story whose read half is [[annSearchStored]]. In production the
+    * assigned rows append into the [[writeIvfIndex]] bucketed layout
+    * per trigger (foreachBatch); output matches [[ivfAssign]] on the
+    * same slice exactly (spec-pinned + shared-CTE oracle). */
   def streamIvfIngest(newVectors: DataFrame,
       centroids: Seq[(Long, Array[Float])]): DataFrame =
     assignWithSim(newVectors, centroids, col("qv"))
 
+  /** ANN serve over a STORED [[writeIvfIndex]] table, shaped so the
+    * query batch may be a STREAMING DataFrame — the serving twin of
+    * the streaming ingest screen:
+    *
+    *  - probe-cell selection is pure map-side array arithmetic over
+    *    the centroid CONSTANTS (ncells is index geometry, bounded —
+    *    the same O(constants) driver material as the bloom position
+    *    set): no window function, so it plans inside a micro-batch.
+    *    The comparator reproduces `ccos DESC, centroid_id ASC` —
+    *    [[CosineSimilarity]] keeps the arithmetic bit-identical to
+    *    the batch path and the oracle;
+    *  - the index join BROADCASTS the probe batch (at 100 TB the
+    *    index is the big side; per-trigger work is one map-side pass
+    *    over the stored cells, no state store, no index shuffle);
+    *  - the per-query top-k is the bounded [[graft.functions.TopK]]
+    *    aggregator — k rows of state per query, never whole cells.
+    *
+    * On a batch `queries` input this returns exactly [[ivfSearch]]
+    * (spec-pinned); the q_stream_ann gate runs it as a real stream
+    * against the shared [[ivfTrainedServeSql]] oracle.
+    */
   def annSearchStored(queries: DataFrame, index: DataFrame,
       centroids: Seq[(Long, Array[Float])], nprobe: Int, k: Int): DataFrame = {
     val s = queries.sparkSession

@@ -106,7 +106,7 @@ class FrequentItemsSpec extends SparkSpec {
         .toMap
 
     val native = summarize(FrequentItems.sketch(col("grams"), 7))
-    val viaUdaf = summarize(FrequentItems.sketchUdaf(col("grams"), 7))
+    val viaUdaf = summarize(FrequentItemsAggregator.sketchUdaf(col("grams"), 7))
     assert(native == viaUdaf)
     assert(native.keySet == Set("a", "b"))
     assert(native.values.forall(_._2.contains("hot")))

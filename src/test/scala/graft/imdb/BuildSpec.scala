@@ -323,6 +323,37 @@ class BuildSpec extends SparkSpec {
     }
   }
 
+  test("Build(datasets).release() frees the build's pins and hubs but " +
+    "leaves a sibling SurrogateIds.assign pin made beforehand") {
+    import spark.implicits._
+    val reads = ImdbDataset.forNormalized.map(d =>
+      TsvReader.readCounted(spark, s"$dataDir/${d.datasetName}.tsv", d))
+    val datasets = ImdbDataset.forNormalized.zip(reads.map(_.frame)).toMap
+    def pinnedIds(): Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // cluster-safe pins are persisted RDDs, so a pin shows up in the
+    // context's persistent set until it is released
+    spark.conf.set(graft.operators.Materialize.ClusterSafeKey, "true")
+    try {
+      val before = pinnedIds()
+      val sibling = SurrogateIds.assign(
+        (1 to 40).map(i => s"sib$i").toDF("name"), "id", Seq(col("name")))
+      val built = Build(datasets)
+      // reading every table fills the hub caches
+      built.tables.values.foreach(_.count())
+      assert((pinnedIds() -- before).size > 1)
+      built.release()
+      assert((pinnedIds() -- before).size == 1,
+        "the build's release freed a pin it did not make, or kept one it did")
+      assert(sibling.frame.count() == 40)
+      sibling.release()
+      assert((pinnedIds() -- before).isEmpty)
+    } finally {
+      spark.conf.unset(graft.operators.Materialize.ClusterSafeKey)
+      reads.foreach(_.release())
+    }
+  }
+
   test("a principal referencing an unknown name surfaces a row-count warning " +
     "end-to-end (silent inner-join row loss, database.py:703)") {
     val dir = fixtureCopy()
