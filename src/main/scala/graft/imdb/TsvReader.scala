@@ -161,9 +161,8 @@ object TsvReader {
   /** One declared column: `\N`→null already applied by the reader;
     * booleans decode from "1"/"0"; non-nullable nulls are defaulted to
     * false/0/""/0.0 (reference warns and coerces, database.py:328-344).
-    * Shared with the streaming ingest path ([[StreamingTransfer]]).
     */
-  private[imdb] def decode(field: StructField): Column = {
+  private def decode(field: StructField): Column = {
     val raw = col(field.name)
     val cast = field.dataType match {
       case BooleanType =>
@@ -173,9 +172,9 @@ object TsvReader {
         // try_cast, NOT cast: under Spark 4's default ANSI mode a
         // plain cast throws on a malformed numeric, breaking the
         // strict=false contract ("they become null, then defaulted")
-        // and killing StreamingTransfer's continuous ingest on one
-        // bad row; strict=true still raises — via the counted
-        // per-column error of malformedCounts, as documented
+        // and failing the whole transfer on one bad row; strict=true
+        // still raises — via the counted per-column error of
+        // malformedCounts, as documented
         raw.try_cast(t)
       case _ => raw
     }

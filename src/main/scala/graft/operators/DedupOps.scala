@@ -69,6 +69,33 @@ object DedupOps {
     * BEFORE `all` (oracle interpolation). */
   val ChunkBenchMod = 7
 
+  /** Footer probes beyond this many files are skipped: with that many
+    * files the listing itself proves scan capacity, and a driver
+    * should not serially open hundreds of footers to decide a
+    * heuristic (guide §5 — the driver does no data work). */
+  private[operators] val FooterProbeMaxFiles = 64
+
+  /** Row-group count of one parquet file, memoized by (path, length,
+    * modification time) — the same footer the scan reads once for
+    * schema/stats, so a repeat spread() over the same fixture costs
+    * nothing, while a file overwritten in place (even at the same
+    * length) is re-read. None when the footer cannot be read (not
+    * parquet after all, permissions): the caller falls back to byte
+    * math for that file. */
+  private val rowGroupCounts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+  private[operators] def parquetRowGroups(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String, len: Long, modified: Long): Option[Long] =
+    try Some(rowGroupCounts.computeIfAbsent((path, len, modified), { _ =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        spark.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRowGroups.size.toLong finally r.close()
+    }))
+    catch { case scala.util.control.NonFatal(_) => None }
+
   /** Small single-file inputs arrive as ONE scan partition; per-doc
     * hashing is CPU-bound, so fan it out to the full core count.
     * Guarded: input that already has enough splits (the normal case
@@ -99,33 +126,6 @@ object DedupOps {
     * (Range, LocalRelation) pass through as before — no partition
     * evidence without forcing the plan, and those are driver-side
     * fixtures, not ingest paths. */
-  /** Footer probes beyond this many files are skipped: with that many
-    * files the listing itself proves scan capacity, and a driver
-    * should not serially open hundreds of footers to decide a
-    * heuristic (guide §5 — the driver does no data work). */
-  private[operators] val FooterProbeMaxFiles = 64
-
-  /** Row-group count of one parquet file, memoized by (path, length,
-    * modification time) — the same footer the scan reads once for
-    * schema/stats, so a repeat spread() over the same fixture costs
-    * nothing, while a file overwritten in place (even at the same
-    * length) is re-read. None when the footer cannot be read (not
-    * parquet after all, permissions): the caller falls back to byte
-    * math for that file. */
-  private val rowGroupCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
-  private[operators] def parquetRowGroups(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, len: Long, modified: Long): Option[Long] =
-    try Some(rowGroupCounts.computeIfAbsent((path, len, modified), { _ =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRowGroups.size.toLong finally r.close()
-    }))
-    catch { case scala.util.control.NonFatal(_) => None }
-
   private[operators] def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
@@ -558,25 +558,6 @@ object DedupOps {
     * `split(text, "\n")` and nothing else changes). */
   val ParaTokens = 10
 
-  /** Paragraph-level exact dedup with removal — the CCNet/Dolma
-    * corpus-preparation step (CCNet §3.1 "paragraph-level
-    * deduplication"; Dolma's exact paragraph dedup): every paragraph
-    * occurrence after the FIRST (ordered by (doc_id, position)) is
-    * dropped corpus-wide, and each document is reduced to its
-    * surviving paragraphs.
-    *
-    * Scale design: the paragraph hash is computed INSIDE the per-row
-    * transform, so only (doc_id, idx, md5) triples — ~50 bytes per
-    * paragraph — ever leave the row; the text itself never shuffles.
-    * First-occurrence election is one window over the hash (the
-    * dedup shuffle), and reconstruction is a doc_id-keyed aggregate
-    * of the kept hashes. The emitted `kept_hash` fingerprints the
-    * deduped document (md5 of the kept paragraph hashes in document
-    * order) without ever moving paragraph text; [[paragraphRewrite]]
-    * is the production rewrite that emits the surviving text itself.
-    *
-    * Output: (doc_id, n_paras, n_kept, drop_ratio, kept_hash).
-    */
   /** Oracle-CTE replica of [[paragraphHashes]], exposing
     * `c2(doc_id, idx, h)` — shared by the paragraph-dedup and the
     * streaming ingest-screen oracles so the SQL definition of a
@@ -631,6 +612,25 @@ object DedupOps {
       paragraphHashes(spread(docs)).select(col("h")).distinct(),
       tableName, Seq("h"), numBuckets)
 
+  /** Paragraph-level exact dedup with removal — the CCNet/Dolma
+    * corpus-preparation step (CCNet §3.1 "paragraph-level
+    * deduplication"; Dolma's exact paragraph dedup): every paragraph
+    * occurrence after the FIRST (ordered by (doc_id, position)) is
+    * dropped corpus-wide, and each document is reduced to its
+    * surviving paragraphs.
+    *
+    * Scale design: the paragraph hash is computed INSIDE the per-row
+    * transform, so only (doc_id, idx, md5) triples — ~50 bytes per
+    * paragraph — ever leave the row; the text itself never shuffles.
+    * First-occurrence election is one window over the hash (the
+    * dedup shuffle), and reconstruction is a doc_id-keyed aggregate
+    * of the kept hashes. The emitted `kept_hash` fingerprints the
+    * deduped document (md5 of the kept paragraph hashes in document
+    * order) without ever moving paragraph text; [[paragraphRewrite]]
+    * is the production rewrite that emits the surviving text itself.
+    *
+    * Output: (doc_id, n_paras, n_kept, drop_ratio, kept_hash).
+    */
   def paragraphDedup(docs: DataFrame): DataFrame = {
     val chunks = paragraphHashes(spread(docs))
     val firstWins = org.apache.spark.sql.expressions.Window
@@ -1351,9 +1351,6 @@ object DedupOps {
        |FROM r$iters JOIN deg ON r$iters.u = deg.u""".stripMargin
   }
 
-  /** [[candidateCtes]] over an arbitrary (doc_id, text) source CTE —
-    * lets the recall-telemetry oracle run the identical replica on
-    * its deterministic document sample. */
   /** Wide-SimHash banded Hamming pairs as CTEs ending in
     * `swcand(a, b, hamming)` (<= SimhashMaxHamming applied) — ONE
     * SQL body shared by the q_dedup_simhash_pairs oracle and the
@@ -1389,6 +1386,9 @@ object DedupOps {
        |  WHERE hamming <= $SimhashMaxHamming)""".stripMargin
   }
 
+  /** [[candidateCtes]] over an arbitrary (doc_id, text) source CTE —
+    * lets the recall-telemetry oracle run the identical replica on
+    * its deterministic document sample. */
   private def candidateCtesFrom(src: String): String = {
     val mh = (0 until MinhashSeeds).map(j =>
       s"list_min(list_transform(sh, x -> substr(sha256(x), ${j * 8 + 1}, 8))) AS mh$j")

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.streaming.EventStreams
+import graft.streaming.EventStreams.{drainToMemory, filePerTrigger,
+  runAvailableNow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming operators exposed to the correctness gate. The windowed
   * aggregation runs as a REAL Structured Streaming query (file source
@@ -46,9 +47,7 @@ object StreamingOps {
       ev.filter(delayed && col("event_id") % 2 === 0), // wave 1
       ev.filter(delayed && col("event_id") % 2 === 1), // wave 2
       ev.filter(lit(false)))) // flush: final eviction trigger
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream
+    val q = runAvailableNow(filePerTrigger(s, ev.schema, inDir)
       .withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", "72 hours")
       .groupBy(window(col("event_time"), "1 day"))
@@ -57,8 +56,7 @@ object StreamingOps {
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("n_events"), col("cents"))
       .writeStream.format("memory").queryName("graft_stream_late")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .outputMode("append"))
     val drops = q.recentProgress.toSeq
       .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
       .map(_.numRowsDroppedByWatermark).sum
@@ -132,11 +130,9 @@ object StreamingOps {
         val schema = Tables(s, dir, "events").schema
         val stream = s.readStream.schema(schema)
           .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.windowedAgg(stream)
-          .writeStream.format("memory").queryName("graft_stream_window")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_window")
+        drainToMemory(
+          EventStreams.windowedAgg(stream),
+          "graft_stream_window", "complete")
       }
     },
 
@@ -209,11 +205,9 @@ object StreamingOps {
         val schema = Tables(s, dir, "events").schema
         def stream = s.readStream.schema(schema)
           .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.purchasesJoinViews(stream)
-          .writeStream.format("memory").queryName("graft_stream_join")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_join")
+        drainToMemory(
+          EventStreams.purchasesJoinViews(stream),
+          "graft_stream_join", "append")
       }
     },
 
@@ -229,11 +223,9 @@ object StreamingOps {
         val schema = Tables(s, dir, "events").schema
         val stream = s.readStream.schema(schema)
           .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.dedupKeysStream(stream)
-          .writeStream.format("memory").queryName("graft_stream_dedup")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_dedup")
+        drainToMemory(
+          EventStreams.dedupKeysStream(stream),
+          "graft_stream_dedup", "append")
       }
     },
 
@@ -248,11 +240,9 @@ object StreamingOps {
         val schema = Tables(s, dir, "events").schema
         val stream = s.readStream.schema(schema)
           .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.enrichWithDim(stream, Tables(s, dir, "customer"))
-          .writeStream.format("memory").queryName("graft_stream_enrich")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_enrich")
+        drainToMemory(
+          EventStreams.enrichWithDim(stream, Tables(s, dir, "customer")),
+          "graft_stream_enrich", "append")
       }
     },
 
@@ -286,14 +276,12 @@ object StreamingOps {
         val stream = s.readStream.schema(schema)
           .parquet(EventStreams.streamableDir(s"$dir/documents.parquet"))
           .filter(col("doc_id") >= DedupOps.IncrementalSplit)
-        val q = DedupOps.paragraphHashes(stream)
-          .join(corpusIdx, Seq("h"), "left_semi")
-          .select(col("doc_id"))
-          .dropDuplicates("doc_id")
-          .writeStream.format("memory").queryName("graft_stream_screen")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_screen")
+        drainToMemory(
+          DedupOps.paragraphHashes(stream)
+            .join(corpusIdx, Seq("h"), "left_semi")
+            .select(col("doc_id"))
+            .dropDuplicates("doc_id"),
+          "graft_stream_screen", "append")
       }
     },
 
@@ -320,17 +308,14 @@ object StreamingOps {
         // bucket COUNTS are order-insensitive over the same multiset,
         // so the maintained-sketch property needs >1 trigger, not 4
         val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream
-          .select(posexplode(EventAnalytics.cmBuckets(col("user_id")))
-            .as(Seq("i", "bucket")))
-          .groupBy(col("i"), col("bucket"))
-          .agg(count(lit(1)).as("c"))
-          .writeStream.format("memory").queryName("graft_stream_cm")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_cm")
+        val stream = filePerTrigger(s, ev.schema, inDir)
+        drainToMemory(
+          stream
+            .select(posexplode(EventAnalytics.cmBuckets(col("user_id")))
+              .as(Seq("i", "bucket")))
+            .groupBy(col("i"), col("bucket"))
+            .agg(count(lit(1)).as("c")),
+          "graft_stream_cm", "complete")
       }
     },
 
@@ -364,17 +349,14 @@ object StreamingOps {
         // claim is about merging into a PREVIOUSLY-MERGED board, so
         // the gate keeps two real merge steps (triggers 2 and 3)
         val inDir = EventStreams.stagedParquet(ev, 3)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        val stream = filePerTrigger(s, ev.schema, inDir)
         var board = Array.empty[(Long, Long)]
-        val q = stream
+        runAvailableNow(stream
           .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
           .writeStream.outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             board = topkBoardMerge(board.toSeq, batch, k)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         import s.implicits._
         board.toSeq.toDF("user_id", "cnt")
           .withColumn("rnk", row_number().over(
@@ -406,14 +388,10 @@ object StreamingOps {
         // sf0.1 best-of-5 2.22 s at probe 0.45 (≈2.0 normalized) vs
         // the r17 record's 2.39 at 0.41.
         val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.funnelStream(
-          stream.as[EventStreams.FunnelEvent])
-          .writeStream.format("memory").queryName("graft_stream_funnel")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_funnel")
+        val stream = filePerTrigger(s, ev.schema, inDir)
+        drainToMemory(
+          EventStreams.funnelStream(stream.as[EventStreams.FunnelEvent]),
+          "graft_stream_funnel", "append")
           .agg(count(lit(1)).as("n_users"),
             count(col("s1")).as("n_signup"),
             count(col("s2")).as("n_view_after_signup"),
@@ -444,14 +422,11 @@ object StreamingOps {
           // state carry stays exercised: journeys still straddle the
           // slice boundary and the punctuation trigger.
           val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          val q = EventStreams.funnelStreamTws(
-            stream.as[EventStreams.FunnelEvent])
-            .writeStream.format("memory").queryName("graft_stream_funnel_tws")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table("graft_stream_funnel_tws")
+          val stream = filePerTrigger(s, ev.schema, inDir)
+          drainToMemory(
+            EventStreams.funnelStreamTws(
+              stream.as[EventStreams.FunnelEvent]),
+            "graft_stream_funnel_tws", "append")
             .agg(count(lit(1)).as("n_users"),
               count(col("s1")).as("n_signup"),
               count(col("s2")).as("n_view_after_signup"),
@@ -480,11 +455,9 @@ object StreamingOps {
           .filter(col("vec_id") % SimilarityOps.IvfIngestMod
             === SimilarityOps.IvfIngestMod - 1)
           .select(col("vec_id"), col("embedding").as("qv"))
-        val q = SimilarityOps.streamIvfIngest(stream, centConst)
-          .writeStream.format("memory").queryName("graft_stream_ivf_ingest")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_ivf_ingest")
+        drainToMemory(
+          SimilarityOps.streamIvfIngest(stream, centConst),
+          "graft_stream_ivf_ingest", "append")
       }
     },
 
@@ -518,15 +491,13 @@ object StreamingOps {
           .parquet(EventStreams.streamableDir(s"$dir/embeddings.parquet"))
           .filter(col("vec_id") < SimilarityOps.NumProbes)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val q = stream.writeStream
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             SimilarityOps.annSearchStored(batch,
               s.table("graft_ivf_index"), centConst,
               SimilarityOps.NumProbeCells, SimilarityOps.TopK)
               .write.mode("append").parquet(s"$outDir/answers")
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$outDir/answers")
       }
     },
@@ -559,14 +530,11 @@ object StreamingOps {
         // multi-trigger ingest: several files, one append per trigger
         val slice = emb.filter(isIngest).select(col("vec_id"), col("embedding"))
         val inDir = EventStreams.stagedParquet(slice, 4)
-        val stream = s.readStream.schema(slice.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
+        val stream = filePerTrigger(s, slice.schema, inDir)
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             SimilarityOps.appendIvfIndex(batch, centConst, "graft_ivf_live", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         // serve against the UPDATED index — the appended vectors must
         // be reachable candidates or the hashes cannot match
         val probes = emb.filter(col("vec_id") < SimilarityOps.NumProbes)
@@ -646,14 +614,13 @@ object StreamingOps {
         // cluster (a coalesce(1) file here would single-task billions
         // of clustered rows at 100 TB) and a reader always resolves a
         // complete fixed point through the pointer view
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        val stream = filePerTrigger(s, docs.schema, inDir)
         // "state table absent" is only legitimate before the FIRST
         // swap: after that it means a failed swap was somehow
         // swallowed, and restarting the components from empty would
         // be a silent wrong answer — fail the trigger loudly instead
         var stateSwapped = false
-        val q = stream.writeStream
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             import Materialize.PinOps
             require(!stateSwapped || s.catalog.tableExists("graft_stars_live"),
@@ -700,9 +667,7 @@ object StreamingOps {
             // them; re-banding the raw batch would run the whole
             // shingle+hash pass a second time per trigger
             DedupOps.appendBands(nbp, "graft_band_live", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         val finalStars =
           if (s.catalog.tableExists("graft_stars_live"))
             s.table("graft_stars_live")
@@ -741,14 +706,11 @@ object StreamingOps {
         // compaction step keeps something real to do, and the
         // candidate oracle is build-shape-invariant by construction.
         val inDir = EventStreams.stagedParquet(existing, 2)
-        val stream = s.readStream.schema(existing.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
+        val stream = filePerTrigger(s, existing.schema, inDir)
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             DedupOps.appendBandIndex(batch, "graft_band_lc", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         // the maintenance pass a long-running ingest schedules off
         // the serving path: back to one sorted file per bucket, then
         // refresh the optimizer statistics of the rewritten artifact
@@ -782,13 +744,11 @@ object StreamingOps {
         val stream = s.readStream.schema(laid.schema)
           .option("maxFilesPerTrigger", "4")
           .parquet(laidDir)
-        val q = stream.writeStream
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             graft.sources.Manifest.appendFiles(batch, ZOrder.ManifestCols,
               maniDir, ZOrder.ManifestCols.head)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         ZOrder.manifestAnswer(s, laid, s.read.parquet(maniDir), mid)
       }
     },
@@ -816,14 +776,11 @@ object StreamingOps {
         val docs = Tables(s, dir, "documents")
           .select(col("source"), col("doc_id"))
         val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 4)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.sourceCapStream(
-          stream.as[EventStreams.CapDoc], CurationOps.SourceCap)
-          .writeStream.format("memory").queryName("graft_stream_cap")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_cap")
+        val stream = filePerTrigger(s, docs.schema, inDir)
+        drainToMemory(
+          EventStreams.sourceCapStream(
+            stream.as[EventStreams.CapDoc], CurationOps.SourceCap),
+          "graft_stream_cap", "append")
           .select(col("source"), col("doc_id"), col("rnk").cast("int").as("rnk"))
       }
     },
@@ -857,14 +814,10 @@ object StreamingOps {
         // r17 record's 2.43 at 0.41.
         val inDir = EventStreams.timeSlicedDir(
           ev, nSlices = 2, gapUs = EventStreams.SessionGapUs)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.sessionizeStream(
-          stream.as[EventStreams.SessionEvent])
-          .writeStream.format("memory").queryName("graft_stream_sess")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_sess")
+        val stream = filePerTrigger(s, ev.schema, inDir)
+        drainToMemory(
+          EventStreams.sessionizeStream(stream.as[EventStreams.SessionEvent]),
+          "graft_stream_sess", "append")
           .select(col("user_id"), col("session_id"), col("start_us"),
             col("end_us"), col("n_events"))
       }
@@ -939,14 +892,11 @@ object StreamingOps {
           // the richer 4-slice cross-batch session shape is free.
           val inDir = EventStreams.timeSlicedDir(
             ev, nSlices = 4, gapUs = EventStreams.SessionGapUs)
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          val q = EventStreams.sessionizeStreamTws(
-            stream.as[EventStreams.SessionEvent])
-            .writeStream.format("memory").queryName("graft_stream_sess_tws")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table("graft_stream_sess_tws")
+          val stream = filePerTrigger(s, ev.schema, inDir)
+          drainToMemory(
+            EventStreams.sessionizeStreamTws(
+              stream.as[EventStreams.SessionEvent]),
+            "graft_stream_sess_tws", "append")
             .select(col("user_id"), col("session_id"), col("start_us"),
               col("end_us"), col("n_events"))
             // the memory sink outlives the conf restore below: pin
@@ -987,17 +937,14 @@ object StreamingOps {
         var lastApplied = 0L // final-read bookmark only, never a read path
         val changes = WarehouseOps.gateChanges(docs)
         val inDir = EventStreams.orderedSlicedDir(changes, "doc_id", 3)
-        val stream = s.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
+        val stream = filePerTrigger(s, changes.schema, inDir)
+        runAvailableNow(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             WarehouseOps.mergeApplyCdc(
                 s.read.parquet(s"$tmp/snap/$id"), batch)
               .write.mode("overwrite").parquet(s"$tmp/snap/${id + 1}")
             lastApplied = math.max(lastApplied, id + 1)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$tmp/snap/$lastApplied")
           .select(col("doc_id"), col("op"),
             md5(col("payload").cast("binary")).as("content_hash"),
@@ -1026,13 +973,10 @@ object StreamingOps {
         // 2.31 s at probe 0.45 (≈2.1 normalized) vs the r17 record's
         // 2.32 at 0.41 — the smallest of the three trims.
         val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.scd2Stream(stream.as[EventStreams.Scd2Event])
-          .writeStream.format("memory").queryName("graft_stream_scd2")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_scd2")
+        val stream = filePerTrigger(s, ev.schema, inDir)
+        drainToMemory(
+          EventStreams.scd2Stream(stream.as[EventStreams.Scd2Event]),
+          "graft_stream_scd2", "append")
           .select(col("user_id"), col("attr"), col("version"),
             col("valid_from_us"), col("valid_to_us"), col("is_current"))
       }
@@ -1067,16 +1011,13 @@ object StreamingOps {
         // vs the r17 record's 3.33 (hash re-verified at sf0.01).
         val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2,
           gapUs = EventStreams.SessionGapUs + 10000000L, flushSlices = 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventAnalytics.sessionWindowAggOnTime(
-          stream
-            .withColumn("event_time", timestamp_micros(col("ts_us")))
-            .withWatermark("event_time", "0 seconds"))
-          .writeStream.format("memory").queryName("graft_stream_sw")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_sw")
+        val stream = filePerTrigger(s, ev.schema, inDir)
+        drainToMemory(
+          EventAnalytics.sessionWindowAggOnTime(
+            stream
+              .withColumn("event_time", timestamp_micros(col("ts_us")))
+              .withWatermark("event_time", "0 seconds")),
+          "graft_stream_sw", "append")
           .filter(col("session_start_us") <= hi)
       }
     },
@@ -1100,16 +1041,12 @@ object StreamingOps {
         // item hashes — order-insensitive, any slicing of the same
         // multiset lands the same sketch (the q_stream_stats trim)
         val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 2)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.groupBy(col("source"))
-          .agg(hll_sketch_agg(md5(col("text").cast("binary"))).as("sk"))
-          .select(col("source"), hll_sketch_estimate(col("sk")).as("est"))
-          .writeStream.format("memory").queryName("graft_stream_hll")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.hllAudit(s.table("graft_stream_hll"),
-          Tables(s, dir, "documents"))
+        val est = drainToMemory(
+          filePerTrigger(s, docs.schema, inDir).groupBy(col("source"))
+            .agg(hll_sketch_agg(md5(col("text").cast("binary"))).as("sk"))
+            .select(col("source"), hll_sketch_estimate(col("sk")).as("est")),
+          "graft_stream_hll", "complete")
+        EventAnalytics.hllAudit(est, Tables(s, dir, "documents"))
       }
     },
 
@@ -1131,8 +1068,7 @@ object StreamingOps {
         // data-volume work that slicing does not change), so the
         // extra merge-path trigger is free.
         val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 3)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        val stream = filePerTrigger(s, docs.schema, inDir)
         // stateless repartition BEFORE the stateful aggregate: each
         // trigger's slice is ONE file → one scan task, and the
         // trigram explode + MG partial fold run in the partial-agg
@@ -1142,16 +1078,14 @@ object StreamingOps {
         // explicit exchange). Raw rows shuffled are the slice's docs
         // (~KBs); state partitioning (the stateful exchange) is
         // unchanged, so the MG merge tree and its guarantees are too.
-        val q = stream.repartition(s.sparkContext.defaultParallelism)
-          .groupBy(col("source"))
-          .agg(graft.functions.FrequentItems
-            .sketch(s, EventAnalytics.trigrams(s, col("text")),
-                EventAnalytics.FreqK).as("mg"))
-          .writeStream.format("memory").queryName("graft_stream_freq")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.freqAudit(s.table("graft_stream_freq"),
-          Tables(s, dir, "documents"))
+        val mg = drainToMemory(
+          stream.repartition(s.sparkContext.defaultParallelism)
+            .groupBy(col("source"))
+            .agg(graft.functions.FrequentItems
+              .sketch(s, EventAnalytics.trigrams(s, col("text")),
+                  EventAnalytics.FreqK).as("mg")),
+          "graft_stream_freq", "complete")
+        EventAnalytics.freqAudit(mg, Tables(s, dir, "documents"))
       }
     },
 
@@ -1175,16 +1109,12 @@ object StreamingOps {
         // the stream-maintains-the-sketch property needs >1 trigger,
         // not 4.
         val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
         val zs = EventAnalytics.amsZSums
-        val q = stream.groupBy(col("event_type"))
-          .agg(zs.head, zs.tail: _*)
-          .writeStream.format("memory").queryName("graft_stream_ams")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.amsAudit(s.table("graft_stream_ams"),
-          Tables.events(s, dir))
+        val sums = drainToMemory(
+          filePerTrigger(s, ev.schema, inDir).groupBy(col("event_type"))
+            .agg(zs.head, zs.tail: _*),
+          "graft_stream_ams", "complete")
+        EventAnalytics.amsAudit(sums, Tables.events(s, dir))
       }
     },
 
@@ -1207,13 +1137,10 @@ object StreamingOps {
         // 2 slices: complete-mode half-counts are order-insensitive
         // sums — the q_stream_stats trim argument
         val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventAnalytics.driftHalfCounts(stream, lit(mm))
-          .writeStream.format("memory").queryName("graft_stream_drift")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.driftFlags(s.table("graft_stream_drift"))
+        EventAnalytics.driftFlags(drainToMemory(
+          EventAnalytics.driftHalfCounts(
+            filePerTrigger(s, ev.schema, inDir), lit(mm)),
+          "graft_stream_drift", "complete"))
       }
     },
 
@@ -1235,8 +1162,6 @@ object StreamingOps {
         // and the audit's exact columns are batch-side. The
         // stream-maintains-stats property needs >1 trigger, not 4.
         val inDir = EventStreams.stagedParquet(o, 2)
-        val stream = s.readStream.schema(o.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
         val aggs = Analytics.StatsCols.flatMap { case (c, t) =>
           val v = Analytics.statsVal(c, t)
           Seq(count(v).as(s"nn_$c"),
@@ -1244,12 +1169,10 @@ object StreamingOps {
             max(v).cast("string").as(s"max_$c"),
             hll_sketch_agg(v.cast("string")).as(s"sk_$c"))
         }
-        val q = stream.groupBy()
-          .agg(count(lit(1)).as("n"), aggs: _*)
-          .writeStream.format("memory").queryName("graft_stream_stats")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val a = s.table("graft_stream_stats")
+        val a = drainToMemory(
+          filePerTrigger(s, o.schema, inDir).groupBy()
+            .agg(count(lit(1)).as("n"), aggs: _*),
+          "graft_stream_stats", "complete")
         val exact = o.agg(count(lit(1)).as("xn"),
           Analytics.StatsCols.map { case (c, t) =>
             countDistinct(Analytics.statsVal(c, t)).as(s"xndv_$c")

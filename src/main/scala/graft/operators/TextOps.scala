@@ -692,13 +692,6 @@ object TextOps {
     }
   )
 
-  /** DuckDB replica of [[qualityClassifier]]'s keep decision as a
-    * `clf` CTE (doc_id, kept) — the margin chain is written in the
-    * SAME left-associated IEEE order as the Spark expressions, so
-    * the decision is bit-identical (see q_quality_clf's notes).
-    * Shared by the classifier gate's composition consumers (the
-    * ingest decision pipeline) so the exported-model arithmetic
-    * cannot fork. */
   /** Winnowing geometry (Schleimer et al. SIGMOD'03): char
     * [[WinnowK]]-grams, windows of [[WinnowW]] hashes, guarantee
     * threshold t = k+w-1 = 8 shared chars. Packing (hash, pos) as
@@ -873,6 +866,13 @@ object TextOps {
        |              AS BIGINT) AS margin_e6
        |  FROM clff)""".stripMargin
 
+  /** DuckDB replica of [[qualityClassifier]]'s keep decision as a
+    * `clf` CTE (doc_id, kept) — the margin chain is written in the
+    * SAME left-associated IEEE order as the Spark expressions, so
+    * the decision is bit-identical (see q_quality_clf's notes).
+    * Shared by the classifier gate's composition consumers (the
+    * ingest decision pipeline) so the exported-model arithmetic
+    * cannot fork. */
   def clfKeptCte: String =
     s"""clf AS (
        |  SELECT doc_id,

@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming over the `events` table: windowed aggregation
   * with watermarked late-data handling, and stateful gap-based
@@ -70,6 +72,29 @@ object EventStreams {
   final case class SessionState(
       sessionId: Int, startUs: Long, lastUs: Long, nEvents: Long)
 
+  /** The per-event gap-sessionization fold shared by BOTH state APIs
+    * ([[sessionizeStream]]'s fMGWS and [[SessionTwsProcessor]]'s TWS)
+    * so the two cannot drift on the session semantics: null = no
+    * state; nEvents == 0 = a numbering marker left by a timeout
+    * flush; punctuation (event_id < 0) closes without opening; a gap
+    * beyond [[SessionGapUs]] closes and opens the successor. Closed
+    * sessions leave through `emit`. */
+  private def sessionFold(userId: Long, st: SessionState,
+      e: SessionEvent, emit: SessionOut => Unit): SessionState =
+    if (e.event_id < 0) { // punctuation: close, don't open
+      if (st != null && st.nEvents > 0)
+        emit(SessionOut(userId, st.sessionId, st.startUs, st.lastUs,
+          st.nEvents))
+      null
+    } else if (st == null) SessionState(1, e.ts_us, e.ts_us, 1)
+    else if (st.nEvents == 0) // continue numbering past a timeout flush
+      SessionState(st.sessionId, e.ts_us, e.ts_us, 1)
+    else if (e.ts_us - st.lastUs > SessionGapUs) {
+      emit(SessionOut(userId, st.sessionId, st.startUs, st.lastUs,
+        st.nEvents))
+      SessionState(st.sessionId + 1, e.ts_us, e.ts_us, 1)
+    } else st.copy(lastUs = e.ts_us, nEvents = st.nEvents + 1)
+
   /** Streaming gap-sessionization with explicit state: emits each
     * session when the gap closes it, and — the no-punctuation
     * production path — when the EVENT-TIME watermark passes the
@@ -97,29 +122,6 @@ object EventStreams {
     * State per key is O(1) — the canonical mapGroupsWithState shape
     * that survives unbounded keys at scale (state store, not heap).
     */
-  /** The per-event gap-sessionization fold shared by BOTH state APIs
-    * ([[sessionizeStream]]'s fMGWS and [[SessionTwsProcessor]]'s TWS)
-    * so the two cannot drift on the session semantics: null = no
-    * state; nEvents == 0 = a numbering marker left by a timeout
-    * flush; punctuation (event_id < 0) closes without opening; a gap
-    * beyond [[SessionGapUs]] closes and opens the successor. Closed
-    * sessions leave through `emit`. */
-  private def sessionFold(userId: Long, st: SessionState,
-      e: SessionEvent, emit: SessionOut => Unit): SessionState =
-    if (e.event_id < 0) { // punctuation: close, don't open
-      if (st != null && st.nEvents > 0)
-        emit(SessionOut(userId, st.sessionId, st.startUs, st.lastUs,
-          st.nEvents))
-      null
-    } else if (st == null) SessionState(1, e.ts_us, e.ts_us, 1)
-    else if (st.nEvents == 0) // continue numbering past a timeout flush
-      SessionState(st.sessionId, e.ts_us, e.ts_us, 1)
-    else if (e.ts_us - st.lastUs > SessionGapUs) {
-      emit(SessionOut(userId, st.sessionId, st.startUs, st.lastUs,
-        st.nEvents))
-      SessionState(st.sessionId + 1, e.ts_us, e.ts_us, 1)
-    } else st.copy(lastUs = e.ts_us, nEvents = st.nEvents + 1)
-
   def sessionizeStream(events: Dataset[SessionEvent]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     val gapMs = SessionGapUs / 1000
@@ -571,10 +573,9 @@ object EventStreams {
   /** Streaming first-occurrence dedup on (user_id, event_type) with
     * WATERMARKED state eviction (`dropDuplicatesWithinWatermark`): a
     * key occupies the state store only for the watermark delay, which
-    * is the ingest-dedup shape for unbounded streams — contrast
-    * `StreamingTransfer`'s plain `dropDuplicates`, whose per-PK state
-    * is deliberately unbounded for a finite dataset mirror. The
-    * output is projected to the key columns, so the emitted rows are
+    * is the ingest-dedup shape for unbounded streams (a plain
+    * `dropDuplicates` would keep every key forever). The output is
+    * projected to the key columns, so the emitted rows are
     * value-deterministic no matter which duplicate arrives first. */
   def dedupKeysStream(events: DataFrame): DataFrame =
     tsMicros(events)
@@ -597,6 +598,36 @@ object EventStreams {
       col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("user_id"),
         col("c_mktsegment").as("segment"), col("event_type"))
+
+  /** Run `writer` as a one-shot stream: trigger AvailableNow, start,
+    * and block until every input present at start is processed. The
+    * ONE place the engine starts and awaits a stream, so per-trigger
+    * instrumentation or a trigger-level lever has a single hook.
+    * Returns the terminated query (`recentProgress` holds each
+    * trigger's metrics); a failed trigger rethrows here as the
+    * engine's `StreamingQueryException`. */
+  def runAvailableNow[T](writer: DataStreamWriter[T]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** Drain `df` through [[runAvailableNow]] into the in-memory table
+    * `name` under output `mode`, and return that table. */
+  def drainToMemory(df: Dataset[_], name: String, mode: String): DataFrame = {
+    runAvailableNow(
+      df.writeStream.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** `dir`'s parquet files as a stream taking ONE file per trigger —
+    * the multi-batch input shape the staged layouts below
+    * ([[stagedParquet]], [[timeSlicedDir]], [[orderedSlicedDir]],
+    * [[customSlicedDir]]) are written for. */
+  def filePerTrigger(s: SparkSession, schema: StructType,
+      dir: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(dir)
 
   /** Register `dir` for RECURSIVE deletion at JVM exit.
     * `File.deleteOnExit` silently fails on a non-empty directory, so
@@ -650,18 +681,12 @@ object EventStreams {
       java.nio.file.Files.setLastModifiedTime(dest,
         java.nio.file.Files.getLastModifiedTime(f.toPath))
     }
-    def phase(): Unit = {
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val q = sessionize(stream.as[SessionEvent](
-          org.apache.spark.sql.Encoders.product[SessionEvent]))
+    def phase(): Unit = runAvailableNow(
+      sessionize(filePerTrigger(s, ev.schema, inDir.toString)
+          .as[SessionEvent](org.apache.spark.sql.Encoders.product[SessionEvent]))
         .writeStream.format("parquet").option("path", outDir)
         .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .outputMode("append"))
     val (early, late) = src.splitAt(1)
     arrive(early)
     phase()
@@ -869,18 +894,5 @@ object EventStreams {
           }
         })
       .toDF("source", "doc_id", "rnk")
-  }
-
-  /** Drain the still-open sessions recorded in `state` after a run —
-    * exposed so tests can reconcile stream output with batch output. */
-  def runStreamToBatch(
-      spark: SparkSession,
-      input: Dataset[SessionEvent],
-      queryName: String): DataFrame = {
-    val q = sessionizeStream(input).writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming semantics: the stateful flatMapGroupsWithState
   * sessionizer must agree with the declarative batch sessionizer, and
@@ -36,7 +35,8 @@ class EventStreamsSpec extends SparkSpec {
 
     val input = MemoryStream[EventStreams.SessionEvent]
     input.addData(events)
-    val got = EventStreams.runStreamToBatch(spark, input.toDS(), "sess_test")
+    val got = EventStreams.drainToMemory(
+        EventStreams.sessionizeStream(input.toDS()), "sess_test", "append")
       .select($"user_id", $"session_id", $"start_us", $"end_us", $"n_events")
 
     val batch = EventStreams.sessionizeBatch(graft.Tables(spark, dir, "events"))
@@ -86,11 +86,8 @@ class EventStreamsSpec extends SparkSpec {
           org.apache.spark.sql.Dataset[EventStreams.SessionOut]) = {
       val input = MemoryStream[EventStreams.SessionEvent]
       input.addData(b1); input.addData(b2)
-      val q = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      EventStreams.drainToMemory(f(input.toDS()),
+        name, "append").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
     }
@@ -125,7 +122,8 @@ class EventStreamsSpec extends SparkSpec {
     val input = MemoryStream[EventStreams.SessionEvent]
     input.addData(events)
     input.addData(flush) // second micro-batch: end-of-stream punctuation
-    val got = EventStreams.runStreamToBatch(spark, input.toDS(), "sess_punct")
+    val got = EventStreams.drainToMemory(
+        EventStreams.sessionizeStream(input.toDS()), "sess_punct", "append")
       .select($"user_id", $"session_id", $"start_us", $"end_us", $"n_events")
     val batch = EventStreams.sessionizeBatch(graft.Tables(spark, dir, "events"))
 
@@ -142,11 +140,8 @@ class EventStreamsSpec extends SparkSpec {
     val schema = graft.Tables(spark, dir, "events").schema
     val stream = spark.readStream.schema(schema)
       .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-    val q = EventStreams.windowedAgg(stream)
-      .writeStream.format("memory").queryName("win_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("win_test")
+    val streamed = EventStreams.drainToMemory(
+      EventStreams.windowedAgg(stream), "win_test", "complete")
     assert(streamed.count() == batchDf.count())
     assert(streamed.exceptAll(batchDf).count() == 0)
     assert(batchDf.exceptAll(streamed).count() == 0)
@@ -286,10 +281,10 @@ class EventStreamsSpec extends SparkSpec {
     val schema = graft.Tables(spark, dir, "events").schema
     val stream = spark.readStream.schema(schema)
       .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-    val q = EventStreams.enrichWithDim(stream, graft.Tables(spark, dir, "customer"))
-      .writeStream.format("memory").queryName("enrich_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val q = EventStreams.runAvailableNow(
+      EventStreams.enrichWithDim(stream, graft.Tables(spark, dir, "customer"))
+        .writeStream.format("memory").queryName("enrich_test")
+        .outputMode("append"))
     // stateless: the dimension lookup must not allocate state stores
     val state = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
     assert(state.isEmpty, s"expected no state operators, got $state")
@@ -329,11 +324,9 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(ev.filter(_.ts_us <= 100L))
     input.addData(ev.filter(_.ts_us > 100L))
     input.addData(punct)
-    val q = EventStreams.funnelStream(input.toDS())
-      .writeStream.format("memory").queryName("funnel_tie_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("funnel_tie_test").collect()
+    val got = EventStreams.drainToMemory(
+        EventStreams.funnelStream(input.toDS()), "funnel_tie_test", "append")
+      .collect()
       .map(r => r.getLong(0) ->
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))))
       .toMap
@@ -372,11 +365,8 @@ class EventStreamsSpec extends SparkSpec {
       // u7's only event: a stage-less view (no prior signup)
       input.addData(Seq(EventStreams.FunnelEvent(7L, 1000L, 70L, "view")))
       input.addData(Seq(EventStreams.FunnelEvent(7L, 2000L, -1L, null)))
-      val q = f(input.toDS())
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(tag).collect()
+      EventStreams.drainToMemory(f(input.toDS()),
+        tag, "append").collect()
         .map(r => r.getLong(0) ->
           ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3))))).toMap
     }
@@ -411,11 +401,10 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.FunnelEvent(1L, 2000000L, 2L, "view"),
       EventStreams.FunnelEvent(2L, 1000000L, 3L, "view"))
     input.addData(EventStreams.FunnelEvent(2L, 20000000L, 4L, "view"))
-    val q = EventStreams.funnelStream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("funnel_timeout_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("funnel_timeout_test").collect()
+    val rows = EventStreams.drainToMemory(
+        EventStreams.funnelStream(input.toDS(), quietUs = 5000000L),
+        "funnel_timeout_test", "append")
+      .collect()
       .map(r => r.getLong(0) ->
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))))
     assert(rows.count(_._1 == 1L) == 1,
@@ -441,11 +430,10 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(EventStreams.FunnelEvent(2L, 20000000L, 2L, "view"))
     input.addData(EventStreams.FunnelEvent(1L, 30000000L, -1L, "punct"),
       EventStreams.FunnelEvent(2L, 60000000L, 3L, "view"))
-    val q = EventStreams.funnelStream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("funnel_punct_after_timeout")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val u1 = spark.table("funnel_punct_after_timeout").collect()
+    val u1 = EventStreams.drainToMemory(
+        EventStreams.funnelStream(input.toDS(), quietUs = 5000000L),
+        "funnel_punct_after_timeout", "append")
+      .collect()
       .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)),
         Option(r.get(3)))).filter(_._1 == 1L)
     assert(u1.length == 1,
@@ -604,11 +592,8 @@ class EventStreamsSpec extends SparkSpec {
       assert(screen.queryExecution.analyzed.collectLeaves().exists(
         _.toString.contains("para_index_test")),
         screen.queryExecution.analyzed)
-      val q = screen
-        .writeStream.format("memory").queryName("screen_test")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val out = spark.table("screen_test").collect().map(_.getLong(0)).toSet
+      val out = EventStreams.drainToMemory(screen,
+        "screen_test", "append").collect().map(_.getLong(0)).toSet
       assert(out == Set(10L, 12L))
       // the probe join's STORED side needs no exchange: its bucketed
       // layout replaces the shuffle (batch twin of the same join — the
@@ -744,14 +729,11 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(ev.filter(_.ts_us <= 100L))
     input.addData(ev.filter(_.ts_us > 100L))
     input.addData(punct)
-    val q = EventStreams.scd2Stream(input.toDS())
-      .writeStream.format("memory").queryName("scd2_tie_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) -1L else r.getLong(4), r.getBoolean(5))
-    val got = spark.table("scd2_tie_test").collect().map(key).toSet
+    val got = EventStreams.drainToMemory(EventStreams.scd2Stream(input.toDS()),
+      "scd2_tie_test", "append").collect().map(key).toSet
     assert(got == Set(
       (1L, "A", 1L, 10L, 130L, false),
       (1L, "B", 2L, 130L, 140L, false),
@@ -781,11 +763,10 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Scd2Event(1L, 2000000L, 2L, "B"),
       EventStreams.Scd2Event(2L, 1000000L, 3L, "A"))
     input.addData(EventStreams.Scd2Event(2L, 20000000L, 4L, "A"))
-    val q = EventStreams.scd2Stream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("scd2_timeout_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("scd2_timeout_test").collect()
+    val rows = EventStreams.drainToMemory(
+        EventStreams.scd2Stream(input.toDS(), quietUs = 5000000L),
+        "scd2_timeout_test", "append")
+      .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getBoolean(5)))
     // u1: the A->B change closed version 1 normally; the timeout then
@@ -833,11 +814,8 @@ class EventStreamsSpec extends SparkSpec {
           org.apache.spark.sql.Dataset[EventStreams.FunnelOut]) = {
       val input = MemoryStream[EventStreams.FunnelEvent]
       input.addData(b1); input.addData(b2)
-      val q = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      EventStreams.drainToMemory(f(input.toDS()),
+        name, "append").collect()
         .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)),
           Option(r.get(3)))).toSet
     }
@@ -875,13 +853,10 @@ class EventStreamsSpec extends SparkSpec {
       // "hot" is heavy in both, the tail differs per batch
       input.addData(("s", Seq.fill(30)("hot") ++ (0 to 9).map("a" + _)))
       input.addData(("s", Seq.fill(20)("hot") ++ (0 to 9).map("b" + _)))
-      val q = input.toDS().toDF("source", "toks")
-        .groupBy(col("source"))
-        .agg(graft.functions.FrequentItems.sketch(col("toks"), 4).as("mg"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect().map { r =>
+      EventStreams.drainToMemory(input.toDS().toDF("source", "toks")
+          .groupBy(col("source"))
+          .agg(graft.functions.FrequentItems.sketch(col("toks"), 4).as("mg")),
+        name, "complete").collect().map { r =>
         val mg = r.getStruct(1)
         val items = mg.getMap[String, Long](1)
         (r.getString(0), (mg.getLong(0), items.contains("hot")))
@@ -922,11 +897,8 @@ class EventStreamsSpec extends SparkSpec {
       input.addData(
         EventStreams.SessionEvent(1L, 9000000000L, -1L),
         EventStreams.SessionEvent(2L, 9000000000L, -1L))
-      val q = EventStreams.sessionizeStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      EventStreams.drainToMemory(EventStreams.sessionizeStream(input.toDS()),
+        name, "append").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
     }
@@ -980,19 +952,14 @@ class EventStreamsSpec extends SparkSpec {
     // fault-tolerant FILE sink, exactly as a production redeploy would
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_cp_out").toString
-    def phase(): Unit = {
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val q = EventStreams.sessionizeStream(
-        stream.as[EventStreams.SessionEvent])
+    def phase(): Unit = EventStreams.runAvailableNow(
+      EventStreams.sessionizeStream(
+        EventStreams.filePerTrigger(spark, ev.schema, inDir)
+          .as[EventStreams.SessionEvent])
         .writeStream.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .outputMode("append"))
     def read(): Array[(Long, Int, Long, Long, Long)] =
       spark.read.parquet(outDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
@@ -1138,18 +1105,16 @@ class EventStreamsSpec extends SparkSpec {
     // the same ordered-trigger delivery mechanism the gate uses
     val in = graft.streaming.EventStreams.customSlicedDir("late_spec",
       Seq(s1, s2, s3).map(_.toDF("user_id", "ts_us")))
-    val stream = spark.readStream.schema("user_id LONG, ts_us LONG")
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = stream
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", "72 hours")
-      .groupBy(window(col("event_time"), "1 day"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("window.start")).as("ws"), col("n"))
-      .writeStream.format("memory").queryName("late_bounds")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("late_bounds").collect()
+    val stream = EventStreams.filePerTrigger(spark,
+      org.apache.spark.sql.types.StructType.fromDDL("user_id LONG, ts_us LONG"),
+      in)
+    val got = EventStreams.drainToMemory(stream
+        .withColumn("event_time", timestamp_micros(col("ts_us")))
+        .withWatermark("event_time", "72 hours")
+        .groupBy(window(col("event_time"), "1 day"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_micros(col("window.start")).as("ws"), col("n")),
+      "late_bounds", "append").collect()
       .map(r => (r.getLong(0) / day, r.getLong(1))).toMap
     // [d10,d11): on-time row + slice-2 late merge (NOT dropped), the
     // slice-3 row dropped -> 2. Emitted because end d11 <= final wm.
@@ -1217,5 +1182,70 @@ class EventStreamsSpec extends SparkSpec {
     assert(engineDrops == predicted,
       s"engine counted $engineDrops watermark-dropped state rows, the " +
         s"oracle rule predicts $predicted distinct dropped windows")
+  }
+
+  test("runAvailableNow drains a staged input one file per trigger and " +
+    "returns the terminated query") {
+    val df = spark.range(0, 300).toDF("id")
+    val inDir = EventStreams.stagedParquet(df, 3)
+    val files = new java.io.File(inDir).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files == 3, s"fixture staged $files files, not 3")
+    val q = EventStreams.runAvailableNow(
+      EventStreams.filePerTrigger(spark, df.schema, inDir)
+        .writeStream.format("memory").queryName("runner_slices")
+        .outputMode("append"))
+    assert(!q.isActive && q.exception.isEmpty)
+    val rows = q.recentProgress.map(_.numInputRows).filter(_ > 0)
+    assert(rows.length == 3,
+      s"expected one non-empty trigger per staged file: ${rows.mkString(",")}")
+    assert(rows.sum == 300L)
+    assert(spark.table("runner_slices").count() == 300L)
+  }
+
+  test("a failing foreachBatch body surfaces from runAvailableNow as a " +
+    "StreamingQueryException carrying the original cause, and no " +
+    "stream stays active") {
+    val df = spark.range(0, 10).toDF("id")
+    val inDir = EventStreams.stagedParquet(df, 1)
+    val boom = new IllegalStateException("planted trigger failure")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.runAvailableNow(
+        EventStreams.filePerTrigger(spark, df.schema, inDir).writeStream
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            (throw boom): Unit
+          })
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(_ eq boom),
+      s"original cause lost: ${causes.map(_.getClass.getName).mkString(" <- ")}")
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("no file in src/main starts or awaits a stream outside " +
+    "EventStreams.runAvailableNow") {
+    // one hook point for per-trigger phases and trigger levers: any
+    // new AvailableNow start/await copy elsewhere fails here. A
+    // thread pool's timed await (Concurrent) is not a stream.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} is not a directory")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val streamCall =
+      """Trigger\.AvailableNow|(?<!pool)\.awaitTermination\(""".r
+    val hits = for {
+      f <- files(root) if f.getName != "EventStreams.scala"
+      (line, i) <- java.nio.file.Files.readString(f.toPath).split("\n")
+        .zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if streamCall.findFirstIn(code.split("//").head).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: $code"
+    assert(files(root).exists(_.getName == "EventStreams.scala"))
+    assert(hits.isEmpty,
+      "stream start/await outside the runner:\n" + hits.mkString("\n"))
   }
 }
