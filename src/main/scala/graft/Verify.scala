@@ -24,7 +24,8 @@ object Verify {
       if (wanted.isEmpty) outDirArg
       else s"${outDirArg.stripSuffix("/")}_subset"
     if (wanted.nonEmpty)
-      System.err.println(s"[verify] subset mode -> $outDir")
+      System.err.println(s"[verify] subset mode -> $outDir; compare with: " +
+        s"python3 scripts/check.py $sfDir $outDir")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => wanted.isEmpty || wanted(name) }

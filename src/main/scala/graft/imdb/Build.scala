@@ -1,6 +1,9 @@
 package graft.imdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -25,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    participation rows are built 1:1 from principals rows
   *    (database.py:765-811), and one fewer big shuffle each;
   *  - the steps that run Spark jobs eagerly (surrogate ids, the
-  *    bad-JSON probe, [[validate]]'s checks) run concurrently where no
+  *    bad-JSON probe, [[rowCounts]]) run concurrently where no
   *    data dependency orders them, so the driver submits their jobs
   *    together rather than one after another; Spark's task slots still
   *    cap the concurrent tasks.
@@ -41,11 +44,17 @@ object Build {
       tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     // release(): drop the hub-table cache and the surrogate-id pins
     // backing these frames — call once the tables are persisted
-    // elsewhere (warehouse parquet) or superseded by a rebuild; the
-    // TsvReader.CountedRead.release discipline, without which repeated
-    // builds in one session stack MEMORY_AND_DISK copies until
-    // executor eviction
+    // elsewhere (warehouse parquet) or superseded by a rebuild, or
+    // repeated builds in one session stack MEMORY_AND_DISK copies
+    // until executor eviction
   }
+
+  /** The tables [[validate]] checks: two row-count checks against
+    * their source dataset, then the has-data checks. */
+  private val CountChecks = Seq(
+    TitleBasics -> "title", TitlePrincipals -> "participation")
+  private val HasDataChecks = Seq("title_alias_type", "title_type",
+    "genre", "profession", "title_alias", "participation_to_character")
 
   /** Post-build sanity checks, mirroring the reference's warnings —
     * a silent inner-join row loss is exactly what these catch:
@@ -55,33 +64,41 @@ object Build {
     *  - has-data: the key tables (database.py:635), `title_alias`
     *    (database.py:1063) and `participation_to_character`
     *    (database.py:811).
-    * Counts run over the persisted hub tables (or the written
-    * parquet), so this costs a few scans, not a rebuild. The eight
-    * checks run concurrently ([[Concurrent.all]]). Returns the warning
-    * lines in the fixed order above (empty = healthy build); callers
-    * log them.
+    * Reads row counts, not frames, so it runs no Spark job: the
+    * dataset counts the transfer observed, and the table counts either
+    * observed on the warehouse writes ([[writeCounted]]) or taken by
+    * [[rowCounts]]. Returns the warning lines in the fixed order above
+    * (empty = healthy build); callers log them.
     */
-  def validate(datasets: Map[ImdbDataset, DataFrame],
-      normalized: Normalized): Seq[String] = {
-    def checkTableCount(source: DataFrame, sourceName: String,
-        targetName: String): () => Option[String] = () => {
-      val target = normalized(targetName).count()
-      val expected = source.count()
-      Option.when(target != expected)(
-        s"""target table "$targetName" has $target rows but should have """ +
-          s"""$expected same as source table "$sourceName"""")
-    }
-    def checkTableHasData(targetName: String): () => Option[String] = () =>
-      Option.when(normalized(targetName).isEmpty)(
-        s"""target table "$targetName" should contain rows but is empty""")
+  def validate(datasetRows: Map[ImdbDataset, Long],
+      tableRows: Map[String, Long]): Seq[String] =
+    CountChecks.flatMap { case (source, target) =>
+      val (rows, expected) = (tableRows(target), datasetRows(source))
+      Option.when(rows != expected)(
+        s"""target table "$target" has $rows rows but should have """ +
+          s"""$expected same as source table "${source.tableName}"""")
+    } ++ HasDataChecks.flatMap(target =>
+      Option.when(tableRows(target) == 0)(
+        s"""target table "$target" should contain rows but is empty"""))
 
-    // the checks run concurrently; the warnings keep this fixed order
-    Concurrent.all(Seq(
-      checkTableCount(datasets(TitleBasics), "TitleBasics", "title"),
-      checkTableCount(datasets(TitlePrincipals), "TitlePrincipals", "participation")) ++
-      Seq("title_alias_type", "title_type", "genre", "profession",
-        "title_alias", "participation_to_character").map(checkTableHasData)
-    ).flatten
+  /** The row counts [[validate]] reads, counted concurrently
+    * ([[Concurrent.all]]) over the tables themselves: for a build whose
+    * tables were not written with [[writeCounted]]. */
+  def rowCounts(normalized: Normalized): Map[String, Long] = {
+    val checked = CountChecks.map(_._2) ++ HasDataChecks
+    checked.zip(Concurrent.all(checked.map(t => () => normalized(t).count())))
+      .toMap
+  }
+
+  /** Writes `df` as parquet at `out` with its row count observed on
+    * the write itself, and returns the parquet read back with the
+    * known schema (no footer-inference job) together with the count. */
+  private[imdb] def writeCounted(df: DataFrame, out: String): (DataFrame, Long) = {
+    val observation = Observation()
+    df.observe(observation, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(out)
+    (df.sparkSession.read.schema(df.schema).parquet(out),
+      Await.result(observation.future, Duration.Inf).getLong(0))
   }
 
   /** Derives the 15 normalized tables. The hub tables (name/title/

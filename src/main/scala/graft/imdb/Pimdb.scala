@@ -27,6 +27,7 @@ final class Pimdb(val spark: SparkSession,
     onInfo.fold(log.info(msg))(f => f(msg))
 
   private var datasetFrames: Map[ImdbDataset, DataFrame] = Map.empty
+  private var datasetRows: Map[ImdbDataset, Long] = Map.empty
   private var normalized: Option[Build.Normalized] = None
   private var _transferDuplicateCounts: Map[String, Long] = Map.empty
   private var _buildWarnings: Seq[String] = Seq.empty
@@ -43,7 +44,13 @@ final class Pimdb(val spark: SparkSession,
     * register PascalCase views (reference: command.py:179-195).
     * `--drop` semantics are implicit: views/paths are overwritten.
     * Logs the per-dataset duplicate count like the reference does
-    * while streaming rows (one extra key-count aggregate per file).
+    * while streaming rows.
+    *
+    * Each dataset is ONE Spark action ([[TsvReader.readCounted]]):
+    * with a `warehouse`, the parquet write, whose observed metrics
+    * give the duplicate count, the strict checks and the row count
+    * [[build]]'s validation reads; without, the fill of the cache the
+    * view serves from.
     */
   def transfer(
       dataFolder: String,
@@ -52,30 +59,21 @@ final class Pimdb(val spark: SparkSession,
     val loaded = datasets.map { d =>
       val base = s"$dataFolder/${d.datasetName}.tsv"
       val path = if (new java.io.File(s"$base.gz").exists()) s"$base.gz" else base
-      // ONE file scan: dedup and the duplicate metric share a single
-      // windowed pass, cached until written out (TsvReader.readCounted).
       // Progress ticks every ~3 s from task input metrics while the
       // scan runs (reference: command.py:187-191 "processed N rows").
       val counted = TransferProgress.withProgress(
         spark.sparkContext,
         n => info(s"  ${d.datasetName}: processed $n rows")) {
-        TsvReader.readCounted(spark, path, d)
+        TsvReader.readCounted(spark, path, d,
+          warehouse.map(w => s"$w/datasets/${d.tableName}"))
       }
-      var df = counted.frame
       _transferDuplicateCounts += d.datasetName -> counted.duplicateCount
+      datasetRows += d -> counted.rows
       if (counted.duplicateCount > 0)
         info(s"${d.datasetName}: ignored ${counted.duplicateCount} " +
           s"duplicate row(s) with key columns ${d.keyColumns.mkString(", ")}")
-      warehouse.foreach { w =>
-        val out = s"$w/datasets/${d.tableName}"
-        df.write.mode("overwrite").parquet(out) // served from the read cache
-        // re-read: downstream builds scan parquet, not re-parse TSV; with
-        // the known schema, which saves the footer-merging inference job
-        df = spark.read.schema(df.schema).parquet(out)
-        counted.release() // parquet is now the source; drop the cache
-      }
-      df.createOrReplaceTempView(d.tableName)
-      d -> df
+      counted.frame.createOrReplaceTempView(d.tableName)
+      d -> counted.frame
     }.toMap
     datasetFrames ++= loaded
     loaded
@@ -87,9 +85,13 @@ final class Pimdb(val spark: SparkSession,
     * (reference: database.py:925-942) are logged and kept on
     * [[buildWarnings]].
     *
-    * Three phases, in order, each running its independent steps
-    * concurrently: derive ([[Build.apply]]), then with a `warehouse`
-    * the 15 table writes, then the eight checks of [[Build.validate]].
+    * Derive ([[Build.apply]]) runs its independent steps concurrently;
+    * with a `warehouse` the 15 table writes then run concurrently,
+    * each observing its row count on the write itself. The checks of
+    * [[Build.validate]] read row counts: the ones the writes and the
+    * transfer observed, so with a warehouse validation runs no Spark
+    * job; without one, the checked tables are counted
+    * ([[Build.rowCounts]]).
     */
   def build(warehouse: Option[String] = None): Build.Normalized = {
     val missing = ImdbDataset.forNormalized.filterNot(datasetFrames.contains)
@@ -99,23 +101,23 @@ final class Pimdb(val spark: SparkSession,
     // it, or repeated builds in one session stack MEMORY_AND_DISK
     // copies until executor eviction
     normalized.foreach(_.release())
-    var result = Build(datasetFrames)
-    warehouse.foreach { w =>
-      val derived = result
-      try result = Build.Normalized(Concurrent.all(derived.tables.toSeq.map {
-        case (n, df) => () => {
-          val out = s"$w/normalized/$n"
-          df.write.mode("overwrite").parquet(out)
-          n -> spark.read.schema(df.schema).parquet(out)
-        }
-      }).toMap)
-      // parquet now backs every table: the hub cache only served the
-      // writes above (and a failed write leaves nothing to serve)
-      finally derived.release()
+    val derived = Build(datasetFrames)
+    val (result, tableRows) = warehouse match {
+      case Some(w) =>
+        val written =
+          try Concurrent.all(derived.tables.toSeq.map { case (n, df) =>
+            () => n -> Build.writeCounted(df, s"$w/normalized/$n")
+          })
+          // parquet now backs every table: the hub cache only served
+          // the writes above (and a failed write leaves nothing to serve)
+          finally derived.release()
+        (Build.Normalized(written.map { case (n, (df, _)) => n -> df }.toMap),
+          written.map { case (n, (_, rows)) => n -> rows }.toMap)
+      case None => (derived, Build.rowCounts(derived))
     }
     result.registerViews(spark)
     normalized = Some(result)
-    _buildWarnings = Build.validate(datasetFrames, result)
+    _buildWarnings = Build.validate(datasetRows, tableRows)
     _buildWarnings.foreach(log.warn)
     result
   }

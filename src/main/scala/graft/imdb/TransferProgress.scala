@@ -16,18 +16,23 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * wrapped action completes — same cadence contract as the reference
   * (time-gated during the pass, one closing update). The listener is
   * registered only for the duration of the wrapped body and removed
-  * in a finally, so concurrent queries on the session are unaffected.
+  * in a finally, and counts only the body's own jobs (below), so
+  * concurrent queries on the session neither see it nor move it.
   *
   * Counting discipline (what makes the total equal the file's rows):
+  *  - only the wrapped body's jobs count: [[TransferProgress.withProgress]]
+  *    tags the jobs the calling thread submits with a local property
+  *    unique to the call, and `onJobStart` skips every job without that
+  *    tag, so a job another thread runs meanwhile (a query, a second
+  *    transfer) never adds its input rows;
   *  - records accumulate PER JOB and the reported total is the MAX
-  *    across jobs. Under the wrapper the header-name inference job
-  *    (spark.read.csv's take(1) — DictReader column mapping needs the
-  *    header, so this job is structural) reads one record, the scan
-  *    action reads the whole file, and any follow-up job over the
-  *    cached result re-reads at most the same rows as cache input —
-  *    so the max IS the file's row count, immune to both the 1-row
-  *    header job (which a "first job wins" rule would latch onto and
-  *    report 1 forever) and to double-counting cache re-reads;
+  *    across jobs. Under the wrapper, [[TsvReader.readCounted]]'s one
+  *    action reads the file in its shuffle map stage (the header is
+  *    read on the driver, so there is no 1-row inference job), its
+  *    write or cache fill reads shuffle output (no input records), and
+  *    any follow-up job over a cached result re-reads at most the same
+  *    rows as cache input — so the max IS the file's row count, immune
+  *    to double-counting cache re-reads;
   *  - only successfully completed tasks count — a failed or
   *    speculative attempt's rows are re-read by its retry.
   *
@@ -43,9 +48,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * long add per task); nothing is collected from executors beyond the
   * metrics Spark already ships with task completion.
   */
-final class TransferProgress(
+final class TransferProgress private (
+    tag: String,
     indicateProgress: Long => Unit,
-    secondsBetween: Double = 3.0) extends SparkListener {
+    secondsBetween: Double) extends SparkListener {
 
   @volatile private var lastTick = System.nanoTime()
   // stage → job, and a per-job record accumulator (see the counting
@@ -73,8 +79,10 @@ final class TransferProgress(
   }
 
   override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-    jobStart.stageInfos.foreach(si =>
-      stageJob.put(si.stageId, jobStart.jobId))
+    if (Option(jobStart.properties)
+        .exists(_.getProperty(TransferProgress.TagKey) == tag))
+      jobStart.stageInfos.foreach(si =>
+        stageJob.put(si.stageId, jobStart.jobId))
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val metrics = taskEnd.taskMetrics
@@ -95,9 +103,14 @@ final class TransferProgress(
 }
 
 object TransferProgress {
+  /** The local property that tags the jobs of one [[withProgress]] body. */
+  private val TagKey = "graft.transferProgress"
+
   /** Run `body` with a progress listener attached; always fires one
     * final callback with the closing total (reference common.py:262-263
-    * emits a last update after the loop).
+    * emits a last update after the loop). The listener counts the jobs
+    * `body` submits from the calling thread (and from threads it
+    * starts, which inherit the tag), no others.
     *
     * The listener bus is asynchronous: task-end events can still be
     * queued when `body` returns, so the closing total is read only
@@ -108,10 +121,14 @@ object TransferProgress {
       sc: SparkContext,
       indicateProgress: Long => Unit,
       secondsBetween: Double = 3.0)(body: => T): T = {
-    val listener = new TransferProgress(indicateProgress, secondsBetween)
+    val tag = java.util.UUID.randomUUID().toString
+    val listener = new TransferProgress(tag, indicateProgress, secondsBetween)
+    val outer = sc.getLocalProperty(TagKey)
     sc.addSparkListener(listener)
+    sc.setLocalProperty(TagKey, tag)
     try body
     finally {
+      sc.setLocalProperty(TagKey, outer)
       try org.apache.spark.GraftBusDrain(sc)
       finally sc.removeSparkListener(listener)
       listener.fire(listener.rowsRead)

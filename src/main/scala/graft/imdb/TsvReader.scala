@@ -1,9 +1,19 @@
 package graft.imdb
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** IMDb TSV scan: tab-separated, header row, **quoting disabled**
   * (stray `"` is literal data), `\N` null sentinel, strict typing,
@@ -16,38 +26,49 @@ import org.apache.spark.sql.types._
   * partition ids follow file-split offsets, so the id is monotone in
   * file position even when an uncompressed TSV is read in parallel
   * splits (a .gz file is a single split anyway). At 100 TB the dedup
-  * is one shuffle on the key columns.
+  * is one shuffle on the key columns, and a dataset is one Spark action
+  * (see [[TsvReader.readCounted]]).
   */
 object TsvReader {
 
-  /** A [[readCounted]] result: the deduped frame, the reference's
-    * `duplicate_count` transfer metric (common.py:224,255), and a
-    * `release` handle that drops the cached single-scan data once the
-    * caller has written the frame out. */
-  final case class CountedRead(
-      frame: DataFrame, duplicateCount: Long, release: () => Unit)
+  /** A [[readCounted]] result: the deduped frame, its row count, the
+    * reference's `duplicate_count` transfer metric (common.py:224,255),
+    * and a `release` handle that drops the frame's cache once the
+    * caller is done with it (a no-op when the frame reads parquet). */
+  final case class CountedRead(frame: DataFrame, rows: Long,
+      duplicateCount: Long, release: () => Unit)
 
-  /** Read + type + dedup one dataset file (plain .tsv or .tsv.gz),
-    * plus the duplicate metric, in ONE file scan — the
-    * reference counts duplicates inside the same streaming pass that
-    * dedups (common.py:224-255), so the engine must not pay a second
-    * full parse for the metric. The per-key row count rides the same
-    * window partitioning as the first-wins row_number (one shuffle,
-    * one sort) and — like the reference — counts every beyond-first
-    * row regardless of the value filter, which only gates the OUTPUT
-    * rows. The pre-filter representatives are cached memory-and-disk
-    * and the count aggregate is what materializes the cache; the
-    * returned frame serves every downstream action (warehouse write,
-    * view registration) from that cache instead of re-parsing the
-    * TSV. The strict checks' malformed-value counts ride the same
-    * aggregate, each gated on the value filter, so the whole read is
-    * one aggregate job. Call `release()` after the frame is persisted
-    * elsewhere.
+  /** Read + type + dedup one dataset file (plain .tsv or .tsv.gz) in
+    * ONE Spark action, with the duplicate metric, the row count and
+    * the strict checks observed on that action itself — the reference
+    * counts duplicates inside the same streaming pass that dedups
+    * (common.py:224-255), so the engine must not pay a second pass for
+    * the metric.
+    *
+    *  - The header line is read on the driver ([[header]]) and the scan
+    *    gets an all-string schema in header order, so `spark.read.csv`
+    *    runs no header-inference job.
+    *  - The per-key row count rides the same window partitioning as the
+    *    first-wins row_number (one shuffle, one sort). One
+    *    `Dataset.observe` over the deduped representatives, BEFORE the
+    *    value filter, sums the beyond-first rows (like the reference,
+    *    regardless of the filter, which only gates the OUTPUT rows),
+    *    counts the rows the filter keeps, and sums the strict checks'
+    *    malformed values (each gated on the filter).
+    *  - The one action is the sink: with `out`, the parquet write (the
+    *    returned frame reads that parquet back with the known schema,
+    *    so no footer-inference job either); without, a `noop` write
+    *    that fills a memory-and-disk cache the returned frame serves
+    *    from, until `release()`.
+    *  - A strict violation deletes the written directory (or drops the
+    *    cache) before it raises.
     *
     * First occurrence wins BEFORE the value filter (common.py:238-255:
     * a key's first row claims the key even when the filter rejects it,
     * so a later filter-passing duplicate is still dropped).
     *
+    * @param out    parquet directory the dataset is written to, or None
+    *               to keep it cached
     * @param filter optional column → allowed-values map; rows must
     *               match every entry (reference: common.py:241-252)
     * @param strict raise on malformed booleans / unparsable numerics
@@ -58,32 +79,64 @@ object TsvReader {
       spark: SparkSession,
       path: String,
       dataset: ImdbDataset,
+      out: Option[String],
       filter: Map[String, Set[String]] = Map.empty,
       strict: Boolean = true): CountedRead = {
     val byKey = Window.partitionBy(dataset.keyColumns.map(col): _*)
-    val kept = rawWithSeq(spark, path, dataset)
+    val keep = passes(filter)
+    val checks = if (strict) malformedCounts(dataset, keep) else Seq.empty
+    val observation = Observation()
+    val frame = rawWithSeq(spark, path, dataset)
       .withColumn("_rn", row_number().over(byKey.orderBy(col("_seq"))))
       .withColumn("_kn", count(lit(1)).over(byKey))
       .filter(col("_rn") === 1)
-      .drop("_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // rows-beyond-first per key, summed over the PRE-filter kept
-    // representatives (common.py:255 increments before the filter),
-    // plus the strict checks: this action performs the single file
-    // scan and fills the cache
-    val checks = if (strict) malformedCounts(dataset, filter) else Seq.empty
-    val row = kept
-      .agg(coalesce(sum(col("_kn") - 1), lit(0L)).as("dups"), checks: _*)
-      .collect()(0)
+      // rows-beyond-first per key, summed over the PRE-filter kept
+      // representatives (common.py:255 increments before the filter)
+      .observe(observation,
+        coalesce(sum(col("_kn") - 1), lit(0L)).as("duplicates"),
+        count(when(keep, true)).as("rows") +: checks: _*)
+      // the post-dedup half of the reference's row loop: the value-set
+      // filter gates which kept rows are yielded (common.py:241-252),
+      // then those are decoded
+      .filter(keep)
+      .select(dataset.schema.fields.map(decode).toSeq: _*)
+    val (result, release) = out match {
+      case Some(dir) =>
+        frame.write.mode("overwrite").parquet(dir)
+        (spark.read.schema(frame.schema).parquet(dir), () => ())
+      case None =>
+        val cached = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        try cached.write.format("noop").mode("overwrite").save()
+        catch { case NonFatal(e) => cached.unpersist(); throw e }
+        (cached, () => { cached.unpersist(); () })
+    }
+    val row = Await.result(observation.future, Duration.Inf)
     try raiseMalformed(dataset, row)
-    catch { case e: IllegalArgumentException => kept.unpersist(); throw e }
-    // the post-dedup half of the reference's row loop: the value-set
-    // filter gates which kept rows are yielded (common.py:241-252),
-    // then those are decoded
-    CountedRead(
-      kept.filter(passes(filter))
-        .select(dataset.schema.fields.map(decode).toSeq: _*),
-      row.getLong(0), () => { kept.unpersist(); () })
+    catch { case e: IllegalArgumentException =>
+      out.fold(release())(deleteDir(spark, _))
+      throw e
+    }
+    CountedRead(result, row.getLong(1), row.getLong(0), release)
+  }
+
+  /** The header names of a dataset file, read on the driver from its
+    * first line (through the codec of a compressed file). Empty for an
+    * empty file. */
+  private def header(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val file = new Path(path)
+    val raw = file.getFileSystem(conf).open(file)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val lines = new BufferedReader(new InputStreamReader(in, UTF_8))
+    try Option(lines.readLine()).toSeq
+      .flatMap(_.stripSuffix("\r").split("\t", -1))
+    finally lines.close()
+  }
+
+  private def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
   /** The raw scan of [[readCounted]]: raw strings
@@ -94,19 +147,19 @@ object TsvReader {
       spark: SparkSession,
       path: String,
       dataset: ImdbDataset): DataFrame = {
-    val raw = spark.read
+    val names = header(spark, path)
+    val missing = dataset.schema.fieldNames.filterNot(names.contains)
+    require(missing.isEmpty,
+      s"${dataset.datasetName}: TSV is missing key column(s) ${missing.mkString(", ")}")
+    spark.read
+      .schema(StructType(names.map(StructField(_, StringType))))
       .option("sep", "\t")
       .option("header", "true")
       .option("quote", "")          // QUOTE_NONE: stray quotes are data
       .option("nullValue", "\\N")   // the IMDb null sentinel
       .option("mode", "FAILFAST")
       .csv(path)
-
-    val missing = dataset.schema.fieldNames.filterNot(raw.columns.contains)
-    require(missing.isEmpty,
-      s"${dataset.datasetName}: TSV is missing key column(s) ${missing.mkString(", ")}")
-
-    raw.withColumn("_seq", monotonically_increasing_id())
+      .withColumn("_seq", monotonically_increasing_id())
   }
 
   /** The value-set filter as one predicate: the row matches every entry. */
@@ -118,7 +171,7 @@ object TsvReader {
   /** Strict typing as aggregate columns over the raw strings, one per
     * typed column: the count of values that are malformed (booleans
     * must be literally "1"/"0", numerics must parse) on rows the value
-    * filter keeps. A malformed value on a row the filter drops never
+    * filter (`keep`) keeps. A malformed value on a row the filter drops never
     * raises, exactly like the reference, which decodes at insert time
     * (common.py:241-252, database.py:345-351). Kept OUT of the
     * row-level decode: an in-row `raise_error` can be hoisted by
@@ -126,8 +179,7 @@ object TsvReader {
     * fire spuriously.
     */
   private def malformedCounts(dataset: ImdbDataset,
-      filter: Map[String, Set[String]]): Seq[Column] = {
-    val keep = passes(filter)
+      keep: Column): Seq[Column] =
     dataset.schema.fields.toSeq.flatMap { f =>
       val c = col(f.name)
       val malformed = f.dataType match {
@@ -143,13 +195,13 @@ object TsvReader {
       malformed.map(m =>
         sum(when(keep && c.isNotNull && m, 1).otherwise(0)).as(f.name))
     }
-  }
 
   /** Raise like the reference's PimdbError on the first column whose
     * [[malformedCounts]] value is non-zero; `row` is [[readCounted]]'s
-    * aggregate, whose column 0 is the duplicate count. */
+    * observed metrics, whose columns 0 and 1 are the duplicate and row
+    * counts. */
   private def raiseMalformed(dataset: ImdbDataset, row: Row): Unit =
-    (1 until row.length).foreach { i =>
+    (2 until row.length).foreach { i =>
       // sum() over zero rows is null: empty input (e.g. a header-only
       // TSV) is trivially valid
       val bad = if (row.isNullAt(i)) 0L else row.getLong(i)

@@ -81,13 +81,19 @@ object DedupOps {
     * nothing, while a file overwritten in place (even at the same
     * length) is re-read. None when the footer cannot be read (not
     * parquet after all, permissions): the caller falls back to byte
-    * math for that file. */
-  private val rowGroupCounts =
+    * math for that file. The memo holds at most [[RowGroupMemoCap]]
+    * footers: a full memo is emptied before the next new key goes in,
+    * so a long session's memo stays bounded. */
+  private[operators] val rowGroupCounts =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+  private[operators] val RowGroupMemoCap = 1024
   private[operators] def parquetRowGroups(
       spark: org.apache.spark.sql.SparkSession,
-      path: String, len: Long, modified: Long): Option[Long] =
-    try Some(rowGroupCounts.computeIfAbsent((path, len, modified), { _ =>
+      path: String, len: Long, modified: Long): Option[Long] = {
+    val key = (path, len, modified)
+    if (rowGroupCounts.size >= RowGroupMemoCap &&
+        !rowGroupCounts.containsKey(key)) rowGroupCounts.clear()
+    try Some(rowGroupCounts.computeIfAbsent(key, { _ =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(path),
         spark.sparkContext.hadoopConfiguration)
@@ -95,6 +101,7 @@ object DedupOps {
       try r.getRowGroups.size.toLong finally r.close()
     }))
     catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** Small single-file inputs arrive as ONE scan partition; per-doc
     * hashing is CPU-bound, so fan it out to the full core count.

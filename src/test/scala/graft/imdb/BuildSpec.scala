@@ -51,7 +51,7 @@ class BuildSpec extends SparkSpec {
       spark.sparkContext, n => ticks.synchronized { ticks += n },
       secondsBetween = 0.0) {
       val r = TsvReader.readCounted(spark, s"$dataDir/name.basics.tsv",
-        ImdbDataset.NameBasics)
+        ImdbDataset.NameBasics, None)
       try r.frame.count() finally r.release()
     }
     assert(df == 219L)
@@ -59,15 +59,75 @@ class BuildSpec extends SparkSpec {
     assert(ticks.zip(ticks.tail).forall { case (a, b) => a <= b },
       s"totals must be monotone: $ticks")
     // the final callback reports everything the scan read — the whole
-    // FILE, not the 1-row header-name inference job that runs first
-    // under the wrapper (the "first job wins" latch regression: it
-    // reported 1 row for any file)
+    // FILE, not the rows of whichever job ran first under the wrapper
+    // (the "first job wins" latch regression: it reported 1 row for any
+    // file while a 1-row header-inference job ran first)
     val fileRows = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dataDir/name.basics.tsv"))
       .count(_ == '\n'.toByte) - 1 // byte count: fixture has non-UTF8-default bytes
     assert(ticks.last >= fileRows,
       s"final tick ${ticks.last} < file rows $fileRows — progress " +
         "latched onto the wrong job")
+  }
+
+  test("transfer progress counts only the wrapped body's jobs: a job " +
+    "another thread runs meanwhile over more rows leaves the closing " +
+    "total at the file's rows") {
+    val bigger = java.nio.file.Files.createTempFile("graft_bigger", ".txt")
+    java.nio.file.Files.write(bigger,
+      (1 to 5000).map(_.toString).mkString("\n").getBytes("UTF-8"))
+    // started BEFORE the wrapper, so it does not inherit the body's tag
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val other = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val thread = new Thread(() => {
+      release.await()
+      other.set(spark.read.text(bigger.toString).count())
+    })
+    thread.start()
+    val ticks = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val rows = try TransferProgress.withProgress(
+      spark.sparkContext, n => ticks.synchronized { ticks += n },
+      secondsBetween = 0.0) {
+      release.countDown()
+      val r = TsvReader.readCounted(spark, s"$dataDir/name.basics.tsv",
+        ImdbDataset.NameBasics, None)
+      r.release()
+      // the other thread's job runs while the listener is attached
+      thread.join()
+      r.rows
+    } finally thread.join()
+    assert(other.get == 5000L)
+    assert(rows == 219L)
+    val fileRows = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dataDir/name.basics.tsv"))
+      .count(_ == '\n'.toByte) - 1
+    assert(ticks.last == fileRows, ticks.toString)
+  }
+
+  test("one dataset's transfer into a warehouse runs at most 2 Spark jobs " +
+    "and leaves nothing cached") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_one_action")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.catalog.clearCache()
+    val p = Pimdb(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try p.transfer(dataDir, Seq(ImdbDataset.TitleBasics), Some(wh.toString))
+    finally {
+      org.apache.spark.GraftBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(p.transferDuplicateCounts == Map("title.basics" -> 0L))
+    assert(spark.read.parquet(s"$wh/datasets/TitleBasics").count() == 75L)
+    graft.Harness.rmTree(wh)
+    // restore the shared fixture's TitleBasics view
+    pimdb.transfer(dataDir, Seq(ImdbDataset.TitleBasics), Some(warehouse))
   }
 
   test("transfer: all 7 dataset tables with golden counts") {
@@ -242,7 +302,7 @@ class BuildSpec extends SparkSpec {
     "in the same single scan that dedups") {
     val counted = TsvReader.readCounted(spark,
       getClass.getResource("/imdb/name.basics.duplicate.tsv").getPath,
-      ImdbDataset.NameBasics)
+      ImdbDataset.NameBasics, None)
     try {
       assert(counted.duplicateCount == 1L)
       // the deduped frame from the same pass keeps the first occurrence
@@ -263,22 +323,34 @@ class BuildSpec extends SparkSpec {
       "genre" -> tb.limit(0),      // empty key table → has-data warning
       "profession" -> tb, "title_alias" -> tb,
       "participation_to_character" -> tb))
-    val warnings = Build.validate(
+    val wh = java.nio.file.Files.createTempDirectory("graft_validate_wh")
+    // the warnings from count() over the frames, and from the counts
+    // warehouse writes observe
+    def both(datasets: Map[ImdbDataset, org.apache.spark.sql.DataFrame],
+        built: Build.Normalized): Seq[Seq[String]] = {
+      def observed(df: org.apache.spark.sql.DataFrame): Long =
+        Build.writeCounted(df, s"$wh/${java.util.UUID.randomUUID}")._2
+      Seq(
+        Build.validate(datasets.map { case (d, df) => d -> df.count() },
+          Build.rowCounts(built)),
+        Build.validate(datasets.map { case (d, df) => d -> observed(df) },
+          built.tables.map { case (n, df) => n -> observed(df) }))
+    }
+    val warnings = both(
       Map(ImdbDataset.TitleBasics -> tb, ImdbDataset.TitlePrincipals -> tp),
       normalized)
-    // the checks run concurrently, the warnings keep the fixed order
-    // of the checks
-    assert(warnings == Seq(
+    // the warnings keep the fixed order of the checks
+    warnings.foreach(w => assert(w == Seq(
       "target table \"participation\" has 0 rows but should have 2 same " +
         "as source table \"TitlePrincipals\"",
       "target table \"genre\" should contain rows but is empty"),
-      warnings.mkString("; "))
-    val titleShort = Build.validate(
+      w.mkString("; ")))
+    val titleShort = both(
       Map(ImdbDataset.TitleBasics -> tp, ImdbDataset.TitlePrincipals -> tp),
       normalized.copy(tables = normalized.tables ++ Map(
         "title_alias_type" -> tb.limit(0),
         "participation_to_character" -> tb.limit(0))))
-    assert(titleShort == Seq(
+    titleShort.foreach(w => assert(w == Seq(
       "target table \"title\" has 1 rows but should have 2 same as " +
         "source table \"TitleBasics\"",
       "target table \"participation\" has 0 rows but should have 2 same " +
@@ -287,7 +359,8 @@ class BuildSpec extends SparkSpec {
       "target table \"genre\" should contain rows but is empty",
       "target table \"participation_to_character\" should contain rows " +
         "but is empty"),
-      titleShort.mkString("; "))
+      w.mkString("; ")))
+    graft.Harness.rmTree(wh)
   }
 
   test("a build that throws mid-derive releases the hub cache and pins it " +
@@ -298,7 +371,7 @@ class BuildSpec extends SparkSpec {
       "tt10070612\t99\tnm0000647\tactor\t\\N\t[\"Bond\n",
       java.nio.file.StandardOpenOption.APPEND)
     val reads = ImdbDataset.forNormalized.map(d =>
-      TsvReader.readCounted(spark, s"$dir/${d.datasetName}.tsv", d))
+      TsvReader.readCounted(spark, s"$dir/${d.datasetName}.tsv", d, None))
     val datasets = ImdbDataset.forNormalized.zip(reads.map(_.frame)).toMap
     // cluster-safe pins are persisted, so a leaked pin shows as a
     // cache entry just like a leaked hub table
@@ -327,7 +400,7 @@ class BuildSpec extends SparkSpec {
     "leaves a sibling SurrogateIds.assign pin made beforehand") {
     import spark.implicits._
     val reads = ImdbDataset.forNormalized.map(d =>
-      TsvReader.readCounted(spark, s"$dataDir/${d.datasetName}.tsv", d))
+      TsvReader.readCounted(spark, s"$dataDir/${d.datasetName}.tsv", d, None))
     val datasets = ImdbDataset.forNormalized.zip(reads.map(_.frame)).toMap
     def pinnedIds(): Set[Int] =
       spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -12,11 +12,11 @@ class TsvReaderSpec extends SparkSpec {
   private def fixture(name: String): String =
     getClass.getResource(s"/imdb/$name").getPath
 
-  /** `f` over [[TsvReader.readCounted]]'s frame, released after. */
+  /** `f` over [[TsvReader.readCounted]]'s cached frame, released after. */
   private def withRead[T](path: String, dataset: ImdbDataset,
       filter: Map[String, Set[String]] = Map.empty,
       strict: Boolean = true)(f: DataFrame => T): T = {
-    val r = TsvReader.readCounted(spark, path, dataset, filter, strict)
+    val r = TsvReader.readCounted(spark, path, dataset, None, filter, strict)
     try f(r.frame) finally r.release()
   }
 
@@ -133,13 +133,13 @@ class TsvReaderSpec extends SparkSpec {
       "nm1\tSecond Row\t1980\t\\N\tactor\t\\N",
       "nm2\tOther\t\\N\t\\N\twriter\t\\N")
     val counted = TsvReader.readCounted(spark, path, ImdbDataset.NameBasics,
-      filter = Map("primaryProfession" -> Set("no_such_profession")))
+      None, filter = Map("primaryProfession" -> Set("no_such_profession")))
     try {
       assert(counted.duplicateCount == 1L) // counted though nothing is yielded
       assert(counted.frame.count() == 0L)
     } finally counted.release()
 
-    // the strict checks ride the same aggregate, gated on the filter: a
+    // the strict checks ride the same observation, gated on the filter: a
     // malformed value on a row the filter rejects never raises, one on
     // a row the filter keeps raises the per-column error
     val malformed = tempTsv(
@@ -148,7 +148,8 @@ class TsvReaderSpec extends SparkSpec {
       "nm1\tSecond Row\t1980\t\\N\tactor\t\\N",
       "nm2\tOther\t\\N\t\\N\twriter\t\\N")
     val rejected = TsvReader.readCounted(spark, malformed,
-      ImdbDataset.NameBasics, filter = Map("primaryProfession" -> Set("writer")))
+      ImdbDataset.NameBasics, None,
+      filter = Map("primaryProfession" -> Set("writer")))
     try {
       assert(rejected.duplicateCount == 1L)
       assert(rejected.frame.collect().map(_.getAs[String]("nconst")).toSeq ==
@@ -156,11 +157,83 @@ class TsvReaderSpec extends SparkSpec {
     } finally rejected.release()
     val ex = intercept[IllegalArgumentException] {
       TsvReader.readCounted(spark, malformed, ImdbDataset.NameBasics,
-        filter = Map("primaryProfession" -> Set("actor")))
+        None, filter = Map("primaryProfession" -> Set("actor")))
     }
     assert(ex.getMessage ==
       "name.basics: birthYear has 1 malformed value(s) " +
         "(booleans must be 1/0, numerics must parse)", ex.getMessage)
+  }
+
+  test("with a warehouse, a strict violation raises the per-column error " +
+    "and leaves no parquet at the output directory") {
+    val malformed = tempTsv(
+      "tconst\taverageRating\tnumVotes",
+      "tt1\t5.5\t7",
+      "tt2\t6.0\tseven")
+    val out = Files.createTempDirectory("graft_strict_wh").resolve("TitleRatings")
+    val ex = intercept[IllegalArgumentException] {
+      TsvReader.readCounted(spark, malformed, ImdbDataset.TitleRatings,
+        Some(out.toString))
+    }
+    assert(ex.getMessage ==
+      "title.ratings: numVotes has 1 malformed value(s) " +
+        "(booleans must be 1/0, numerics must parse)", ex.getMessage)
+    assert(!Files.exists(out), s"$out was left behind")
+    // the same file without the bad row is written and read back
+    val good = tempTsv("tconst\taverageRating\tnumVotes", "tt1\t5.5\t7")
+    val r = TsvReader.readCounted(spark, good, ImdbDataset.TitleRatings,
+      Some(out.toString))
+    assert((r.rows, r.duplicateCount) == ((1L, 0L)))
+    assert(r.frame.collect().map(_.getString(0)).toSeq == Seq("tt1"))
+    assert(spark.read.parquet(out.toString).count() == 1L)
+  }
+
+  test("a header-only TSV reads as 0 rows and 0 duplicates, cached or " +
+    "written") {
+    val path = tempTsv("tconst\taverageRating\tnumVotes")
+    val cached = TsvReader.readCounted(spark, path, ImdbDataset.TitleRatings, None)
+    try {
+      assert((cached.rows, cached.duplicateCount) == ((0L, 0L)))
+      assert(cached.frame.count() == 0L)
+    } finally cached.release()
+    val out = Files.createTempDirectory("graft_empty_wh").resolve("TitleRatings")
+    val written = TsvReader.readCounted(spark, path, ImdbDataset.TitleRatings,
+      Some(out.toString))
+    assert((written.rows, written.duplicateCount) == ((0L, 0L)))
+    assert(written.frame.count() == 0L)
+    assert(written.frame.columns.toSeq ==
+      Seq("tconst", "averageRating", "numVotes"))
+  }
+
+  test("a .tsv.gz file's header is read through its codec: columns map by " +
+    "name, extra columns are ignored, a missing one is named") {
+    def gz(lines: String*): String = {
+      val f = Files.createTempFile("graft", ".tsv.gz")
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(f))
+      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+      f.toString
+    }
+    // header columns in a different order than the schema, plus an
+    // extra one: mapping is by header name, like csv.DictReader
+    val path = gz(
+      "numVotes\textra\ttconst\taverageRating",
+      "7\tx\ttt1\t5.5",
+      "9\ty\ttt1\t6.5",
+      "3\tz\ttt2\t\\N")
+    val r = TsvReader.readCounted(spark, path, ImdbDataset.TitleRatings, None)
+    try {
+      assert((r.rows, r.duplicateCount) == ((2L, 1L)))
+      assert(r.frame.orderBy("tconst").collect().map(row =>
+        (row.getString(0), row.getFloat(1), row.getInt(2))).toSeq ==
+        Seq(("tt1", 5.5f, 7), ("tt2", 0.0f, 3)))
+    } finally r.release()
+    val ex = intercept[IllegalArgumentException] {
+      TsvReader.readCounted(spark, gz("tconst\tnumVotes", "tt1\t7"),
+        ImdbDataset.TitleRatings, None)
+    }
+    assert(ex.getMessage ==
+      "requirement failed: title.ratings: TSV is missing key column(s) " +
+        "averageRating", ex.getMessage)
   }
 
   test("property: typed decode matches a reference model over random rows " +

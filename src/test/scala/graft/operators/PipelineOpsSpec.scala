@@ -120,6 +120,39 @@ class PipelineOpsSpec extends SparkSpec {
     } finally graft.Harness.rmTree(dir)
   }
 
+  test("the row-group memo stays within its cap and still counts " +
+    "correctly once filled past it") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_rg_cap")
+    def file(name: String, blockSize: String): (String, Long) = {
+      val out = dir.resolve(name)
+      spark.range(20000).toDF("doc_id")
+        .withColumn("pad", org.apache.spark.sql.functions.lpad(
+          col("doc_id").cast("string"), 200, "x"))
+        .coalesce(1).write.option("parquet.block.size", blockSize)
+        .parquet(out.toString)
+      val part = graft.Harness.listDir(out)
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      (part.toString, Files.size(part))
+    }
+    try {
+      val (many, manyLen) = file("many", "4096")
+      val (one, oneLen) = file("one", (128L << 20).toString)
+      val manyGroups = DedupOps.parquetRowGroups(spark, many, manyLen, 1L).get
+      assert(manyGroups > 1)
+      // distinct modification times make distinct keys over one file
+      (0 to DedupOps.RowGroupMemoCap + 10).foreach { m =>
+        assert(DedupOps.parquetRowGroups(spark, one, oneLen, m.toLong)
+          .contains(1L))
+        assert(DedupOps.rowGroupCounts.size <= DedupOps.RowGroupMemoCap)
+      }
+      // the first key was emptied out with the rest, and reads again
+      assert(DedupOps.parquetRowGroups(spark, many, manyLen, 1L)
+        .contains(manyGroups))
+      assert(DedupOps.parquetRowGroups(spark, one, oneLen, 0L).contains(1L))
+    } finally graft.Harness.rmTree(dir)
+  }
+
   test("spreadPairs spreads a near-duplicate hub key instead of " +
     "funnelling it to one partition") {
     import spark.implicits._
