@@ -2,25 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One verifiable operator: a Spark implementation plus (when the
-  * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle
-  * query over the same parquet tables. The driver compares results
-  * column-sorted and hashed, so every computed column must carry the
-  * SAME alias on both sides.
+/** One verifiable operator: a Spark implementation plus an equivalent
+  * DuckDB oracle query over the same parquet tables. The driver
+  * compares results column-sorted and hashed, so every computed column
+  * must carry the SAME alias on both sides.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def sql(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
-
-  /** Non-SQL-expressible op → driver records a weaker rows>0 check. */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, fn, oracle)
 
   /** JSON string escape shared by the Bench/Verify record writers:
     * backslash, quote, and ALL control chars (<0x20) — a tab or CR in

@@ -58,8 +58,8 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    modules.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    modules.map(q => q.name -> q.oracle).toMap
 }

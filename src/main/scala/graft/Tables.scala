@@ -72,13 +72,6 @@ object Tables {
     }
   }
 
-  /** Register every table as a temp view for `spark.sql` passthrough —
-    * the analog of the reference's `pimdb query` entry point
-    * (reference: command.py:223-237).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** Epoch-micros expression for an event `ts` column, covering every
     * encoding the driver's testdata has shipped so far:
     *

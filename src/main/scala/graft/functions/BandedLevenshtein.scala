@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Levenshtein}
-import org.apache.spark.sql.functions.call_function
 
 /** Column access to Spark's THRESHOLDED Levenshtein — the banded
   * O(len·τ) dynamic program (Ukkonen's band) instead of the full
@@ -38,14 +37,6 @@ object BandedLevenshtein {
           "docroot" -> "https://spark.apache.org/docs/latest"))
     Levenshtein(exprs(0), exprs(1), Some(exprs(2)))
   }
-
-  /** Idempotent per-session registration; also available to SQL text
-    * as `graft_levenshtein_capped(a, b, tau)`. Check-then-create so
-    * repeated registration (every Column call) doesn't WARN
-    * "replaced a previously registered function" into the tail; the
-    * race is benign — both racers register the identical builder. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** `levenshtein(a, b)` if it is <= tau (per row), else -1. */
   def apply(spark: SparkSession, a: Column, b: Column, tau: Column): Column = {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -135,11 +134,6 @@ object BpeMergeStep {
           "docroot" -> "https://spark.apache.org/docs/latest"))
     BpeMergeStep(exprs(0), exprs(1), exprs(2))
   }
-
-  /** Idempotent per-session registration (check-then-create — the
-    * replace path WARNs per call). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the caller's session AND the
     * default session (call_function resolves at analysis time against

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -135,16 +134,6 @@ object CharNgrams {
     }
     CharNgrams(exprs(0), n)
   }
-
-  /** Idempotent per-session registration; also available to SQL text
-    * as `graft_char_ngrams(s, n)`. Check-then-create, not
-    * unconditional createOrReplace — the replace path logs a
-    * "replaced a previously registered function" WARN per call, the
-    * r16 bench-tail warning wall (the WinnowSelect pattern; the
-    * check-then-act race is benign, both racers register the
-    * identical builder). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the session first, plus the
     * default session as a fallback (see [[WordNgrams.apply]]:

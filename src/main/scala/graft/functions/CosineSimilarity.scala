@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: cosine similarity of two float vectors
@@ -113,7 +112,7 @@ object CosineSimilarity {
   /** Expression builder with an arity guard: `graft_cosine_sim(a)` in
     * SQL raises Spark's standard WRONG_NUM_ARGS analysis error naming
     * the function, instead of an IndexOutOfBoundsException from a
-    * blind `exprs(1)`. Shared by [[register]] and
+    * blind `exprs(1)`. Shared by [[apply]] and
     * [[graft.plans.GraftExtensions]]. */
   def builder(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)
@@ -127,17 +126,7 @@ object CosineSimilarity {
     CosineSimilarity(exprs(0), exprs(1))
   }
 
-  /** Idempotent per-session registration; also makes the function
-    * available to SQL text as `graft_cosine_sim(a, b)`.
-    * Check-then-create instead of unconditional createOrReplace: the
-    * replace path logs a "replaced a previously registered function"
-    * WARN per call, and the Column entry point registers on every
-    * call — a warning wall in any tail. The check-then-act race is
-    * benign (both racers register the identical builder). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
-
-  /** Column entry point — requires [[register]] on the session first. */
+  /** Column entry point — registers through [[GraftFunctions.call]]. */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
     GraftFunctions.call(spark, FunctionName, builder)(a, b)
   }

@@ -123,8 +123,8 @@ object FrequentItems {
     // — call_function resolves at analysis time against the
     // DataFrame's session, which need not be the one active here
     // (the r17 WordNgrams/TextVec lesson, applied from birth).
-    SparkSession.getActiveSession.foreach(register)
-    SparkSession.getDefaultSession.foreach(register)
+    (SparkSession.getActiveSession ++ SparkSession.getDefaultSession)
+      .foreach(GraftFunctions.register(_, FunctionName, builder))
     call_function(FunctionName, items,
       org.apache.spark.sql.functions.lit(k))
   }
@@ -160,11 +160,6 @@ object FrequentItems {
     }
     MisraGriesAgg(exprs.head, k)
   }
-
-  /** Idempotent per-session registration (check-then-create — the
-    * replace path WARNs per call). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 }
 
 /** Native Misra–Gries aggregation: the [[FrequentItems.MGBuf]] summary

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions.call_function
   *     resolves at analysis time against the consuming DataFrame's
   *     session, which need not be the construction-time one — the r17
   *     WordNgrams/TextVec lesson), then build the unresolved call;
-  *   - [[registerAll]] — the whole inventory on one session (fresh
-  *     sessions, the extensions bundle, specs).
+  *   - [[all]] — the whole inventory, which the
+  *     [[graft.plans.GraftExtensions]] bundle injects for SQL text.
   *
   * GraftFunctionsSpec pins the inventory against a source scan of
   * `FunctionName` constants, so a twelfth function object that forgets
@@ -72,8 +72,4 @@ object GraftFunctions {
       .foreach(register(_, name, builder))
     call_function(name, args: _*)
   }
-
-  /** The whole inventory on one session. */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) => register(spark, name, builder) }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -125,14 +124,6 @@ object MinhashSignature {
     }
     MinhashSignature(exprs(0), slots)
   }
-
-  /** Idempotent per-session registration; also available to SQL text
-    * as `graft_minhash_sig(shingles, slots)`. Check-then-create so
-    * repeated registration (every Column call) doesn't WARN
-    * "replaced a previously registered function" into the tail; the
-    * race is benign — both racers register the identical builder. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the session first. */
   def apply(spark: SparkSession, shingles: Column, slots: Int): Column = {

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: the nearest centroid of a float vector
@@ -183,12 +183,6 @@ object NearestCentroid {
     NearestCentroid(exprs(0), ids.toIndexedSeq,
       cvs.map(_.toIndexedSeq).toIndexedSeq)
   }
-
-  /** Idempotent per-session registration (check-then-create — the
-    * WinnowSelect warn-wall discipline); also available to SQL text
-    * as `graft_nearest_centroid(vec, ids, cvs)`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the caller's session plus the
     * default session (call_function resolves at analysis time against

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,10 +87,6 @@ object ReservoirSample {
     }
     ReservoirSampleAgg(exprs.head, k, seed)
   }
-
-  /** Idempotent per-session registration (check-then-create). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — the native aggregate (the udaf Aggregator
     * it replaced, `ReservoirSampleUdaf`, stays in the test tree as the

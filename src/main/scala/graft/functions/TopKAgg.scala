@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Bounded best-first (ord, id) buffer backed by primitive arrays —
@@ -200,12 +199,6 @@ object TopKAgg {
     }
     TopKAgg(exprs(0), exprs(1), k)
   }
-
-  /** Idempotent per-session registration (check-then-create — the
-    * replace path WARNs per call); the analyzer wraps the returned
-    * AggregateFunction in a Complete AggregateExpression at use. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the caller's session AND the
     * default session (call_function resolves at analysis time against

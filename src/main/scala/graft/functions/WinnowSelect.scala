@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -150,16 +149,6 @@ object WinnowSelect {
     WinnowSelect(exprs(0), lit(exprs(1), "k"), lit(exprs(2), "w"),
       lit(exprs(3), "posBits"))
   }
-
-  /** Idempotent per-session registration; also available to SQL text
-    * as `graft_winnow_select(text, k, w, posBits)`. Check-then-create
-    * instead of unconditional createOrReplace: the replace path logs
-    * a "replaced a previously registered function" WARN per call, and
-    * the bench sweep calls this once per winnow query — a warning
-    * wall burying real signals in the bench tail. The check-then-act
-    * race is benign (both racers register the identical builder). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the session first. */
   def apply(spark: SparkSession, text: Column, k: Int, w: Int,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -132,12 +131,6 @@ object WordNgrams {
     }
     WordNgrams(exprs(0), n)
   }
-
-  /** Idempotent per-session registration (check-then-create — the
-    * WinnowSelect warn-wall discipline); also available to SQL text
-    * as `graft_word_ngrams(toks, n)`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.register(spark, FunctionName, builder)
 
   /** Column entry point — registers on the session first.
     * `call_function` resolves at ANALYSIS time against the

@@ -3,7 +3,7 @@ package graft.imdb
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -40,7 +40,7 @@ object Build {
   final case class Normalized(tables: Map[String, DataFrame],
       release: () => Unit = () => ()) {
     def apply(name: String): DataFrame = tables(name)
-    def registerViews(spark: SparkSession): Unit =
+    def registerViews(): Unit =
       tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     // release(): drop the hub-table cache and the surrogate-id pins
     // backing these frames — call once the tables are persisted

@@ -56,9 +56,13 @@ final class Pimdb(val spark: SparkSession,
       dataFolder: String,
       datasets: Seq[ImdbDataset] = ImdbDataset.all,
       warehouse: Option[String] = None): Map[ImdbDataset, DataFrame] = {
+    val conf = spark.sessionState.newHadoopConf()
     val loaded = datasets.map { d =>
       val base = s"$dataFolder/${d.datasetName}.tsv"
-      val path = if (new java.io.File(s"$base.gz").exists()) s"$base.gz" else base
+      // through the folder's own FileSystem, so a URI folder
+      // (file://…, hdfs://…) finds its .gz files too
+      val gz = new org.apache.hadoop.fs.Path(s"$base.gz")
+      val path = if (gz.getFileSystem(conf).exists(gz)) s"$base.gz" else base
       // Progress ticks every ~3 s from task input metrics while the
       // scan runs (reference: command.py:187-191 "processed N rows").
       val counted = TransferProgress.withProgress(
@@ -115,7 +119,7 @@ final class Pimdb(val spark: SparkSession,
           written.map { case (n, (_, rows)) => n -> rows }.toMap)
       case None => (derived, Build.rowCounts(derived))
     }
-    result.registerViews(spark)
+    result.registerViews()
     normalized = Some(result)
     _buildWarnings = Build.validate(datasetRows, tableRows)
     _buildWarnings.foreach(log.warn)

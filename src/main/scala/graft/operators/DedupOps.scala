@@ -444,23 +444,12 @@ object DedupOps {
       .distinct()
   }
 
-  /** Persist a corpus band index BUCKETED on the LSH join key
-    * ([[graft.sources.Sources.writeBucketed]] on (band, bucket)), so
-    * every recurring ingest-dedup probe reads the stored side with NO
-    * exchange: the on-disk layout replaces the corpus-side shuffle a
-    * plain parquet dump would pay on every batch. At 100 TB the
-    * index is the only corpus-scale artifact the daily job touches,
-    * and it never re-shuffles. */
-  def writeBandIndex(
-      docs: DataFrame, tableName: String, numBuckets: Int): Unit =
-    graft.sources.Sources.writeBucketed(
-      minhashBands(docs), tableName, Seq("band", "bucket"), numBuckets)
-
-  /** [[incrementalCandidatePairs]] against a STORED [[writeBandIndex]]
-    * table: old-vs-new probes the bucketed table — exchange-free on
-    * the stored side, proven by `SourcesSpec` — and new-vs-new pairs
-    * come from the batch alone, so no shape unions the (bucketed)
-    * corpus with unbucketed batch rows and forfeits the layout.
+  /** [[incrementalCandidatePairs]] against a STORED band index
+    * ([[appendBandIndex]]): old-vs-new probes the bucketed table —
+    * exchange-free on the stored side, proven by `SourcesSpec` — and
+    * new-vs-new pairs come from the batch alone, so no shape unions
+    * the (bucketed) corpus with unbucketed batch rows and forfeits
+    * the layout.
     * Output is identical to the in-memory formulation under the same
     * append-only id assumption. */
   def incrementalCandidatePairsStored(
@@ -606,7 +595,7 @@ object DedupOps {
           .as(Seq("idx", "h")))
 
   /** Persist the corpus's DISTINCT paragraph-hash index BUCKETED on
-    * the hash — the [[writeBandIndex]] pattern at paragraph
+    * the hash — the [[appendBandIndex]] pattern at paragraph
     * granularity. The streaming ingest screen (and any recurring
     * batch screen) probes this table instead of recomputing the
     * corpus index per run: at 100 TB the index is built once (or
@@ -835,8 +824,8 @@ object DedupOps {
       .union(untouched)
   }
 
-  /** APPEND one ingest batch's minhash bands into a stored
-    * [[writeBandIndex]] table, keeping the (band, bucket) bucketed
+  /** APPEND one ingest batch's minhash bands into a stored band
+    * index table, keeping the (band, bucket) bucketed
     * layout — the foreachBatch body that lets every later trigger
     * probe the index exchange-free. Resolution, lazy creation (the
     * first append creates version 1 plus the pointer view) and the
@@ -1905,7 +1894,7 @@ object DedupOps {
     // doc_id/h — text never shuffles except for confirmed near-dup
     // CANDIDATES (O(candidates), bounded by the banding); the corpus
     // sides (content-hash set, paragraph index, band index) are the
-    // stored artifacts writeBandIndex/writeParagraphIndex maintain,
+    // stored artifacts appendBandIndex/writeParagraphIndex maintain,
     // probed per batch, and the bloom position set is a constant-size
     // broadcast literal; the near-dup tier is the batch bands probing
     // the corpus band index then the SCREENED edit confirm
@@ -2208,7 +2197,7 @@ object DedupOps {
     * Scale: only (doc_id, chunk_hash) pairs ever move. The corpus
     * side is the big one here, so unlike the corpus-side screen the
     * join shuffles corpus hash pairs — at 100 TB the corpus windows
-    * are the stored bucketed artifact (the writeBandIndex pattern),
+    * are the stored bucketed artifact (the appendBandIndex pattern),
     * making this a bench-sized probe of an on-disk index, the same
     * shape as dedupAgainstIndex. A bench window hitting many corpus
     * docs fans out, which is why the aggregate counts DISTINCT
@@ -2404,7 +2393,7 @@ object DedupOps {
       .join(corpusP, Seq("h"), "left_semi").select(col("doc_id"))
     // Near-dup tier: batch bands probe the corpus band index on
     // (band, bucket) — in production the corpus side IS the stored
-    // writeBandIndex layout, so the probe is exchange-free — and the
+    // appendBandIndex layout, so the probe is exchange-free — and the
     // cross candidates go through the SCREENED edit confirm
     // ([[screenedEditPairs]]): length-gap-disqualified pairs never
     // reach the O(len²) DP. A batch doc confirmed >= EditScreenMinSim

@@ -386,18 +386,6 @@ object Multimodal {
       peak, absSum)
   }
 
-  /** Partition-batched REAL audio decode over a (doc_id, payload)
-    * table — the audio analog of [[decodePng]]. Payload bytes never
-    * leave their partition. */
-  def decodeWav(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(rows => rows.map { case (id, bytes) =>
-        decodeWavOne(id, bytes) })
-      .toDF()
-  }
-
   /** Synthetic video-container magic for the COORDINATE fixture
     * ([[videoWithHeader]] / q_multimodal_frames — header-parse
     * plumbing only): 4 bytes + a 4-byte big-endian frame count, then

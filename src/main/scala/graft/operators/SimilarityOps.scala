@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.operators.Materialize.PinOps
 import graft.{QueryDef, Tables}
-import graft.functions.{CosineSimilarity, TextVec}
-import graft.functions.TextVec._
+import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,7 +47,8 @@ object SimilarityOps {
     * PqSubspaces contiguous PqSubDim-dim subvectors, each coded
     * against a PqCentroids-entry per-subspace codebook seeded from
     * the first PqCentroids vectors (the deterministic stand-in for a
-    * k-means-trained codebook — `ivfTrain` is the training analog). */
+    * k-means-trained codebook — `pqTrainQuantized` is the trained
+    * analog). */
   val PqSubspaces = 4
   val PqSubDim = 16
 
@@ -56,9 +56,10 @@ object SimilarityOps {
     * `TablesSpec`'s column-type contracts. */
   val EmbDim: Int = PqSubspaces * PqSubDim
   // the GATE codebook is deliberately tiny and SEEDED (deterministic,
-  // oracle-replicable); quantization quality comes from pqTrain's
-  // k-means codebook, whose recall the spec measures against the
-  // seeded one. Production uses a trained 256/subspace codebook.
+  // oracle-replicable); quantization quality comes from
+  // pqTrainQuantized's k-means codebook, whose recall the spec measures
+  // against the seeded one. Production uses a trained 256/subspace
+  // codebook.
   val PqCentroids = 4
 
   /** Residual codebook seed for IVFADC: the first [[PqCentroids]]
@@ -610,8 +611,8 @@ object SimilarityOps {
     * for an IVF/IVFADC index: a hot cell makes every probe that
     * touches it scan a long posting list, a starved cell wastes
     * nprobe budget, and a falling min_sim says the centroid no
-    * longer represents its members — re-run [[ivfTrain]] when the
-    * report degrades.
+    * longer represents its members — re-run [[ivfTrainQuantized]]
+    * when the report degrades.
     *
     * Scale: assignment is the existing broadcast-centroid scan; the
     * report adds ONE groupBy on centroid_id (k rows out). Every
@@ -642,44 +643,6 @@ object SimilarityOps {
       col("min_sim"), col("max_sim"))
   }
 
-  /** IVF centroid training: k-means (Lloyd) iterations with strided
-    * seeds taken by RANK over the vec_id order (ranks 0, stride, …,
-    * (k−1)·stride — spread across the corpus; first-k seeding
-    * collapses when early rows share a cluster). Rank-based seeding
-    * works on sparse or offset id spaces where raw `vec_id % stride`
-    * could select fewer than k rows and silently train a degenerate
-    * codebook; the dense 1..n rank guarantees exactly k seeds
-    * whenever n ≥ k (fail-loud `require` otherwise, plus a
-    * seed-count guard). Each iteration is one cross-score pass +
-    * one groupBy-mean, checkpointed so lineage doesn't compound;
-    * centroids stay tiny and broadcast. Ties break on centroid_id;
-    * mean accumulation order is Spark's, so coordinates can vary in
-    * final ulps across runs (assignment flips only for vectors
-    * near-equidistant between cells).
-    *
-    * Robustness: a cell that loses all members or degenerates to the
-    * zero vector (cosine undefined) keeps its previous centroid
-    * rather than vanishing or capturing the whole corpus via
-    * NaN-sorts-first.
-    *
-    * NOTE: this is an offline TRAINING utility, not a per-query path —
-    * the dimension/count probes and per-iteration checkpoints do a
-    * handful of driver round-trips by design (once per index build).
-    */
-  def ivfTrain(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    ivfLloyd(corpus, k, iters, c => avg(c))
-
-  /** [[ivfTrain]] with per-iteration centroid QUANTIZATION (6-dp
-    * rounded means, then the float cast both variants share) — the
-    * [[pqTrainQuantized]] move applied to the coarse IVF codebook:
-    * both engines compute means of the SAME member sets from the SAME
-    * float-quantized centroids, so the only cross-engine freedom
-    * (summation order inside avg(), ~1e-15) is absorbed by the
-    * rounding and the oracle can replay the training loop exactly.
-    * Behind the q_ann_trained_serve gate. */
-  def ivfTrainQuantized(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    ivfLloyd(corpus, k, iters, c => round(avg(c), 6))
-
   /** Rank-strided Lloyd seed selection — ONE rule for the IVF and PQ
     * trainings: dense SurrogateIds rank over vec_id, keep ranks
     * 0, stride, …, (k−1)·stride with stride = max(1, n/k). Dense
@@ -700,8 +663,36 @@ object SimilarityOps {
         ((col("_rnk") - 1) / stride).cast("int").as("cid")))
   }
 
-  private def ivfLloyd(corpus: DataFrame, k: Int, iters: Int,
-      meanOf: Column => Column): DataFrame = {
+  /** IVF centroid training: k-means (Lloyd) iterations with strided
+    * seeds taken by RANK over the vec_id order (ranks 0, stride, …,
+    * (k−1)·stride — spread across the corpus; first-k seeding
+    * collapses when early rows share a cluster). Rank-based seeding
+    * works on sparse or offset id spaces where raw `vec_id % stride`
+    * could select fewer than k rows and silently train a degenerate
+    * codebook; the dense 1..n rank guarantees exactly k seeds
+    * whenever n ≥ k (fail-loud `require` otherwise, plus a
+    * seed-count guard). Each iteration is one map-side assignment
+    * pass + one k-row mean aggregate; centroids stay tiny and live on
+    * the driver. Ties break on centroid_id.
+    *
+    * Each iteration's centroid means are QUANTIZED (6-dp rounded,
+    * then cast to float) — the [[pqTrainQuantized]] move applied to
+    * the coarse IVF codebook: both engines compute means of the SAME
+    * member sets from the SAME float-quantized centroids, so the only
+    * cross-engine freedom (summation order inside avg(), ~1e-15) is
+    * absorbed by the rounding and the oracle can replay the training
+    * loop exactly. Behind the q_ann_trained_serve gate.
+    *
+    * Robustness: a cell that loses all members or degenerates to the
+    * zero vector (cosine undefined) keeps its previous centroid
+    * rather than vanishing or capturing the whole corpus via
+    * NaN-sorts-first.
+    *
+    * NOTE: this is an offline TRAINING utility, not a per-query path —
+    * the dimension/count probe and the per-iteration collects do a
+    * handful of driver round-trips by design (once per index build).
+    */
+  def ivfTrainQuantized(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     val s = corpus.sparkSession
     // ONE bounded job for both training constants (r22, guide §5 —
     // the dim probe and the count were separate sequential 1-task
@@ -713,9 +704,10 @@ object SimilarityOps {
     val nd = corpus.agg(count(lit(1)).as("n"),
       max(size(col("embedding"))).as("d")).head()
     val n = nd.getLong(0)
-    require(n > 0, "ivfTrain: empty corpus")
+    require(n > 0, "ivfTrainQuantized: empty corpus")
     val dim = nd.getInt(1)
-    require(n >= k, s"ivfTrain: corpus has $n vectors, need at least k=$k")
+    require(n >= k,
+      s"ivfTrainQuantized: corpus has $n vectors, need at least k=$k")
     // The k×dim centroid set is index GEOMETRY, not data — it lives
     // driver-side for the whole loop (the MLlib-KMeans shape). Each
     // iteration is then exactly ONE distributed job: a map-side
@@ -738,12 +730,13 @@ object SimilarityOps {
             col("embedding").as("cv")))
       finally seeds.release()
     require(cents.size == k,
-      s"ivfTrain: rank-strided seeding selected ${cents.size} of $k seeds")
+      s"ivfTrainQuantized: rank-strided seeding selected ${cents.size} " +
+        s"of $k seeds")
     (0 until iters).foreach { _ =>
       val assigned = assignConst(corpus, cents,
         Seq(col("embedding").cast("array<double>").as("v")))
       val dimCols = (0 until dim).map(i =>
-        meanOf(element_at(col("v"), i + 1)).as(s"d$i"))
+        round(avg(element_at(col("v"), i + 1)), 6).as(s"d$i"))
       val got = assigned.groupBy(col("centroid_id"))
         .agg(dimCols.head, dimCols.tail: _*)
         .select(col("centroid_id"),
@@ -1983,9 +1976,9 @@ object SimilarityOps {
           NumProbeCells, RerankShortlist, TopK)
     },
 
-    // TRAINED-codebook gate: pqTrain's Lloyd loop itself, made
-    // oracle-replicable by quantizing each iteration's centroid means
-    // to 6 dp (both engines compute means of the SAME member sets from
+    // TRAINED-codebook gate: pqTrainQuantized's Lloyd loop itself,
+    // made oracle-replicable by quantizing each iteration's centroid
+    // means to 6 dp (both engines compute means of the SAME member sets from
     // the SAME quantized codebook, so the only cross-engine freedom —
     // summation order inside avg(), ~1e-15 — is absorbed by the
     // rounding). Seeds come from the dense two-phase rank, rounds are
@@ -2164,8 +2157,8 @@ object SimilarityOps {
 
     // IVF index-health report: per-cell population, load vs the
     // uniform ideal, min/max member-to-centroid similarity — the
-    // telemetry that decides when to re-run ivfTrain. One k-row
-    // groupBy over the assignment + a one-row total broadcast.
+    // telemetry that decides when to re-run ivfTrainQuantized. One
+    // k-row groupBy over the assignment + a one-row total broadcast.
     QueryDef.sql(
       "q_ivf_balance",
       s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv
@@ -2756,26 +2749,20 @@ object SimilarityOps {
     pqAssignWith(e, pqCodebook(e, seedFrom))
 
   /** Per-subspace L2 k-means codebook training (Lloyd) — the trained
-    * counterpart of the gate's SEEDED [[pqCodebook]], mirroring how
-    * [[ivfTrain]] relates to the seeded IVF gate centroids: the gate
-    * stays deterministic and oracle-replicable on seeds, while this
-    * produces the codebook a production index build would store.
-    * Quantization quality is the whole PQ game — the recall spec
-    * measures seeded vs trained side by side.
+    * counterpart of the gate's SEEDED [[pqCodebook]]: the seeded gate
+    * stays deterministic, while this produces the codebook a
+    * production index build would store. Quantization quality is the
+    * whole PQ game — the recall spec measures seeded vs trained side
+    * by side.
     *
-    * Scale: each iteration is one map-side assignment pass over the
-    * pinned sub-vectors + one (sub, cid)-bounded mean aggregate; the
-    * m×k codebook stays on the driver between iterations, and every
-    * pin is released before the call returns. Empty cells keep their
-    * previous centroid. Offline index-build utility, not a per-query
-    * path. */
-  def pqTrain(e: DataFrame, k: Int = PqCentroids, iters: Int = 5): DataFrame =
-    pqLloyd(e, k, iters, "pqTrain", c => avg(c))
-
-  /** The shared Lloyd loop behind [[pqTrain]] and
-    * [[pqTrainQuantized]] — ONE copy of the seeding, assignment,
-    * argmin tie-break and empty-cell carry, parameterized only by
-    * how a dimension mean is finished (`identity` vs 6-dp rounding).
+    * Each iteration's centroid means are QUANTIZED (rounded to 6 dp)
+    * — the oracle-replicable trained-codebook path behind
+    * `q_pq_train`. Rounding pins the only cross-engine freedom
+    * (summation order inside the dim-wise mean, ~1e-15), so both
+    * engines run every Lloyd round on bit-identical codebooks:
+    * assignments agree because inter-centroid distance gaps are
+    * macroscopic next to ulps, and the 6-dp centroid grid costs
+    * nothing against PQ's own quantization error.
     *
     * Seeding is by RANK over the vec_id order, not raw-id modular
     * arithmetic: on a sparse or offset id space (a filtered corpus)
@@ -2783,21 +2770,32 @@ object SimilarityOps {
     * and silently return a degenerate codebook. The two-phase
     * surrogate rank is dense 1..n by construction, so ranks
     * 0, stride, …, (k-1)·stride always exist; one bounded k-row
-    * collect ships the seed ids as a broadcast-joinable set. */
-  private def pqLloyd(e: DataFrame, k: Int, iters: Int, caller: String,
-      meanOf: Column => Column): DataFrame = {
+    * collect ships the seed ids as a broadcast-joinable set.
+    *
+    * Scale: each iteration is one map-side assignment pass over the
+    * pinned sub-vectors + one (sub, cid)-bounded mean aggregate; the
+    * m×k codebook stays on the driver between iterations, and every
+    * pin is released before the call returns. Empty cells keep their
+    * previous centroid. Offline index-build utility, not a per-query
+    * path.
+    *
+    * Output: the trained codebook exploded to (sub, cid, dim, v) —
+    * scalar rows, so the gate hashes plain doubles, not arrays. */
+  def pqTrainQuantized(e: DataFrame, k: Int = PqCentroids,
+      iters: Int = PqTrainGateIters): DataFrame = {
     val s = e.sparkSession
     val n = e.count()
-    require(n >= k, s"$caller: corpus has $n vectors, need at least k=$k")
+    require(n >= k,
+      s"pqTrainQuantized: corpus has $n vectors, need at least k=$k")
     val ev = e.select(col("vec_id"),
       posexplode(subvecs(col("embedding"))).as(Seq("sub", "esub")))
       .select(col("vec_id"), col("sub"),
         col("esub").cast("array<double>").as("esub"))
       .pinned // reused by every assignment round, unpinned after it
     // The m×k codebook is index GEOMETRY, not data — it lives
-    // driver-side for the whole loop (r22: the ivfLloyd shape applied
-    // to the PQ training; the former frame-per-iteration form paid ~5
-    // jobs per round — broadcast build, the sub-join argmin re-group,
+    // driver-side for the whole loop (r22: the ivfTrainQuantized shape
+    // applied to the PQ training; the former frame-per-iteration form
+    // paid ~5 jobs per round — broadcast build, the sub-join argmin re-group,
     // the means exchange, the carry join and a pinIter — in a gate
     // whose wall is job-count × per-job floor, 24 jobs for 0.8 s of
     // task time). Each iteration is now ONE distributed job: ev holds
@@ -2807,8 +2805,8 @@ object SimilarityOps {
     // tie-break as the former min(struct(d2, cid)) and the oracle's
     // ORDER BY d2, cid), feeding one (sub, cid)-bounded mean
     // aggregate whose m×k rows are collected. Arithmetic is
-    // unchanged: sqDist over the same double arrays, meanOf per dim,
-    // empty cells keep their previous centroid — the oracle's
+    // unchanged: sqDist over the same double arrays, 6-dp mean per
+    // dim, empty cells keep their previous centroid — the oracle's
     // unrolled CTE rounds replay bit-identically.
     try {
       val seeds = stridedSeedIds(e, n, k)
@@ -2831,7 +2829,7 @@ object SimilarityOps {
           c => struct(sqDist(col("esub"), c.getField("csub")).as("d"),
             c.getField("cid").as("c"))))
         val dimCols = (0 until PqSubDim).map(i =>
-          meanOf(element_at(col("esub"), i + 1)).as(s"d$i"))
+          round(avg(element_at(col("esub"), i + 1)), 6).as(s"d$i"))
         val got = ev
           .select(col("sub"), m.getField("c").as("cid"), col("esub"))
           .groupBy(col("sub"), col("cid"))
@@ -2843,8 +2841,9 @@ object SimilarityOps {
             r.getSeq[java.lang.Double](2)).toMap
         // empty cells keep their previous centroid (the former
         // left_outer coalesce). Collected as BOXED doubles with a
-        // null-element check — the ivfLloyd discipline: a silent unbox
-        // would fabricate 0.0 where the frame form carried null through
+        // null-element check — the ivfTrainQuantized discipline: a
+        // silent unbox would fabricate 0.0 where the frame form carried
+        // null through
         cb = cb.map { case (key, prev) =>
           got.get(key) match {
             case Some(nv) if !nv.contains(null) =>
@@ -2853,32 +2852,15 @@ object SimilarityOps {
           }
         }
       }
-      // rebuild the m×k-row frame callers expect, in a deterministic
-      // (sub, cid) order (bounded driver material, the ivfLloyd shape)
+      // rebuild the m×k codebook as rows, in a deterministic (sub, cid)
+      // order (bounded driver material, the ivfTrainQuantized shape)
       import s.implicits._
       cb.map { case ((sub, cid), csub) => (sub, cid, csub) }
         .toDF("sub", "cid", "csub")
+        .select(col("sub"), col("cid"),
+          posexplode(col("csub")).as(Seq("dim", "v")))
     } finally Materialize.unpin(ev)
   }
-
-  /** [[pqTrain]] with per-iteration centroid QUANTIZATION (means
-    * rounded to 6 dp) — the oracle-replicable trained-codebook path
-    * behind `q_pq_train`. Rounding pins the only cross-engine freedom
-    * (summation order inside the dim-wise mean, ~1e-15), so both
-    * engines run every Lloyd round on bit-identical codebooks:
-    * assignments agree because inter-centroid distance gaps are
-    * macroscopic next to ulps, and the 6-dp centroid grid costs
-    * nothing against PQ's own quantization error. Same seeding
-    * (two-phase rank), same argmin tie-break, same empty-cell carry
-    * as [[pqTrain]].
-    *
-    * Output: the trained codebook exploded to (sub, cid, dim, v) —
-    * scalar rows, so the gate hashes plain doubles, not arrays. */
-  def pqTrainQuantized(e: DataFrame, k: Int = PqCentroids,
-      iters: Int = PqTrainGateIters): DataFrame =
-    pqLloyd(e, k, iters, "pqTrainQuantized", c => round(avg(c), 6))
-      .select(col("sub"), col("cid"),
-        posexplode(col("csub")).as(Seq("dim", "v")))
 
   /** Product-quantization code assignment (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): split
@@ -2919,7 +2901,7 @@ object SimilarityOps {
     * (vec_id, sub, code, dmin, centroid_id), codebook = the exploded
     * (cid, sub, csub) residual codebook both coding and search-time
     * distance tables must share. Both are ONE-OFF corpus passes at
-    * 100 TB, stored alongside the data ([[writeIvfPqIndex]]). */
+    * 100 TB. */
   def ivfPqIndex(e: DataFrame, centroids: DataFrame): (DataFrame, DataFrame) = {
     val cells = assignConst(e, collectCentroids(centroids))
       .pinned // reused: residual build + coded-corpus scan
@@ -2931,35 +2913,6 @@ object SimilarityOps {
       .pinned // reused: codebook seed + per-subspace coding
     val cb = pqCodebook(rdf, ResidualSeedFrom)
     (pqAssignWith(rdf, cb).join(cells, "vec_id"), cb)
-  }
-
-  /** Search half of IVFADC, over EXPLICIT index artifacts — shared by
-    * the in-memory gate path ([[ivfPqSearch]]) and the stored-index
-    * path ([[ivfPqSearchStored]]) so the two cannot drift. */
-  private def ivfPqSearchTail(codes: DataFrame, codebook: DataFrame,
-      centroids: DataFrame, probes: DataFrame, nprobe: Int,
-      k: Int): DataFrame = {
-    val s = probes.sparkSession
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qv"), col("centroid_id"), col("cv"),
-        CosineSimilarity(s, col("qv"), col("cv")).as("ccos"))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crnk") <= nprobe)
-    val qres = probeCells.select(col("query_id"), col("centroid_id"),
-      posexplode(subvecs(zip_with(col("qv").cast("array<double>"),
-        col("cv").cast("array<double>"), (x, y) => x - y)))
-        .as(Seq("sub", "qsub")))
-    val dt = qres.join(broadcast(codebook), "sub")
-      .select(col("query_id"), col("centroid_id"), col("sub"), col("cid"),
-        sqDist(col("qsub"), col("csub")).as("d"))
-    val joined = codes.as("a")
-      .join(broadcast(dt).as("t"),
-        col("a.centroid_id") === col("t.centroid_id") &&
-          col("a.sub") === col("t.sub") && col("a.code") === col("t.cid"))
-      .select(col("t.query_id"), col("a.vec_id"), col("a.sub"), col("t.d"))
-    adcTopK(joined, k)
   }
 
   /** Full IVFADC search (Jégou et al. TPAMI'11 §V): corpus vectors
@@ -2984,30 +2937,28 @@ object SimilarityOps {
     */
   def ivfPqSearch(e: DataFrame, centroids: DataFrame, probes: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val (codes, cb) = ivfPqIndex(e, centroids)
-    ivfPqSearchTail(codes, cb, centroids, probes, nprobe, k)
-  }
-
-  /** Persist the IVFADC index as stored artifacts — the
-    * [[DedupOps.writeBandIndex]] pattern for the ANN stack, making
-    * "both passes are stored index artifacts, not per-query work"
-    * literal: coarse centroids and the residual codebook land as tiny
-    * dimension tables, and the coded corpus lands PARTITIONED BY IVF
-    * CELL, so a search probing nprobe cells prunes the scan to
-    * nprobe/ncells of the files — the IVF promise enforced by layout,
-    * before a single byte is read. */
-  def writeIvfPqIndex(
-      e: DataFrame, centroids: DataFrame, prefix: String): Unit = {
-    val (codes, cb) = ivfPqIndex(e, centroids)
-    val s = e.sparkSession
-    Seq("centroids", "codebook", "codes")
-      .foreach(t => graft.sources.Sources.dropManaged(s, s"${prefix}_$t"))
-    centroids.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${prefix}_centroids")
-    cb.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${prefix}_codebook")
-    codes.write.mode("overwrite").format("parquet")
-      .partitionBy("centroid_id").saveAsTable(s"${prefix}_codes")
+    val (codes, codebook) = ivfPqIndex(e, centroids)
+    val s = probes.sparkSession
+    val probeCells = probes.crossJoin(broadcast(centroids))
+      .select(col("query_id"), col("qv"), col("centroid_id"), col("cv"),
+        CosineSimilarity(s, col("qv"), col("cv")).as("ccos"))
+      .withColumn("crnk", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("ccos").desc, col("centroid_id"))))
+      .filter(col("crnk") <= nprobe)
+    val qres = probeCells.select(col("query_id"), col("centroid_id"),
+      posexplode(subvecs(zip_with(col("qv").cast("array<double>"),
+        col("cv").cast("array<double>"), (x, y) => x - y)))
+        .as(Seq("sub", "qsub")))
+    val dt = qres.join(broadcast(codebook), "sub")
+      .select(col("query_id"), col("centroid_id"), col("sub"), col("cid"),
+        sqDist(col("qsub"), col("csub")).as("d"))
+    val joined = codes.as("a")
+      .join(broadcast(dt).as("t"),
+        col("a.centroid_id") === col("t.centroid_id") &&
+          col("a.sub") === col("t.sub") && col("a.code") === col("t.cid"))
+      .select(col("t.query_id"), col("a.vec_id"), col("a.sub"), col("t.d"))
+    adcTopK(joined, k)
   }
 
   /** Stored FULL-PRECISION IVF index: every corpus vector tagged with
@@ -3015,8 +2966,7 @@ object SimilarityOps {
     * via [[graft.sources.Sources.writeBucketed]] — the serving layout
     * for [[annSearchStored]]: a probe batch joins it on centroid_id
     * with no exchange on the stored side (the probe side broadcasts).
-    * The PQ twin ([[writeIvfPqIndex]]) trades precision for scan
-    * bytes; this one serves exact in-cell scoring. */
+    * It serves exact in-cell scoring. */
   def writeIvfIndex(corpus: DataFrame, centroids: DataFrame,
       tableName: String, numBuckets: Int): Unit =
     // the index build is the big corpus pass: assign map-side over
@@ -3196,32 +3146,6 @@ object SimilarityOps {
     graft.functions.TopK.perKey(cand, "query_id", "cos", "vec_id", k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("rnk"), round(col("cos"), 6).as("sim"))
-  }
-
-  /** IVFADC search probing a STORED [[writeIvfPqIndex]] — per-query
-    * work only: the probed cell ids (queries × nprobe, a bounded
-    * driver scalar like the bloom position set) ship back as a
-    * partition-pruning literal filter, so the code-table scan reads
-    * ONLY the probed cells' files and feeds the broadcast ADC join
-    * with no exchange on the stored side (spec-proven, the
-    * `SourcesSpec` band-index pattern). Results are identical to
-    * [[ivfPqSearch]] on the same corpus — same codebook, same tail. */
-  def ivfPqSearchStored(spark: SparkSession, prefix: String,
-      probes: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val centroids = spark.table(s"${prefix}_centroids")
-    val codebook = spark.table(s"${prefix}_codebook")
-    val probed = probes.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("centroid_id"),
-        CosineSimilarity(spark, col("qv"), col("cv")).as("ccos"))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crnk") <= nprobe)
-      .select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val codes = spark.table(s"${prefix}_codes")
-      .filter(col("centroid_id").isInCollection(probed))
-    ivfPqSearchTail(codes, codebook, centroids, probes, nprobe, k)
   }
 
   /** ADC search against an EXPLICIT codebook — used by the gate (on

@@ -550,7 +550,7 @@ object StreamingOps {
     // as ingest slices; each trigger (a) computes the batch's minhash
     // bands map-side, (b) probes the STORED band index for
     // cross-batch candidates (exchange-free on the stored side — the
-    // writeBandIndex layout) plus within-batch candidates, (c) folds
+    // appendBandIndex layout) plus within-batch candidates, (c) folds
     // the new edges into the star-contracted component state via
     // DedupOps.incrementalStars — re-contracting ONLY the affected
     // components, O(affected subgraph) per trigger — and (d) appends

@@ -54,90 +54,21 @@ object ZOrder {
     * dropped from the output — it exists to order the writer, not to
     * be stored.
     *
-    * Dimensions are NORMALIZED to a common [[ZBits]]-bit scale from
-    * their min/max before interleaving — without this, interleaving
-    * raw values degenerates: whichever dimension has more varying
-    * HIGH bits owns every significant z bit and the "z-order"
-    * collapses to a linear sort on that dimension alone (a 4-bit user
-    * domain against a 10-bit hour domain loses 64:1, measured in
-    * ZOrderSpec). Min/max are one driver-scalar aggregate. This is
-    * the right writer for roughly-uniform dimensions; HEAVY-TAILED
-    * dimensions collapse most of their mass into the bottom bins of a
-    * min/max scale (one outlier stretches the domain), degrading the
-    * layout toward a single-dimension sort — use
-    * [[writeZOrderedQuantile]] there (measured head-to-head in
-    * ZOrderSpec). */
-  def writeZOrdered(df: DataFrame, zx: Column, zy: Column,
-      nFiles: Int, path: String): Unit = {
-    val b = df.agg(count(lit(1)),
-      min(zx).cast("long"), max(zx).cast("long"),
-      min(zy).cast("long"), max(zy).cast("long")).head()
-    // an empty input nulls every envelope slot, and a non-empty input
-    // with an ALL-NULL dimension nulls that dimension's — the count
-    // disambiguates, and checking every slot fails each case with a
-    // descriptive error instead of an opaque NPE from getLong
-    require(b.getLong(0) > 0,
-      "writeZOrdered: empty input — nothing to lay out at " + path)
-    require((1 to 4).forall(!b.isNullAt(_)),
-      "writeZOrdered: a z-order dimension is entirely NULL — its " +
-        "min/max envelope is undefined; fill or drop null keys first")
-    def norm(c: Column, lo: Long, hi: Long): Column =
-      if (hi > lo)
-        ((c.cast("double") - lo) * ((1L << ZBits) - 1) / (hi - lo))
-          .cast("long")
-      else lit(0L)
-    df.withColumn("__z", zValue(
-        norm(zx, b.getLong(1), b.getLong(2)),
-        norm(zy, b.getLong(3), b.getLong(4))))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** [[writeZOrdered]] with SAMPLED-QUANTILE bins instead of min/max
-    * normalization: each dimension is mapped to its ≤2^[[QBits]]-bin
-    * RANK position via `approxQuantile` edges (one sampled pass per
-    * Greenwald–Khanna sketch, driver material = ≤2·255 doubles — the
-    * same O(constants) shape as the min/max probe), so a heavy-tailed
-    * dimension spreads its mass evenly across bins instead of
-    * collapsing into the bottom of an outlier-stretched scale. The
-    * per-row binning is a codegen'd scan of the broadcast edge array
-    * (count of edges ≤ value = bin index); duplicate edges from
-    * extreme ties deduplicate into fewer, still-monotone bins. Same
-    * one range-partitioning exchange at write time; every later scan
-    * prunes on footer stats exactly as before. */
+    * Each dimension is mapped to its ≤2^[[QBits]]-bin RANK position
+    * via `approxQuantile` edges (one sampled pass per Greenwald–Khanna
+    * sketch, driver material = ≤2·255 doubles) before interleaving.
+    * Interleaving raw values degenerates: whichever dimension has
+    * more varying HIGH bits owns every significant z bit and the
+    * "z-order" collapses to a linear sort on that dimension alone. A
+    * min/max scale fixes that for uniform dimensions only — one
+    * outlier stretches it and collapses a heavy-tailed dimension's
+    * mass into its bottom bins — while rank bins spread the mass
+    * evenly (ZOrderSpec's planted-outlier case). The per-row
+    * binning is a codegen'd scan of the broadcast edge array (count
+    * of edges ≤ value = bin index); duplicate edges from extreme ties
+    * deduplicate into fewer, still-monotone bins. */
   def writeZOrderedQuantile(df: DataFrame, zx: Column, zy: Column,
-      nFiles: Int, path: String): Unit =
-    writeCurveOrdered(df, zx, zy, nFiles, path,
-      (d, bx, by) => d.withColumn("__z", zValueBits(bx, by, QBits)))
-
-  /** [[writeZOrderedQuantile]] with the HILBERT index as the layout
-    * key instead of Morton interleave: same sampled-quantile rank
-    * bins, same one range-partitioning exchange — but consecutive
-    * key values are always grid-adjacent, so the per-file bounding
-    * boxes avoid the Morton curve's quadrant-boundary jumps
-    * (measured head-to-head in ZOrderSpec). */
-  def writeHilbertOrdered(df: DataFrame, zx: Column, zy: Column,
-      nFiles: Int, path: String): Unit =
-    writeCurveOrdered(df, zx, zy, nFiles, path, (d, bx, by) =>
-      hilbertFrame(d, bx, by, QBits)
-        .withColumnRenamed("hval", "__z").drop("hx", "hy"))
-
-  /** Shared quantile-binned curve writer: map each dimension to its
-    * ≤2^[[QBits]]-bin RANK position via `approxQuantile` edges (one
-    * sampled pass per Greenwald–Khanna sketch, driver material =
-    * ≤2·255 doubles — the same O(constants) shape as the min/max
-    * probe), so a heavy-tailed dimension spreads its mass evenly
-    * across bins instead of collapsing into the bottom of an
-    * outlier-stretched scale; then order by `curve(binx, biny)` with
-    * the one range-partitioning exchange any global layout needs.
-    * The per-row binning is a codegen'd scan of the broadcast edge
-    * array (count of edges ≤ value = bin index); duplicate edges
-    * from extreme ties deduplicate into fewer, still-monotone bins. */
-  private def writeCurveOrdered(df: DataFrame, zx: Column, zy: Column,
-      nFiles: Int, path: String,
-      curve: (DataFrame, Column, Column) => DataFrame): Unit = {
+      nFiles: Int, path: String): Unit = {
     val tagged = df
       .withColumn("__zx", zx.cast("double"))
       .withColumn("__zy", zy.cast("double"))
@@ -146,12 +77,12 @@ object ZOrder {
     val edges = tagged.stat.approxQuantile(
       Array("__zx", "__zy"), probs, 0.001)
     require(edges.forall(_.nonEmpty),
-      "writeCurveOrdered: empty input — nothing to lay out at " + path)
+      "writeZOrderedQuantile: empty input — nothing to lay out at " + path)
     // Rank bin, RESCALED to the common QBits range: a low-cardinality
     // dimension yields few distinct edges, and its raw bin index
     // would only occupy the LOW interleave bits — handing every
-    // significant z bit to the other dimension (the same
-    // degeneration min/max normalization exists to prevent).
+    // significant z bit to the other dimension (the raw-value
+    // degeneration above).
     def bin(c: Column, es: Array[Double]): Column = {
       val uniq = es.distinct.sorted
       val arr = array(uniq.map(lit(_)).toIndexedSeq: _*)
@@ -161,7 +92,7 @@ object ZOrder {
     val binned = tagged
       .withColumn("__bx", bin(col("__zx"), edges(0)))
       .withColumn("__by", bin(col("__zy"), edges(1)))
-    curve(binned, col("__bx"), col("__by"))
+    binned.withColumn("__z", zValueBits(col("__bx"), col("__by"), QBits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z", "__zx", "__zy", "__bx", "__by")
@@ -180,11 +111,9 @@ object ZOrder {
     * one bit of each dimension, accumulating the quadrant offset and
     * rotating/reflecting the frame. Unlike Morton interleave, EVERY
     * consecutive pair of Hilbert indices is grid-adjacent (unit-step
-    * property, spec-walked exhaustively), so range-partitioning by
-    * this value gives strictly tighter per-file bounding boxes on
-    * skewed range queries. Built as a chain of narrow projections —
-    * one per level, each a few codegen'd CASEs — not one nested
-    * expression (which would double per level). The quadrant id
+    * property, spec-walked exhaustively). Built as a chain of narrow
+    * projections — one per level, each a few codegen'd CASEs — not one
+    * nested expression (which would double per level). The quadrant id
     * avoids XOR for engine parity: (3·rx)⊕ry ≡ ry + rx·(3−2·ry) for
     * bits. Input columns must already be in [0, 2^bits). */
   def hilbertFrame(df: DataFrame, x: Column, y: Column, bits: Int)

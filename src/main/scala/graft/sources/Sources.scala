@@ -490,10 +490,12 @@ object Sources {
         // surviving copy, which the self-heal would then silently
         // drop instead of raising the designed loud refusal. A real
         // crash skips this handler and the marker does its job.
+        // the write error is the one to surface; a cleanup failure
+        // rides along on it instead of replacing it
         try {
           dropManaged(spark, versionName(tableName, 1))
           markerFs.delete(marker, false)
-        } catch { case _: Throwable => () } // surface the write error
+        } catch { case scala.util.control.NonFatal(c) => e.addSuppressed(c) }
         throw e
     }
     if (creating) {

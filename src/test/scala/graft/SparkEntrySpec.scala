@@ -21,9 +21,7 @@ class SparkEntrySpec extends SparkSpec {
     assert(dangling.isEmpty, s"oracle without query: $dangling")
     // since r8 EVERY query carries a full DuckDB oracle (the former
     // rows-only sketch/sample queries hash exact companion columns +
-    // audit flags) — a new rows-only query is a deliberate decision,
-    // not a default: extend this assert's message with the rationale
-    // if one ever becomes unavoidable
+    // audit flags), and QueryDef's oracle is no longer optional
     val rowsOnly = q.keySet -- o.keySet
     assert(rowsOnly.isEmpty, s"query without oracle: $rowsOnly")
     // an oracle can be NON-NULL yet null-valued if a shared SQL val is

@@ -101,10 +101,13 @@ class SurrogateIdsSpec extends SparkSpec {
     inClusterSafe {
       embeddings.count()
       val before = pinnedIds()
-      assert(SimilarityOps.pqTrain(embeddings).count() ==
+      // one codebook entry per (sub, cid), exploded to scalar rows
+      assert(SimilarityOps.pqTrainQuantized(embeddings)
+        .select("sub", "cid").distinct().count() ==
         SimilarityOps.PqSubspaces * SimilarityOps.PqCentroids)
       assert(pinnedSince(before) == 0, "pqTrain leaked a pin")
-      assert(SimilarityOps.ivfTrain(embeddings, k = 4, iters = 2).count() == 4)
+      assert(SimilarityOps.ivfTrainQuantized(embeddings, k = 4, iters = 2)
+        .count() == 4)
       assert(pinnedSince(before) == 0, "ivfTrain leaked a pin")
     }
   }
@@ -124,7 +127,7 @@ class SurrogateIdsSpec extends SparkSpec {
     inClusterSafe {
       val before = pinnedIds()
       val e = intercept[IllegalArgumentException](
-        SimilarityOps.ivfTrain(emb, k = 2, iters = 1))
+        SimilarityOps.ivfTrainQuantized(emb, k = 2, iters = 1))
       assert(e.getMessage.contains("centroid 2 has a null vector"))
       assert(pinnedSince(before) == 0,
         "the seed pin leaked past a failed training")

@@ -236,6 +236,29 @@ class TsvReaderSpec extends SparkSpec {
         "averageRating", ex.getMessage)
   }
 
+  test("transfer from a URI folder holding only .tsv.gz files finds " +
+    "them and reads them through their codec") {
+    val dir = Files.createTempDirectory("graft_gz_transfer")
+    val datasets = Seq(ImdbDataset.TitleRatings, ImdbDataset.TitleBasics)
+    datasets.foreach { d =>
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(
+        dir.resolve(s"${d.datasetName}.tsv.gz")))
+      try out.write(Files.readAllBytes(
+        java.nio.file.Paths.get(fixture(s"${d.datasetName}.tsv"))))
+      finally out.close()
+    }
+    val folder = dir.toUri.toString.stripSuffix("/")
+    assert(folder.startsWith("file:/"), folder)
+    val wh = Files.createTempDirectory("graft_gz_warehouse")
+    try {
+      val frames = Pimdb(spark).transfer(folder, datasets, Some(wh.toString))
+      datasets.foreach { d =>
+        val plain = withRead(fixture(s"${d.datasetName}.tsv"), d)(_.count())
+        assert(plain > 0 && frames(d).count() == plain, d.datasetName)
+      }
+    } finally datasets.foreach(d => spark.catalog.dropTempView(d.tableName))
+  }
+
   test("property: typed decode matches a reference model over random rows " +
     "(500 seeded samples)") {
     // model of reference semantics (database.py:320-355): \N → null,

@@ -357,7 +357,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(both.filter($"fast" =!= $"slow").count() == 0)
     // SQL surface too
     emb.createOrReplaceTempView("emb_cos_test")
-    CosineSimilarity.register(spark)
     val viaSql = spark.sql(
       """SELECT graft_cosine_sim(x.embedding, y.embedding) AS c
         |FROM emb_cos_test x JOIN emb_cos_test y ON x.vec_id = 0 AND y.vec_id = 1""".stripMargin)
@@ -521,7 +520,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("IVF training recovers the true cluster structure") {
-    val trained = SimilarityOps.ivfTrain(vectors, k = 4, iters = 3)
+    val trained = SimilarityOps.ivfTrainQuantized(vectors, k = 4, iters = 3)
     assert(trained.count() == 4)
     // after training, assignment must be exactly the label partition
     val assign = SimilarityOps.ivfAssign(vectors, trained)
@@ -561,7 +560,7 @@ class PipelineOpsSpec extends SparkSpec {
         Row(1L, Seq[Any](1f, 0.2f)),
         Row(2L, Seq[Any](1f, 0.1f)),
         Row(3L, Seq[Any](null, 1f)))), schema)
-    val cents = SimilarityOps.ivfTrain(emb, k = 2, iters = 2)
+    val cents = SimilarityOps.ivfTrainQuantized(emb, k = 2, iters = 2)
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[java.lang.Float](1)).toMap
     assert(cents.keySet == Set(0L, 2L))
@@ -1510,8 +1509,13 @@ class PipelineOpsSpec extends SparkSpec {
     def qErr(a: org.apache.spark.sql.DataFrame): Double =
       a.agg(sum(col("dmin"))).head.getDouble(0)
     val seededErr = qErr(SimilarityOps.pqAssign(e))
-    val trainedErr = qErr(
-      SimilarityOps.pqAssignWith(e, SimilarityOps.pqTrain(e)))
+    // pqTrainQuantized emits scalar (sub, cid, dim, v) rows: fold them
+    // back into the (sub, cid, csub) codebook pqAssignWith reads
+    val trainedCb = SimilarityOps.pqTrainQuantized(e, iters = 5)
+      .groupBy(col("sub"), col("cid"))
+      .agg(transform(sort_array(collect_list(struct(col("dim"), col("v")))),
+        x => x.getField("v")).as("csub"))
+    val trainedErr = qErr(SimilarityOps.pqAssignWith(e, trainedCb))
     info(f"quantization error: seeded=$seededErr%.0f trained=$trainedErr%.0f")
     assert(trainedErr < seededErr * 0.8,
       f"training should cut quantization error: $trainedErr%.0f vs $seededErr%.0f")
@@ -1810,9 +1814,11 @@ class PipelineOpsSpec extends SparkSpec {
     "rate field; a corrupted magic is flagged") {
     import spark.implicits._
     val media = Multimodal.wavMedia(spark, "/root/testdata/sf0.001")
-    val got = Multimodal.decodeWav(media).collect().map(r =>
-      r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3),
-        r.getInt(4), r.getLong(5)))).toMap
+    val got = graft.SparkEntry.queries("q_audio_stats")(
+        spark, "/root/testdata/sf0.001").collect().map(r =>
+      r.getAs[Long]("doc_id") -> ((r.getAs[Int]("sample_rate"),
+        r.getAs[Long]("n_samples"), r.getAs[Long]("duration_us"),
+        r.getAs[Int]("peak_abs"), r.getAs[Long]("abs_sum")))).toMap
     assert(got.nonEmpty)
     got.foreach { case (id, (rate, n, dur, peak, absSum)) =>
       val erate = Multimodal.WavRates((id % 4).toInt)

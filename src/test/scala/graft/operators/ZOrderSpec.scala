@@ -36,7 +36,7 @@ class ZOrderSpec extends SparkSpec {
         floor(col("ts_us") / 3600000000L).cast("long").as("hour"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
     val nFiles = 16
-    ZOrder.writeZOrdered(ev, col("user_id"), col("hour"),
+    ZOrder.writeZOrderedQuantile(ev, col("user_id"), col("hour"),
       nFiles, s"$tmp/z")
     // the baseline every event store starts from: sorted by time only
     ev.repartitionByRange(nFiles, col("hour"))
@@ -115,8 +115,8 @@ class ZOrderSpec extends SparkSpec {
     assert(answer(ev).nonEmpty, "vacuous box — fixture broken")
   }
 
-  test("manifest pruning head-to-head: the Hilbert layout reads no " +
-    "more files than Morton for the same box (both beat unordered)") {
+  test("manifest pruning head-to-head: the Morton layout reads fewer " +
+    "files than an unordered layout for the same box") {
     import graft.sources.Manifest
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts_us"))
@@ -125,8 +125,6 @@ class ZOrderSpec extends SparkSpec {
     val nFiles = 16
     ZOrder.writeZOrderedQuantile(ev, col("user_id"), col("ts_us"),
       nFiles, s"$tmp/m")
-    ZOrder.writeHilbertOrdered(ev, col("user_id"), col("ts_us"),
-      nFiles, s"$tmp/h")
     // unordered baseline: hash-partitioned, no locality at all
     ev.repartition(nFiles).write.mode("overwrite").parquet(s"$tmp/u")
     val mm = ev.agg(min(col("ts_us")) + max(col("ts_us"))).head()
@@ -139,18 +137,11 @@ class ZOrderSpec extends SparkSpec {
         Manifest.build(laid, Seq("user_id", "ts_us")), ranges)
         .inputFiles.length
     }
-    val (m, h, u) = (filesRead(s"$tmp/m"), filesRead(s"$tmp/h"),
-      filesRead(s"$tmp/u"))
-    info(s"files read for the box: morton=$m hilbert=$h unordered=$u of $nFiles")
+    val (m, u) = (filesRead(s"$tmp/m"), filesRead(s"$tmp/u"))
+    info(s"files read for the box: morton=$m unordered=$u of $nFiles")
     // no locality = every file's box spans the domain = nothing prunes
     assert(u == nFiles, s"unordered baseline pruned $u — fixture broken")
-    assert(m < nFiles && h < nFiles, "curve layouts must prune")
-    // the unit-step property gives Hilbert boxes that TEND to be at
-    // least as tight as Morton's quadrant-jumping curve — a tendency,
-    // not a per-corpus guarantee, so allow one file of slack (a
-    // regenerated/rescaled corpus can legitimately flip a boundary
-    // file) and report the raw comparison for the log
-    assert(h <= m + 1, s"hilbert read MORE files than morton ($h > $m + 1)")
+    assert(m < nFiles, "the curve layout must prune")
   }
 
   test("manifest pruning keeps a file whose queried column is entirely " +
@@ -253,8 +244,8 @@ class ZOrderSpec extends SparkSpec {
       "the disjoint batch-a file must still prune")
   }
 
-  test("manifest pruning head-to-head at 256 files: both curve layouts " +
-    "keep pruning when the file count scales 16x, the unordered " +
+  test("manifest pruning head-to-head at 256 files: the Morton layout " +
+    "keeps pruning when the file count scales 16x, the unordered " +
     "baseline still reads everything") {
     import graft.sources.Manifest
     val ev = graft.Tables.events(spark, dir)
@@ -264,8 +255,6 @@ class ZOrderSpec extends SparkSpec {
     val nFiles = 256
     ZOrder.writeZOrderedQuantile(ev, col("user_id"), col("ts_us"),
       nFiles, s"$tmp/m")
-    ZOrder.writeHilbertOrdered(ev, col("user_id"), col("ts_us"),
-      nFiles, s"$tmp/h")
     ev.repartition(nFiles).write.mode("overwrite").parquet(s"$tmp/u")
     val mm = ev.agg(min(col("ts_us")) + max(col("ts_us"))).head()
     val mid = mm.getLong(0) / 2
@@ -277,30 +266,28 @@ class ZOrderSpec extends SparkSpec {
         Manifest.build(laid, Seq("user_id", "ts_us")), ranges)
         .inputFiles.length
     }
-    val (m, h, u) = (filesRead(s"$tmp/m"), filesRead(s"$tmp/h"),
-      filesRead(s"$tmp/u"))
-    info(s"files read at 256: morton=$m hilbert=$h unordered=$u of $nFiles")
+    val (m, u) = (filesRead(s"$tmp/m"), filesRead(s"$tmp/u"))
+    info(s"files read at 256: morton=$m unordered=$u of $nFiles")
     // at ~23 rows/file a few hash-partitioned files can miss the box
     // by luck — the baseline claim is "no locality ⇒ no real pruning",
     // not an exact count
     assert(u >= (nFiles * 9) / 10,
       s"unordered baseline pruned to $u — fixture broken")
-    // finer files = tighter boxes: the curves must prune a LARGER
-    // fraction than at 16 files (where they read ~60-75%); half the
+    // finer files = tighter boxes: the curve must prune a LARGER
+    // fraction than at 16 files (where it reads ~60-75%); half the
     // layout is a conservative floor for this corpus's box
-    assert(m <= nFiles / 2 && h <= nFiles / 2,
-      s"curve layouts stopped pruning at 256 files (m=$m h=$h)")
+    assert(m <= nFiles / 2,
+      s"the curve layout stopped pruning at 256 files (m=$m)")
   }
 
   test("quantile-binned z-order survives a heavy-tailed dimension: one " +
     "outlier stretches the min/max scale into a one-dimension sort, " +
     "quantile bins keep both dimensions prunable") {
-    // the documented min/max failure mode, planted: the body of the
-    // dimension is the uniform user_id domain, plus ONE far outlier.
-    // min/max normalization maps the whole body to bin 0 (the outlier
-    // owns the scale), so the layout collapses to an hour sort and a
-    // body-value filter must read every file. Rank bins are
-    // outlier-indifferent.
+    // the min/max failure mode, planted: the body of the dimension is
+    // the uniform user_id domain, plus ONE far outlier. min/max
+    // normalization would map the whole body to bin 0 (the outlier
+    // owns the scale), collapsing the layout to an hour sort. Rank
+    // bins are outlier-indifferent.
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         floor(col("ts_us") / 3600000000L).cast("long").as("hour"))
@@ -309,7 +296,6 @@ class ZOrderSpec extends SparkSpec {
           .otherwise(col("user_id")))
     val tmp = java.nio.file.Files.createTempDirectory("graft_zorder_q")
     val nFiles = 16
-    ZOrder.writeZOrdered(ev, col("skewed"), col("hour"), nFiles, s"$tmp/mm")
     ZOrder.writeZOrderedQuantile(ev, col("skewed"), col("hour"),
       nFiles, s"$tmp/q")
     // probe workload: 20 rank-spread values from the BODY of the
@@ -328,13 +314,9 @@ class ZOrderSpec extends SparkSpec {
       probes.map(v => stats.count { case (lo, hi) => lo <= v && v <= hi })
         .sum.toDouble / (probes.length.toDouble * stats.length)
     }
-    val mm = meanFilesTouched(s"$tmp/mm")
     val q = meanFilesTouched(s"$tmp/q")
     info(f"mean files touched by a body-value point filter: " +
-      f"min/max-binned=$mm%.3f quantile-binned=$q%.3f")
-    assert(mm > 0.9,
-      f"planted outlier failed to degrade the min/max layout ($mm%.3f) — " +
-        "fixture no longer exercises the failure mode")
+      f"quantile-binned=$q%.3f")
     assert(q < 0.6, f"quantile layout still reads $q%.3f of files — " +
       "rank binning lost its locality")
     // and the second dimension keeps locality under quantile binning
@@ -392,42 +374,6 @@ class ZOrderSpec extends SparkSpec {
       assert(r.getLong(3) == ref(ZOrder.HBits, r.getLong(1), r.getLong(2)),
         s"hilbert mismatch for (${r.getLong(1)}, ${r.getLong(2)})")
     }
-  }
-
-  test("hilbert-ordered files keep fractional bounding boxes in both " +
-    "dimensions — measured head-to-head with the quantile z-order") {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        floor(col("ts_us") / 3600000000L).cast("long").as("hour"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hilbert")
-    val nFiles = 16
-    ZOrder.writeHilbertOrdered(ev, col("user_id"), col("hour"),
-      nFiles, s"$tmp/h")
-    ZOrder.writeZOrderedQuantile(ev, col("user_id"), col("hour"),
-      nFiles, s"$tmp/z")
-    def meanSpans(path: String): (Double, Double) = {
-      val df = spark.read.parquet(path)
-        .select(col("user_id"), col("hour"), input_file_name().as("f"))
-      val dom = df.agg(
-        (max("user_id") - min("user_id")).cast("double").as("du"),
-        (max("hour") - min("hour")).cast("double").as("dh")).head()
-      val r = df.groupBy("f").agg(
-        ((max("user_id") - min("user_id")) / dom.getDouble(0)).as("su"),
-        ((max("hour") - min("hour")) / dom.getDouble(1)).as("sh"))
-        .agg(avg("su"), avg("sh")).head()
-      (r.getDouble(0), r.getDouble(1))
-    }
-    val (hUser, hHour) = meanSpans(s"$tmp/h")
-    val (zUser, zHour) = meanSpans(s"$tmp/z")
-    info(f"mean file span: hilbert user=$hUser%.3f hour=$hHour%.3f; " +
-      f"z-order user=$zUser%.3f hour=$zHour%.3f")
-    // the layout contract: both dimensions prunable from footer stats
-    assert(hUser < 0.6, f"hilbert user-dim span $hUser%.3f — no locality")
-    assert(hHour < 0.6, f"hilbert hour-dim span $hHour%.3f — no locality")
-    // and the curve swap must not cost locality vs Morton overall
-    assert(hUser + hHour <= (zUser + zHour) * 1.15,
-      f"hilbert total span ${hUser + hHour}%.3f worse than morton " +
-        f"${zUser + zHour}%.3f beyond tolerance")
   }
 
   test("hive partition pruning: the day-range predicate reaches " +

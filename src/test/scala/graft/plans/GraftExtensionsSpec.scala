@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensionsSpec extends SparkSpec {
 
   test("conf-injected graft_cosine_sim is callable from SQL, no register() call") {
-    // NOTE: CosineSimilarity.register is deliberately NOT called —
-    // resolution must come from the extensions injection alone.
+    // NOTE: no Column entry point (which registers the function) runs
+    // first — resolution must come from the extensions injection alone.
     val v = spark.sql(
       """SELECT graft_cosine_sim(
         |         array(CAST(3.0 AS FLOAT), CAST(0.0 AS FLOAT)),

@@ -99,12 +99,9 @@ class PlanAuditSpec extends SparkSpec {
     "oracle has a query, and names are unique gate identifiers") {
     val q = graft.SparkEntry.queries.keySet
     val o = graft.SparkEntry.oracleSql.keySet
-    // q == o is DELIBERATELY stricter than the QueryDef.rowsOnly
-    // escape hatch (driver contract: oracle-less ops get a weaker
-    // rows>0 check): this registry currently holds full oracles for
-    // every gate, and a rowsOnly registration should be a conscious
-    // decision that updates this closure test alongside, not a silent
-    // downgrade of one gate's verification strength
+    // q == o: QueryDef carries a full oracle for every gate (the
+    // driver contract's weaker rows>0 check for oracle-less ops is not
+    // something this registry can express)
     assert(q == o, s"query/oracle drift: only-query=${(q -- o).toSeq.sorted
       .mkString(",")} only-oracle=${(o -- q).toSeq.sorted.mkString(",")}")
     assert(q.forall(_.startsWith("q_")), "gate names must be q_-prefixed")

@@ -69,7 +69,8 @@ class SourcesSpec extends SparkSpec {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
     val existing = docs.filter(col("doc_id") < DedupOps.IncrementalSplit)
     val batch = docs.filter(col("doc_id") >= DedupOps.IncrementalSplit)
-    DedupOps.writeBandIndex(existing, "band_index", 4)
+    Sources.writeBucketed(DedupOps.minhashBands(existing), "band_index",
+      Seq("band", "bucket"), 4)
     // force the shuffle-join path and a non-adaptive plan so the
     // exchange placement is inspectable deterministically
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -262,8 +263,9 @@ class SourcesSpec extends SparkSpec {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val nBuckets = 4
-    DedupOps.writeBandIndex(
-      docs.filter(col("doc_id") < 100), "band_compact_test", nBuckets)
+    Sources.writeBucketed(
+      DedupOps.minhashBands(docs.filter(col("doc_id") < 100)),
+      "band_compact_test", Seq("band", "bucket"), nBuckets)
     try {
       // three streamed appends — each may land a file in every bucket
       Seq((100, 200), (200, 300), (300, 500)).foreach { case (lo, hi) =>
@@ -754,6 +756,46 @@ class SourcesSpec extends SparkSpec {
     } finally Sources.dropVersioned(spark, t)
   }
 
+  test("a FAILED creating write whose cleanup ALSO fails surfaces the " +
+    "write error, with the cleanup failure attached as suppressed") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val t = "failed_cleanup_test"
+    val marker = new Path(spark.sessionState.catalog
+      .defaultTablePath(TableIdentifier(t)).toString + "._append_creating")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the failing write turns the in-flight marker into a NON-EMPTY
+    // directory before it throws, so the handler's non-recursive
+    // marker delete fails too
+    val markerFile = marker.toUri.getPath
+    val boom = org.apache.spark.sql.functions.udf { (_: Long) =>
+      val m = java.nio.file.Paths.get(markerFile)
+      try {
+        if (java.nio.file.Files.isRegularFile(m))
+          java.nio.file.Files.delete(m)
+        java.nio.file.Files.createDirectories(m)
+        java.nio.file.Files.createFile(m.resolve("planted"))
+      } catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      sys.error("injected write failure"): Long
+    }
+    try {
+      val e = intercept[Exception] {
+        Sources.appendBucketed(
+          (0L until 4L).toDF("a").select(col("a"), boom(col("a")).as("b")),
+          t, Seq("a"), 2)
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(chain.contains("injected write failure"),
+        s"the write error must be the one thrown: $chain")
+      assert(e.getSuppressed.exists(_.getMessage.contains("not empty")),
+        s"cleanup failure not attached: ${e.getSuppressed.toSeq}")
+    } finally {
+      fs.delete(marker, true)
+      Sources.dropVersioned(spark, t)
+    }
+  }
+
   test("dropVersioned's dead-file sweep matches the exact version " +
     "pattern: a prefix-colliding NEIGHBOR table's files survive") {
     import org.apache.spark.sql.catalyst.TableIdentifier
@@ -889,76 +931,6 @@ class SourcesSpec extends SparkSpec {
       assert(spark.table("stars_stale_test").count() == 16)
       assert(!fs.exists(stale), "dead session's file survived the swap")
     } finally Sources.dropVersioned(spark, "stars_stale_test")
-  }
-
-  test("stored IVF-PQ index: search prunes the code table to the probed " +
-    "cells, reads it with NO exchange, and matches the in-memory search") {
-    import graft.operators.SimilarityOps
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val centroids = emb.filter(col("vec_id") < SimilarityOps.NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    // two probes × nprobe=2 → at most 4 of the 8 cells probed, so the
-    // partition pruning is visible in file counts
-    val probes = emb.filter(col("vec_id") < 2)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    SimilarityOps.writeIvfPqIndex(emb, centroids, "ivfpq")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val stored = SimilarityOps.ivfPqSearchStored(spark, "ivfpq", probes,
-        SimilarityOps.NumProbeCells, SimilarityOps.TopK)
-      def subtree(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(subtree)
-      val nodes = subtree(stored.queryExecution.executedPlan)
-      val codeScans = nodes.collect {
-        case f: FileSourceScanExec
-          if f.tableIdentifier.exists(_.table == "ivfpq_codes") => f
-      }
-      assert(codeScans.nonEmpty, "stored code-table scan missing from plan")
-      codeScans.foreach { s =>
-        // partition pruning: the literal probed-cell filter reaches the
-        // scan as a PartitionFilter, and only the probed cells' files
-        // are read (per-query cost nprobe/ncells BEFORE any byte moves)
-        val pf = s.metadata.getOrElse("PartitionFilters", "")
-        assert(pf.contains("centroid_id"), s"no partition pruning: $pf")
-        val allParts = spark.sql("SHOW PARTITIONS ivfpq_codes").count()
-        assert(allParts > s.selectedPartitions.partitionCount,
-          s"scan did not prune: $allParts partitions, " +
-            s"${s.selectedPartitions.partitionCount} selected")
-      }
-      // the stored side feeds the broadcast ADC join with NO exchange:
-      // scoring is map-side over the pruned code files
-      val bhjs = nodes.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if subtree(j).exists(codeScans.contains(_)) => j
-      }
-      assert(bhjs.nonEmpty, "broadcast ADC join over the code scan missing:\n" +
-        stored.queryExecution.executedPlan)
-      // only the STREAMED (code-table) side must be exchange-free; the
-      // broadcast side is the tiny probe distance table, whose own
-      // 80-row window shuffle is irrelevant to the stored layout
-      bhjs.foreach { j =>
-        val codeSides = j.children
-          .filter(c => subtree(c).exists(codeScans.contains(_)))
-        assert(codeSides.nonEmpty)
-        codeSides.foreach(c => assert(
-          !subtree(c).exists(_.isInstanceOf[ShuffleExchangeExec]),
-          "stored code side must not shuffle before the ADC join:\n" +
-            stored.queryExecution.executedPlan))
-      }
-      // and the stored path returns exactly the in-memory results
-      val inMem = SimilarityOps.ivfPqSearch(emb, centroids, probes,
-        SimilarityOps.NumProbeCells, SimilarityOps.TopK)
-        .collect().map(_.toSeq).toSet
-      val viaIndex = stored.collect().map(_.toSeq).toSet
-      assert(viaIndex == inMem)
-      assert(viaIndex.nonEmpty)
-    } finally {
-      spark.conf.unset("spark.sql.adaptive.enabled")
-      Seq("ivfpq_centroids", "ivfpq_codebook", "ivfpq_codes")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
   }
 
   test("concurrent writers serialize within the driver: appends racing " +
