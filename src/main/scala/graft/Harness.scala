@@ -93,6 +93,15 @@ object Harness {
     System.gc()
   }
 
+  /** Classes Janino has compiled in this JVM so far: Spark's
+    * generated-code compile counter, which a hit in the
+    * generated-class cache does not move. Over a warm run the delta
+    * is 0 or a few, unless the cache
+    * ([[GraftSession.CodegenCacheEntries]]) is smaller than the run's
+    * working set. */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Median of a non-empty sample (even count: mean of the middle pair). */
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

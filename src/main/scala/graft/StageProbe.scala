@@ -24,10 +24,11 @@ object StageProbe {
       shufWriteB: Long, inputB: Long, deserMs: Long, gcMs: Long,
       fetchWaitMs: Long)
 
-  /** One query's timed run: its wall, jobs (with their summed wall)
-    * and completed stages. */
+  /** One query's timed run: its wall, jobs (with their summed wall),
+    * completed stages and the classes Janino compiled during it (0
+    * after the warmup unless the generated-class cache thrashes). */
   final case class Report(name: String, wallSec: Double, jobs: Int,
-      jobWallMs: Long, stages: Seq[StageRow])
+      jobWallMs: Long, stages: Seq[StageRow], compiles: Long)
 
   def main(args: Array[String]): Unit =
     Harness.withSession(run(_, Harness.sfDir, args.toSeq))
@@ -45,6 +46,7 @@ object StageProbe {
       Harness.quiesce(spark)
       val listener = new StageListener
       spark.sparkContext.addSparkListener(listener)
+      val compiles0 = Harness.compiles
       val wallSec =
         try {
           val sec = Harness.timeNoop(SparkEntry.queries(name)(spark, sfDir))
@@ -53,11 +55,12 @@ object StageProbe {
           org.apache.spark.GraftBusDrain(spark.sparkContext)
           sec
         } finally spark.sparkContext.removeSparkListener(listener)
-      val r = listener.report(name, wallSec)
+      val r = listener.report(name, wallSec, Harness.compiles - compiles0)
       println(f"%n===== $name wall $wallSec%.2fs  jobs ${r.jobs}  " +
         f"jobWallSum ${r.jobWallMs / 1000.0}%.2fs  stages ${r.stages.size}  " +
         f"stageWallSum ${r.stages.map(_.wallMs).sum / 1000.0}%.2fs  " +
-        f"taskTimeSum ${r.stages.map(_.taskMs).sum / 1000.0}%.2fs")
+        f"taskTimeSum ${r.stages.map(_.taskMs).sum / 1000.0}%.2fs  " +
+        s"compiles ${r.compiles}")
       r.stages.filter(s => s.wallMs >= 20 || s.taskMs >= 20).foreach { s =>
         println(f"  j${s.jobId}%-4d s${s.stageId}%-5d tasks ${s.tasks}%-4d " +
           f"wall ${s.wallMs / 1000.0}%6.2fs task ${s.taskMs / 1000.0}%6.2fs " +
@@ -99,9 +102,9 @@ object StageProbe {
         m.shuffleReadMetrics.fetchWaitTime))
     }
 
-    def report(name: String, wallSec: Double): Report =
+    def report(name: String, wallSec: Double, compiles: Long): Report =
       Report(name, wallSec, jobs.size,
         jobs.asScala.values.collect { case (s, e) if e > 0 => e - s }.sum,
-        stages.asScala.toSeq.sortBy(_.stageId))
+        stages.asScala.toSeq.sortBy(_.stageId), compiles)
   }
 }

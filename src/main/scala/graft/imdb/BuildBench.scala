@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * Prints ONE JSON line:
   * {{{
   * {"metric":"imdb_transfer_build","transfer_sec":..,"build_sec":..,
-  *  "total_sec":..,"tsv_mb":..,"gen_sec":..,"rows":{..},
+  *  "total_sec":..,"transfer_compiles":..,"build_compiles":..,
+  *  "tsv_mb":..,"gen_sec":..,"rows":{..},
   *  "normalized_tables":15,"cpus":..}
   * }}}
   * and mirrors it to `SPARK_GRAFT_BUILD_OUT` (default
@@ -253,12 +254,13 @@ object BuildBench {
 
     val wh = java.nio.file.Files.createTempDirectory("graft_build_wh")
     val p = Pimdb(spark)
-    val t1 = System.nanoTime()
+    val (c1, t1) = (Harness.compiles, System.nanoTime())
     p.transfer(dir.toString, warehouse = Some(wh.toString))
     val transferSec = secs(t1)
-    val t2 = System.nanoTime()
+    val (c2, t2) = (Harness.compiles, System.nanoTime())
     val normalized = p.build(warehouse = Some(wh.toString))
     val buildSec = secs(t2)
+    val c3 = Harness.compiles
     require(p.buildWarnings.isEmpty,
       s"build validation warnings: ${p.buildWarnings.mkString("; ")}")
 
@@ -283,6 +285,9 @@ object BuildBench {
         // Double sum prints FP noise (372.34+118.7 = 491.03999…)
         s""""build_sec":$buildSec,"total_sec":${
           math.round((transferSec + buildSec) * 100) / 100.0},""" +
+        // generated classes compiled in each half: a thrashing
+        // generated-class cache shows as a count, not only as seconds
+        s""""transfer_compiles":${c2 - c1},"build_compiles":${c3 - c2},""" +
         s""""tsv_mb":${math.round(tsvMb)},"gen_sec":$genSec,""" +
         s""""rows":{${rows.toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":$v""" }.mkString(",")}},""" +

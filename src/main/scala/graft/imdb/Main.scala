@@ -86,17 +86,20 @@ object Main {
     case _ => "WARN"
   }
 
+  /** The CLI's session settings on `b`: the engine tuning every graft
+    * session shares, so transfer and build run under the settings
+    * BuildBench measures; SPARK_MASTER is the deployment's choice
+    * (local[*] by default). */
+  private[imdb] def configure(b: SparkSession.Builder): SparkSession.Builder =
+    graft.GraftSession.shared(b
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .appName("pimdbspark")
+      .config("spark.sql.shuffle.partitions", graft.Harness.cpus.toString))
+
   def main(args: Array[String]): Unit = {
     var spark: Option[SparkSession] = None
-    // the engine tuning every graft session shares, so transfer and
-    // build run under the settings BuildBench measures; SPARK_MASTER
-    // is the deployment's choice (local[*] by default)
     def session: SparkSession = {
-      val s = graft.GraftSession.shared(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("pimdbspark")
-        .config("spark.sql.shuffle.partitions", graft.Harness.cpus.toString))
-        .getOrCreate()
+      val s = configure(SparkSession.builder()).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       spark = Some(s)
       s

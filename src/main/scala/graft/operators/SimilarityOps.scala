@@ -2897,22 +2897,29 @@ object SimilarityOps {
   }
 
   /** Index-build half of IVFADC: residual-code the corpus against its
-    * IVF cells. Returns (codes, residual codebook) — codes =
+    * IVF cells, and run `body` on (codes, residual codebook) — codes =
     * (vec_id, sub, code, dmin, centroid_id), codebook = the exploded
     * (cid, sub, csub) residual codebook both coding and search-time
     * distance tables must share. Both are ONE-OFF corpus passes at
-    * 100 TB. */
-  def ivfPqIndex(e: DataFrame, centroids: DataFrame): (DataFrame, DataFrame) = {
+    * 100 TB. The index pins the cell assignment and the residuals and
+    * owns both pins: it releases them when `body` returns or throws,
+    * so `body` must have computed what it needs from them by then. */
+  private def withIvfPqIndex[A](e: DataFrame, centroids: DataFrame)(
+      body: (DataFrame, DataFrame) => A): A = {
     val cells = assignConst(e, collectCentroids(centroids))
       .pinned // reused: residual build + coded-corpus scan
-    val rdf = e.join(cells, "vec_id")
-      .join(broadcast(centroids), "centroid_id")
-      .select(col("vec_id"), col("centroid_id"),
-        zip_with(col("embedding").cast("array<double>"),
-          col("cv").cast("array<double>"), (x, y) => x - y).as("embedding"))
-      .pinned // reused: codebook seed + per-subspace coding
-    val cb = pqCodebook(rdf, ResidualSeedFrom)
-    (pqAssignWith(rdf, cb).join(cells, "vec_id"), cb)
+    try {
+      val rdf = e.join(cells, "vec_id")
+        .join(broadcast(centroids), "centroid_id")
+        .select(col("vec_id"), col("centroid_id"),
+          zip_with(col("embedding").cast("array<double>"),
+            col("cv").cast("array<double>"), (x, y) => x - y).as("embedding"))
+        .pinned // reused: codebook seed + per-subspace coding
+      try {
+        val cb = pqCodebook(rdf, ResidualSeedFrom)
+        body(pqAssignWith(rdf, cb).join(cells, "vec_id"), cb)
+      } finally Materialize.unpin(rdf)
+    } finally Materialize.unpin(cells)
   }
 
   /** Full IVFADC search (Jégou et al. TPAMI'11 §V): corpus vectors
@@ -2933,33 +2940,37 @@ object SimilarityOps {
     * subspace order; top-k is a bounded window over the probe
     * queries. Self-matches excluded, ties break on vec_id.
     *
+    * The result (probe queries × k rows) is collected into a local
+    * frame, so the index's two pins are released before this returns.
+    *
     * Output: (query_id, neighbor_id, rnk, adc_dist).
     */
   def ivfPqSearch(e: DataFrame, centroids: DataFrame, probes: DataFrame,
-      nprobe: Int, k: Int): DataFrame = {
-    val (codes, codebook) = ivfPqIndex(e, centroids)
-    val s = probes.sparkSession
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qv"), col("centroid_id"), col("cv"),
-        CosineSimilarity(s, col("qv"), col("cv")).as("ccos"))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crnk") <= nprobe)
-    val qres = probeCells.select(col("query_id"), col("centroid_id"),
-      posexplode(subvecs(zip_with(col("qv").cast("array<double>"),
-        col("cv").cast("array<double>"), (x, y) => x - y)))
-        .as(Seq("sub", "qsub")))
-    val dt = qres.join(broadcast(codebook), "sub")
-      .select(col("query_id"), col("centroid_id"), col("sub"), col("cid"),
-        sqDist(col("qsub"), col("csub")).as("d"))
-    val joined = codes.as("a")
-      .join(broadcast(dt).as("t"),
-        col("a.centroid_id") === col("t.centroid_id") &&
-          col("a.sub") === col("t.sub") && col("a.code") === col("t.cid"))
-      .select(col("t.query_id"), col("a.vec_id"), col("a.sub"), col("t.d"))
-    adcTopK(joined, k)
-  }
+      nprobe: Int, k: Int): DataFrame =
+    withIvfPqIndex(e, centroids) { (codes, codebook) =>
+      val s = probes.sparkSession
+      val probeCells = probes.crossJoin(broadcast(centroids))
+        .select(col("query_id"), col("qv"), col("centroid_id"), col("cv"),
+          CosineSimilarity(s, col("qv"), col("cv")).as("ccos"))
+        .withColumn("crnk", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("ccos").desc, col("centroid_id"))))
+        .filter(col("crnk") <= nprobe)
+      val qres = probeCells.select(col("query_id"), col("centroid_id"),
+        posexplode(subvecs(zip_with(col("qv").cast("array<double>"),
+          col("cv").cast("array<double>"), (x, y) => x - y)))
+          .as(Seq("sub", "qsub")))
+      val dt = qres.join(broadcast(codebook), "sub")
+        .select(col("query_id"), col("centroid_id"), col("sub"), col("cid"),
+          sqDist(col("qsub"), col("csub")).as("d"))
+      val joined = codes.as("a")
+        .join(broadcast(dt).as("t"),
+          col("a.centroid_id") === col("t.centroid_id") &&
+            col("a.sub") === col("t.sub") && col("a.code") === col("t.cid"))
+        .select(col("t.query_id"), col("a.vec_id"), col("a.sub"), col("t.d"))
+      val top = adcTopK(joined, k)
+      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+    }
 
   /** Stored FULL-PRECISION IVF index: every corpus vector tagged with
     * its nearest centroid and saved bucketed+sorted by centroid_id
