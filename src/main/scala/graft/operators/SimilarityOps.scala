@@ -2902,10 +2902,15 @@ object SimilarityOps {
     * (cid, sub, csub) residual codebook both coding and search-time
     * distance tables must share. Both are ONE-OFF corpus passes at
     * 100 TB. The index pins the cell assignment and the residuals and
-    * owns both pins: it releases them when `body` returns or throws,
-    * so `body` must have computed what it needs from them by then. */
-  private def withIvfPqIndex[A](e: DataFrame, centroids: DataFrame)(
-      body: (DataFrame, DataFrame) => A): A = {
+    * owns both pins: it releases them when `body` returns or throws.
+    * Under clusterSafe a pin is a persisted RDD the release frees, so
+    * `body`'s result (bounded: probe queries × k rows) is collected
+    * into a local frame first. In the default mode a pin is a local
+    * checkpoint the release leaves to the ContextCleaner, which
+    * sweeps it only once no frame refers to it, so the result stays
+    * lazy and keeps its one fused plan. */
+  private def withIvfPqIndex(e: DataFrame, centroids: DataFrame)(
+      body: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val cells = assignConst(e, collectCentroids(centroids))
       .pinned // reused: residual build + coded-corpus scan
     try {
@@ -2917,7 +2922,11 @@ object SimilarityOps {
         .pinned // reused: codebook seed + per-subspace coding
       try {
         val cb = pqCodebook(rdf, ResidualSeedFrom)
-        body(pqAssignWith(rdf, cb).join(cells, "vec_id"), cb)
+        val out = body(pqAssignWith(rdf, cb).join(cells, "vec_id"), cb)
+        if (Materialize.clusterSafe(out))
+          out.sparkSession.createDataFrame(
+            java.util.Arrays.asList(out.collect(): _*), out.schema)
+        else out
       } finally Materialize.unpin(rdf)
     } finally Materialize.unpin(cells)
   }
@@ -2940,8 +2949,8 @@ object SimilarityOps {
     * subspace order; top-k is a bounded window over the probe
     * queries. Self-matches excluded, ties break on vec_id.
     *
-    * The result (probe queries × k rows) is collected into a local
-    * frame, so the index's two pins are released before this returns.
+    * Under clusterSafe the result is a local frame, so the index's
+    * two pins are released before this returns (see withIvfPqIndex).
     *
     * Output: (query_id, neighbor_id, rnk, adc_dist).
     */
@@ -2968,8 +2977,7 @@ object SimilarityOps {
           col("a.centroid_id") === col("t.centroid_id") &&
             col("a.sub") === col("t.sub") && col("a.code") === col("t.cid"))
         .select(col("t.query_id"), col("a.vec_id"), col("a.sub"), col("t.d"))
-      val top = adcTopK(joined, k)
-      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+      adcTopK(joined, k)
     }
 
   /** Stored FULL-PRECISION IVF index: every corpus vector tagged with

@@ -40,8 +40,10 @@ class CodegenCacheSpec extends SparkSpec {
     info(s"first run compiled $cold classes, second run $warm")
     // at Spark's 100-entry default the second run recompiles about as
     // many classes as the first (248 of 254 seen); with the working set
-    // cached it compiled 2-10 in five trials, so the bound is a tenth
-    assert(warm * 10 < cold,
+    // cached it compiled 0-10 in six trials. The bound is absolute: the
+    // cache is JVM-wide, so an earlier suite may already have compiled
+    // part of the first run, and `cold` is no fixed yardstick
+    assert(warm < 25,
       s"a warm transfer + build compiled $warm classes (cold: $cold)")
   }
 }

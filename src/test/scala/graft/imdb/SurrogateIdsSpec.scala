@@ -112,6 +112,23 @@ class SurrogateIdsSpec extends SparkSpec {
     }
   }
 
+  test("ivfPqSearch releases the cell and residual pins of its index: " +
+    "no new persisted RDD outlives the call") {
+    val centroids = embeddings
+      .filter(col("vec_id") < SimilarityOps.NumCentroids)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
+    val probes = embeddings.filter(col("vec_id") < SimilarityOps.NumProbes)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    inClusterSafe {
+      embeddings.count()
+      val before = pinnedIds()
+      val rows = SimilarityOps.ivfPqSearch(embeddings, centroids, probes,
+        SimilarityOps.NumProbeCells, SimilarityOps.TopK).collect()
+      assert(rows.length == SimilarityOps.NumProbes * SimilarityOps.TopK)
+      assert(pinnedSince(before) == 0, "ivfPqSearch leaked a pin")
+    }
+  }
+
   test("an ivfTrain that throws after seeding releases its seed pin " +
     "(a failed training must not leak it)") {
     import org.apache.spark.sql.Row

@@ -46,7 +46,7 @@ class PlanAuditSpec extends SparkSpec {
     "q_token_budget" -> 1,      // 1-row weight-total scalar
     "q_epoch_expand" -> 1,      // same 1-row scalar inside its plan build
     "q_label_predict" -> 1,     // |labels|-row prototype table (≤ label count)
-    "q_sim_rerank_ivf" -> 2,    // 5 probes (shortlist + rerank)
+    "q_sim_rerank_ivf" -> 1,    // 5 probes (shortlist; the rerank joins them on query_id)
     "q_ivf_recall_curve" -> 2,  // 5 probes + 1-row relevant-count scalar
     "q_drift_2prop" -> 2,       // two 1-row scalars (time-span midpoint, half totals)
     "q_sim_rrf" -> 2,           // bm25's 1-row corpus-stats scalar + 5 probe vectors
